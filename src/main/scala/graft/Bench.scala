@@ -832,7 +832,8 @@ once and flagged NOISY if still dirty. Noisy after requeue: ${noisyQueries.size}
            |Reference anchor: the reference repo publishes no numbers (Benchee
            |harness only, /root/reference/bench/decoder.exs). Single-thread
            |graft parse throughput is ~19-25k pages/sec (~110-140k triples/sec)
-           |on the same fixture mix — see graft.tools.PureParseProbe.
+           |on the same fixture mix — kgbench's traced ledger (rdfxml.busy_s,
+           |extract.*) now measures parse throughput on the paper's path.
            |
            |Query bench (sf dir: $sfDir, local[$cpus]; timed to a noop sink —
            |full computation, no count() pruning).

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import BroadcastGate.broadcastIfSmall
 import org.apache.spark.sql.Column
 
 /** Deduplication family for the documents table. Strategy per variant:
@@ -90,8 +91,9 @@ object Dedup {
     val rows = nHashes / bands
     // Shingle ROWS, not arrays: higher-order array lambdas (transform/
     // aggregate) run INTERPRETED in Spark — the array formulation spent
-    // ~2ms/doc in signature computation alone (measured, LshProbe), and
-    // the subtree recomputed once per consumer. One explode + codegen'd
+    // ~2ms/doc in signature computation alone (measured per operator;
+    // QueryProbe times the LSH queries end to end), and the subtree
+    // recomputed once per consumer. One explode + codegen'd
     // xxhash64 + a map-side-combinable 16-way min groupBy is ~10x
     // cheaper, and no array ever enters a shuffle.
     // eager localCheckpoint: this subtree (scan → explode → distinct)
@@ -287,7 +289,7 @@ object Dedup {
     // verify joins in the md5JaccardVerify r6 shape (b-leg broadcast only)
     candIds
       .join(expl.select(col("doc_id").as("a"), col("s")), Seq("a"))
-      .join(broadcastIfSmall(expl).select(col("doc_id").as("b"), col("s")), Seq("b", "s"))
+      .join(broadcastIfSmall(expl, 2000000L).select(col("doc_id").as("b"), col("s")), Seq("b", "s"))
       .groupBy(col("a"), col("b")).agg(count(lit(1)).as("ic"))
       .join(sizes.select(col("doc_id").as("a"), col("sz").as("sza")), Seq("a"))
       .join(sizes.select(col("doc_id").as("b"), col("sz").as("szb")), Seq("b"))
@@ -373,19 +375,6 @@ object Dedup {
       banded0.join(broadcast(hot), Seq("band", "bucket"), "left_anti")
     }
 
-  /** §3.1 scale-adaptive broadcast: wrap a MATERIALIZED (checkpointed)
-    * frame in a broadcast hint when its row count — one cheap count
-    * over the in-memory checkpoint blocks — says it fits; identity
-    * otherwise, so every consumer degrades to the pre-r6 shuffle-join
-    * plan at cluster scale. Checkpointed frames plan as RDD leaves
-    * with no size statistics, so neither the static planner nor AQE's
-    * SMJ→BHJ rewrite can make this call on its own for the FIRST
-    * exchange of the verify joins (AQE only converts after a shuffle
-    * has already been written).
-    */
-  private def broadcastIfSmall(df: DataFrame, maxRows: Long = 2000000L): DataFrame =
-    if (df.count() <= maxRows) broadcast(df) else df
-
   /** Exact set-Jaccard verify over candidate id pairs: relational
     * intersection counts against the materialized shingle rows, sizes
     * from the same frame — verify-once-per-pair, id-only transport.
@@ -407,7 +396,7 @@ object Dedup {
     val sizes = expl.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
     val inter = candIds
       .join(expl.select(col("doc_id").as("a"), col("s")), Seq("a"))
-      .join(broadcastIfSmall(expl).select(col("doc_id").as("b"), col("s")), Seq("b", "s"))
+      .join(broadcastIfSmall(expl, 2000000L).select(col("doc_id").as("b"), col("s")), Seq("b", "s"))
       .groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("ic"))
     val jaccard = col("ic").cast("double") / (col("sza") + col("szb") - col("ic"))
@@ -513,7 +502,7 @@ object Dedup {
     // second join and the partial count without the big exchange
     val inter = candIds
       .join(expl.select(col("doc_id").as("a"), col("s")), Seq("a"))
-      .join(broadcastIfSmall(expl).select(col("doc_id").as("b"), col("s")), Seq("b", "s"))
+      .join(broadcastIfSmall(expl, 2000000L).select(col("doc_id").as("b"), col("s")), Seq("b", "s"))
       .groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("ic"))
     // exact rational threshold: ic/(sza+szb-ic) >= tNum/tDen
@@ -586,7 +575,7 @@ object Dedup {
       .select(col("doc_id").as("x"), col("s"))
       .localCheckpoint(true)
     val full = ranked.select(col("doc_id").as("y"), col("s"))
-    val candIds = broadcastIfSmall(prefix).join(full, Seq("s"))
+    val candIds = broadcastIfSmall(prefix, 2000000L).join(full, Seq("s"))
       .where(col("x") =!= col("y"))
       .select(least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"))
       .distinct()
@@ -594,7 +583,7 @@ object Dedup {
     // verify joins in the md5JaccardVerify r6 shape (b-leg broadcast only)
     val inter = candIds
       .join(expl.select(col("doc_id").as("a"), col("s")), Seq("a"))
-      .join(broadcastIfSmall(expl).select(col("doc_id").as("b"), col("s")), Seq("b", "s"))
+      .join(broadcastIfSmall(expl, 2000000L).select(col("doc_id").as("b"), col("s")), Seq("b", "s"))
       .groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("ic"))
     inter

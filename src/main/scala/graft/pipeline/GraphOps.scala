@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import BroadcastGate.broadcastIfSmall
 
 /** Graph analytics beyond connected components: PageRank in exact
   * integer arithmetic, so a fixed-iteration run replays value-for-value
@@ -60,21 +61,6 @@ object GraphOps {
           expr("2 * coalesce(n_tri, 0) * 1000000 div (d * (d - 1))"))
           .otherwise(lit(0L)).cast("bigint").as("lcc_ppm"))
   }
-
-  /** Broadcast a MATERIALIZED (checkpointed) frame when its row count
-    * — one cheap count over the in-memory checkpoint blocks — says it
-    * fits comfortably; otherwise return it unchanged. Scale-adaptive
-    * join-strategy choice (opt-guide §3.1: broadcast the side that
-    * fits): a checkpointed frame plans as an RDD leaf with no size
-    * stats, so the planner otherwise picks a shuffle join for a
-    * few-MB edge/state list consumed every iteration — measured one
-    * full Exchange+Sort pair per round on q192's 40k-row edge list.
-    * The cap is rows, not a local[32] constant: at cluster scale a
-    * 100-TB edge list fails the count test and the shuffle join
-    * stands, so behavior degrades to exactly the old plan.
-    */
-  private def broadcastIfSmall(df: DataFrame, maxRows: Long = 2000000L): DataFrame =
-    if (df.count() <= maxRows) broadcast(df) else df
 
   /** Row cap under which iteration-state frames (node-bounded, never
     * growing) are broadcast into their per-round joins. The DECISION
@@ -273,7 +259,7 @@ object GraphOps {
     val edges0 = e.select(col("u").as("src"), col("v").as("dst"))
       .unionByName(e.select(col("v").as("src"), col("u").as("dst")))
       .localCheckpoint(true) // consumed every round
-    val edges = broadcastIfSmall(edges0) // §3.1: one exchange per round
+    val edges = broadcastIfSmall(edges0, 2000000L) // §3.1: one exchange per round
     var dist = seeds.select(col("node").cast("bigint").as("node"), lit(0L).as("dist"))
       .distinct().localCheckpoint(true)
     for (r <- 1 to maxHops) {
@@ -310,7 +296,7 @@ object GraphOps {
     val edges0 = e.select(col("u").as("src"), col("v").as("dst"))
       .unionByName(e.select(col("v").as("src"), col("u").as("dst")))
       .localCheckpoint(true) // consumed every round
-    val edges = broadcastIfSmall(edges0) // §3.1: one Exchange per round, not three
+    val edges = broadcastIfSmall(edges0, 2000000L) // §3.1: one Exchange per round, not three
     var dist = seeds.select(col("node").cast("bigint").as("seed")).distinct()
       .select(col("seed"), col("seed").as("node"), lit(0L).as("dist"))
       .localCheckpoint(true)

@@ -37,65 +37,37 @@ object KgPipeline {
 
   final case class StageResult(name: String, df: DataFrame, resumed: Boolean)
 
-  private def done(path: String): Boolean = Files.exists(Paths.get(path, "_SUCCESS"))
+  /** Where the DAG's tables live, and so how a stage is resumed or
+    * committed: Parquet directories finished by a `_SUCCESS` marker
+    * ([[run]]) or [[SnapTable]] snapshots ([[runVersioned]]).
+    */
+  private trait Store {
+    /** Whether an earlier run committed table `name`, so its stage resumes. */
+    def done(name: String): Boolean
+    /** Write `df` as table `name`: replace it, or add to it when `append`. */
+    def commit(name: String, df: DataFrame, append: Boolean): Unit
+    def read(name: String): DataFrame
+  }
+
+  private final class ParquetStore(spark: SparkSession, outRoot: String) extends Store {
+    def done(name: String): Boolean = Files.exists(Paths.get(outRoot, name, "_SUCCESS"))
+    def commit(name: String, df: DataFrame, append: Boolean): Unit =
+      df.write.mode(if (append) SaveMode.Append else SaveMode.Overwrite).parquet(s"$outRoot/$name")
+    def read(name: String): DataFrame = spark.read.parquet(s"$outRoot/$name")
+  }
+
+  private def stageIn(store: Store, name: String)(compute: => DataFrame): StageResult = {
+    val resumed = store.done(name)
+    if (!resumed) store.commit(name, compute, append = false)
+    StageResult(name, store.read(name), resumed)
+  }
 
   /** Run (or resume) one stage: compute and write unless output exists. */
-  def stage(spark: SparkSession, outRoot: String, name: String)(compute: => DataFrame): StageResult = {
-    val path = s"$outRoot/$name"
-    if (done(path)) StageResult(name, spark.read.parquet(path), resumed = true)
-    else {
-      compute.write.mode(SaveMode.Overwrite).parquet(path)
-      StageResult(name, spark.read.parquet(path), resumed = false)
-    }
-  }
+  def stage(spark: SparkSession, outRoot: String, name: String)(compute: => DataFrame): StageResult =
+    stageIn(new ParquetStore(spark, outRoot), name)(compute)
 
-  def run(spark: SparkSession, pages: Dataset[Page], outRoot: String): Map[String, DataFrame] = {
-    import spark.implicits._
-
-    // ---- stage: extract (triples + lineage from ONE pass) --------------
-    val triples =
-      if (done(s"$outRoot/triples")) spark.read.parquet(s"$outRoot/triples")
-      else {
-        val env = Extract.run(pages).persist(StorageLevel.MEMORY_AND_DISK)
-        env.flatMap(_.triple).write.mode(SaveMode.Overwrite).parquet(s"$outRoot/triples")
-        env.flatMap(_.lineage).write.mode(SaveMode.Append).parquet(s"$outRoot/metrics")
-        env.unpersist()
-        spark.read.parquet(s"$outRoot/triples")
-      }
-
-    // ---- stage: alias dictionary (small, broadcastable) -----------------
-    val aliasDict = stage(spark, outRoot, "alias_dict") {
-      entityAliases(triples)
-    }.df
-
-    // ---- stage: entity linking (broadcast join, no big-side shuffle) ----
-    val links = stage(spark, outRoot, "links") {
-      linkMentions(pages.toDF(), aliasDict)
-    }.df
-
-    // ---- stage: canonicalization (MinHash-LSH blocking + CC) ------------
-    val canonicalMap = stage(spark, outRoot, "canonical_map") {
-      canonicalize(aliasDict)
-    }.df
-
-    // ---- stage: materialize graph tables --------------------------------
-    val edges = stage(spark, outRoot, "edges") {
-      materializeEdges(triples, canonicalMap)
-    }.df
-    val nodes = stage(spark, outRoot, "nodes") {
-      materializeNodes(edges)
-    }.df
-    val adjacency = stage(spark, outRoot, "adjacency") {
-      edges.repartitionByRange(col("subj")).sortWithinPartitions("subj", "pred", "obj")
-    }.df
-
-    Map(
-      "triples" -> triples, "alias_dict" -> aliasDict, "links" -> links,
-      "canonical_map" -> canonicalMap, "edges" -> edges, "nodes" -> nodes,
-      "adjacency" -> adjacency,
-      "metrics" -> spark.read.parquet(s"$outRoot/metrics")
-    )
-  }
+  def run(spark: SparkSession, pages: Dataset[Page], outRoot: String): Map[String, DataFrame] =
+    dag(spark, pages, new ParquetStore(spark, outRoot))
 
   /** Snapshot-backed variant of [[run]] over a [[SnapTable]] warehouse
     * — the north_rule's Iceberg-shaped contract: every stage commits
@@ -108,34 +80,48 @@ object KgPipeline {
     * is a metadata-only HEAD swing).
     */
   def runVersioned(spark: SparkSession, pages: Dataset[Page], warehouse: String,
-                   refresh: Boolean = false): Map[String, DataFrame] = {
-    import spark.implicits._
-    def stageSnap(name: String)(compute: => DataFrame): DataFrame =
-      if (!refresh && SnapTable.exists(warehouse, name)) SnapTable.read(spark, warehouse, name)
-      else { SnapTable.commit(spark, warehouse, name, compute); SnapTable.read(spark, warehouse, name) }
+                   refresh: Boolean = false): Map[String, DataFrame] =
+    dag(spark, pages, new Store {
+      def done(name: String): Boolean = !refresh && SnapTable.exists(warehouse, name)
+      def commit(name: String, df: DataFrame, append: Boolean): Unit =
+        SnapTable.commit(spark, warehouse, name, df, op = if (append) "append" else "overwrite")
+      def read(name: String): DataFrame = SnapTable.read(spark, warehouse, name)
+    })
 
-    // extract: triples (overwrite) + lineage metrics (append) from ONE pass
-    val triples =
-      if (!refresh && SnapTable.exists(warehouse, "triples")) SnapTable.read(spark, warehouse, "triples")
-      else {
-        val env = Extract.run(pages).persist(StorageLevel.MEMORY_AND_DISK)
-        SnapTable.commit(spark, warehouse, "triples", env.flatMap(_.triple).toDF())
-        SnapTable.commit(spark, warehouse, "metrics", env.flatMap(_.lineage).toDF(), op = "append")
-        env.unpersist()
-        SnapTable.read(spark, warehouse, "triples")
-      }
-    val aliasDict = stageSnap("alias_dict")(entityAliases(triples))
-    val links = stageSnap("links")(linkMentions(pages.toDF(), aliasDict))
-    val canonicalMap = stageSnap("canonical_map")(canonicalize(aliasDict))
-    val edges = stageSnap("edges")(materializeEdges(triples, canonicalMap))
-    val nodes = stageSnap("nodes")(materializeNodes(edges))
-    val adjacency = stageSnap("adjacency")(
+  /** The DAG itself, once for both stores. */
+  private def dag(spark: SparkSession, pages: Dataset[Page], store: Store): Map[String, DataFrame] = {
+    import spark.implicits._
+    def stage(name: String)(compute: => DataFrame): DataFrame = stageIn(store, name)(compute).df
+
+    // ---- stage: extract (triples + lineage from ONE pass) --------------
+    if (!store.done("triples")) {
+      val env = Extract.run(pages).persist(StorageLevel.MEMORY_AND_DISK)
+      store.commit("triples", env.flatMap(_.triple).toDF(), append = false)
+      store.commit("metrics", env.flatMap(_.lineage).toDF(), append = true)
+      env.unpersist()
+    }
+    val triples = store.read("triples")
+
+    // ---- stage: alias dictionary (small, broadcastable) -----------------
+    val aliasDict = stage("alias_dict")(entityAliases(triples))
+
+    // ---- stage: entity linking (broadcast join, no big-side shuffle) ----
+    val links = stage("links")(linkMentions(pages.toDF(), aliasDict))
+
+    // ---- stage: canonicalization (MinHash-LSH blocking + CC) ------------
+    val canonicalMap = stage("canonical_map")(canonicalize(aliasDict))
+
+    // ---- stage: materialize graph tables --------------------------------
+    val edges = stage("edges")(materializeEdges(triples, canonicalMap))
+    val nodes = stage("nodes")(materializeNodes(edges))
+    val adjacency = stage("adjacency")(
       edges.repartitionByRange(col("subj")).sortWithinPartitions("subj", "pred", "obj"))
+
     Map(
       "triples" -> triples, "alias_dict" -> aliasDict, "links" -> links,
       "canonical_map" -> canonicalMap, "edges" -> edges, "nodes" -> nodes,
       "adjacency" -> adjacency,
-      "metrics" -> SnapTable.read(spark, warehouse, "metrics"))
+      "metrics" -> store.read("metrics"))
   }
 
   /** Alias dictionary: every IRI entity mentioned as a subject, keyed by

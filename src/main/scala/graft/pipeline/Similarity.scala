@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import BroadcastGate.broadcastIfSmall
 import org.apache.spark.sql.Column
 
 /** Approximate-nearest-neighbor search over an embedding column
@@ -125,20 +126,21 @@ object Similarity {
     * volume), no per-dim rows, no pair groupBy — the interpreted-lambda
     * trap it was originally avoiding doesn't apply to a custom
     * Expression with doGenCode. Shared verify kernel of [[lshCosine]]
-    * and [[embeddingNearDup]].
+    * and [[embeddingNearDup]]. `corpus` must be a scan or a
+    * materialized frame (the broadcast gate counts it).
     */
   private def relationalCosine(pairs: DataFrame, corpus: DataFrame, l: String, r: String): DataFrame = {
     graft.functions.GraftFunctions.register(corpus.sparkSession)
     val packed0 = corpus.select(col("vec_id"),
       transform(col("embedding"), e => round(e.cast("double") * 1000000L).cast("bigint")).as("qv"))
     // §3.1 scale-adaptive: the packed-vector table broadcasts into
-    // both verify legs when the corpus row count (a metadata-cheap
-    // parquet count) says it fits — the candidate pair stream then
-    // flows through two hash joins and the codegen kernel without an
-    // exchange. The cap is conservative because rows carry the packed
-    // array payload; above it both joins fall back to the r5 shuffle
-    // plan. (The same shape as Dedup.md5JaccardVerify's r6 note.)
-    val packed = if (corpus.count() <= 200000L) broadcast(packed0) else packed0
+    // both verify legs when its row count (the corpus scan's, a
+    // metadata-cheap parquet count) says it fits — the candidate pair
+    // stream then flows through two hash joins and the codegen kernel
+    // without an exchange. The cap is conservative because rows carry
+    // the packed array payload; above it both joins fall back to the r5
+    // shuffle plan. (The same shape as Dedup.md5JaccardVerify's r6 note.)
+    val packed = broadcastIfSmall(packed0, 200000L)
     pairs
       .join(packed.select(col("vec_id").as(l), col("qv").as("ql")), Seq(l))
       .join(packed.select(col("vec_id").as(r), col("qv").as("qr")), Seq(r))

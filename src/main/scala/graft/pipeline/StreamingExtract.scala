@@ -9,8 +9,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * `decode_from_stream`, decoder.ex:50-53 — there a lazy enumerable,
   * here an unbounded page table).
   *
-  *   pages (stream) ─flatMap extract→ triples ─watermark+window→
-  *   per-window crawl metrics; triples appended to a parquet sink.
+  *   pages (stream) ─flatMap extract→ triples, appended to a parquet
+  *   sink.
   *
   * The extraction core is the same row-local state machine as batch —
   * streaming only changes the source/sink contract, not the operator.
@@ -31,17 +31,6 @@ object StreamingExtract {
         }
       }
       .toDF("url", "warc_ts", "subj", "pred", "obj", "objKind", "lang", "datatype")
-  }
-
-  /** Event-time windowed crawl metrics with a watermark: triples/pages
-    * per 1-minute window of crawl time — late pages beyond 2 minutes
-    * are dropped, keeping state bounded on an unbounded crawl.
-    */
-  def windowedCounts(pages: DataFrame): DataFrame = {
-    val t = triples(pages)
-    t.withWatermark("warc_ts", "2 minutes")
-      .groupBy(window(col("warc_ts"), "1 minute"), col("objKind"))
-      .agg(count(lit(1)).as("triples"), approx_count_distinct(col("url")).as("pages"))
   }
 
   /** Online exact dedup over an unbounded document stream — custom

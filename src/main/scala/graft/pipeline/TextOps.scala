@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for training-data pipelines, all built from
@@ -111,12 +111,4 @@ object TextOps {
     */
   def fingerprint(text: Column): Column =
     md5(regexp_replace(lower(text), "\\s+", " "))
-
-  def enrich(documents: DataFrame): DataFrame =
-    documents
-      .withColumn("tokens", tokenCount(col("text")))
-      .withColumn("subwords", subwordCount(col("text")))
-      .withColumn("quality", qualityScore(col("text")))
-      .withColumn("lang_id", langId(col("text")))
-      .withColumn("fp", fingerprint(col("text")))
 }

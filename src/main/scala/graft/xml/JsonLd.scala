@@ -138,7 +138,8 @@ object JsonLd {
   }
 
   /** Parse one script block. `block` seeds the fresh-bnode namespace so
-    * several blocks on one page never collide.
+    * several blocks on one page never collide. The statements are a set:
+    * a node described twice yields each of its statements once.
     */
   def parse(json: String, base: Option[String], block: Int = 0): Either[ParseError, Vector[Triple]] =
     try {
@@ -156,13 +157,15 @@ object JsonLd {
       case e: Exception => Left(ParseError("JSON-LD: " + e.getMessage))
     }
 
-  /** All ld+json islands of an HTML page, malformed blocks skipped. */
+  /** All ld+json islands of an HTML page, malformed blocks skipped; a
+    * statement several blocks make appears once.
+    */
   def parseHtml(html: String, base: Option[String]): Vector[Triple] = {
-    val out = Vector.newBuilder[Triple]
+    val out = mutable.LinkedHashSet.empty[Triple]
     scriptBlocks(html).zipWithIndex.foreach { case (b, i) =>
       parse(b, base, i).foreach(out ++= _)
     }
-    out.result()
+    out.toVector
   }
 
   /** A term definition: the expanded IRI plus an optional type
@@ -174,7 +177,7 @@ object JsonLd {
   private object Ctx { val empty: Ctx = Ctx(null, null, Map.empty) }
 
   private final class State(base: String, block: Int) {
-    val triples = mutable.ArrayBuffer.empty[Triple]
+    val triples = mutable.LinkedHashSet.empty[Triple]
     private var bnodeCounter = 0
     private def freshBNode(): BNode = {
       val b = BNode(s"jl${block}_$bnodeCounter"); bnodeCounter += 1; b

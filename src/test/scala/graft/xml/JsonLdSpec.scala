@@ -182,6 +182,20 @@ class JsonLdSpec extends AnyFunSuite {
       Triple(BNode("jl0_1"), Iri(schema + "name"), Lit.plain("x"))))
   }
 
+  test("a node described twice yields each statement once, within a block and across a page's blocks") {
+    val item = """{"@id": "http://e/r", "@type": "Person", "name": "Rae"}"""
+    val s = Iri("http://e/r")
+    val once = Vector(
+      Triple(s, Iri(Vocab.rdfType), Iri(schema + "Person")),
+      Triple(s, Iri(schema + "name"), Lit.plain("Rae")))
+    val block = s"""{"@context": "https://schema.org", "@graph": [$item, $item]}"""
+    assert(JsonLd.parse(block, None).toOption.get == once)
+    val page =
+      s"""<script type="application/ld+json">$block</script>
+         |<script type="application/ld+json">{"@context": "https://schema.org", "@graph": [$item]}</script>""".stripMargin
+    assert(JsonLd.parseHtml(page, None) == once)
+  }
+
   test("canonicalDouble emits XSD canonical forms") {
     assert(JsonLd.canonicalDouble(1.65) == "1.65E0")
     assert(JsonLd.canonicalDouble(1e10) == "1.0E10")
