@@ -23,5 +23,9 @@ object BroadcastGate {
     * array payloads pass a lower one.
     */
   private[pipeline] def broadcastIfSmall(df: DataFrame, maxRows: Long): DataFrame =
-    if (df.count() <= maxRows) broadcast(df) else df
+    broadcastIfSmall(df, df.count(), maxRows)
+
+  /** The same gate on a row count of `df` the caller already took. */
+  private[pipeline] def broadcastIfSmall(df: DataFrame, rows: Long, maxRows: Long): DataFrame =
+    if (rows <= maxRows) broadcast(df) else df
 }

@@ -289,14 +289,41 @@ object GraphOps {
     * Input: (a, b) undirected pairs + a (node) seed frame. Output:
     * (src, ecc, n_reached) per seed — n_reached counts the seed's
     * connected component, ecc its true eccentricity within it.
+    *
+    * Precondition for the three-hop rounds: max degree at most
+    * [[EccentricityMultiHopMaxDegree]]. A round streams up to
+    * frontier·deg³ rows, so a graph with a larger max degree expands
+    * one hop per round instead. The eccentricities are the same either
+    * way. The max degree comes from the aggregate that also gives the
+    * broadcast gate its row count.
     */
-  def eccentricity(pairs: DataFrame, seeds: DataFrame, maxHops: Int = 30): DataFrame = {
+  def eccentricity(pairs: DataFrame, seeds: DataFrame, maxHops: Int = 30): DataFrame =
+    eccentricityUnderHubCap(pairs, seeds, maxHops, EccentricityMultiHopMaxDegree)
+
+  /** Max degree up to which [[eccentricity]] expands three BFS hops per
+    * round: at most 32³ = 32,768 streamed rows per frontier node.
+    */
+  private[pipeline] val EccentricityMultiHopMaxDegree = 32L
+
+  /** [[eccentricity]] with the multi-hop degree bound as a parameter
+    * (specs force the one-hop fallback with it).
+    */
+  private[pipeline] def eccentricityUnderHubCap(pairs: DataFrame, seeds: DataFrame,
+      maxHops: Int, multiHopMaxDegree: Long): DataFrame = {
     require(maxHops >= 1 && maxHops <= 32, "maxHops in [1,32]")
     val e = canonEdges(pairs)
     val edges0 = e.select(col("u").as("src"), col("v").as("dst"))
       .unionByName(e.select(col("v").as("src"), col("u").as("dst")))
       .localCheckpoint(true) // consumed every round
-    val edges = broadcastIfSmall(edges0, 2000000L) // §3.1: one Exchange per round, not three
+    // one aggregate serves both gates: edges0 is a distinct pair set,
+    // so a node's row count is its degree and the degrees sum to the
+    // row count. coalesce(1) spares the global aggregate its own
+    // exchange, so this takes the two Spark jobs a count() would.
+    val degrees = edges0.groupBy(col("src")).agg(count(lit(1)).as("d")).coalesce(1)
+      .agg(coalesce(sum(col("d")), lit(0L)), coalesce(max(col("d")), lit(0L))).head()
+    val (rows, maxDegree) = (degrees.getLong(0), degrees.getLong(1))
+    val edges = broadcastIfSmall(edges0, rows, 2000000L) // §3.1: one Exchange per round, not three
+    val hopsPerRound = if (maxDegree <= multiHopMaxDegree) 3 else 1
     var dist = seeds.select(col("node").cast("bigint").as("seed")).distinct()
       .select(col("seed"), col("seed").as("node"), lit(0L).as("dist"))
       .localCheckpoint(true)
@@ -314,10 +341,10 @@ object GraphOps {
       // so the merge is complete through level r+hops and only that
       // level expands next. The hop cap bounds in-stage fanout at
       // frontier·deg³ rows STREAMED through the partial aggregate
-      // (never materialized) — fine off a hub-capped pair graph; a
+      // (never materialized) — hence the max-degree gate above; a
       // deeper unroll would trade that bound for little (the rounds
       // are already ≤ ⌈maxHops/3⌉).
-      val hops = math.min(3, maxHops - r)
+      val hops = math.min(hopsPerRound, maxHops - r)
       val frontier = dist.where(col("dist") === lit(r).cast("bigint"))
       var hopFrames = Vector(frontier.join(edges, col("node") === col("src"))
         .select(col("seed"), col("dst").as("node"), lit((r + 1).toLong).as("dist")))

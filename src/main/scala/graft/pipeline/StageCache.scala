@@ -40,7 +40,10 @@ object StageCache {
   // fixture, the cc-delta label graph, ...) and FIFO-evicted q26's
   // entry before q201 re-asked for it (measured: q201 0.5s on a hit,
   // 1.7s on the forced rebuild). Entries are checkpoint-block-backed
-  // label/pair tables, small at any tested SF; 8 keeps every
+  // label/pair tables, or — for connectedComponents over at most
+  // KgPipeline.LocalComponentsMaxEdges edges — label tables held on the
+  // driver as local relations (at most 2 × the cap rows each, so the
+  // bucket's driver memory is bounded by 8 × that). 8 keeps every
   // same-session consumer warm with bounded memory.
   private val maxPerKey = 8
 
