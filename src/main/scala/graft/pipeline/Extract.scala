@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.rdf.{BNode, Iri, Lit, RdfGraph, Triple, Vocab}
+import graft.rdf.{BNode, Iri, Lit, Triple, Vocab}
 import graft.xml.{JsonLd, Microdata, RdfXmlParser, RdfaLite}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Dataset, SparkSession}
@@ -155,7 +155,11 @@ object Extract {
     sb.toString
   }
 
-  private def termToColumns(t: graft.rdf.Term, scope: String): (String, String, String, String) = t match {
+  /** The term → row codec, shared by every triple source: a term's
+    * (value, kind, lang, datatype) columns, bnode labels scoped by
+    * `scope`, xsd:string implied by a null datatype.
+    */
+  private[graft] def termToColumns(t: graft.rdf.Term, scope: String): (String, String, String, String) = t match {
     case Iri(v) => (v, "iri", null, null)
     case BNode(l) => (s"_:$l@$scope", "bnode", null, null)
     case Lit(lex, dt, lang) =>
@@ -182,13 +186,15 @@ object Extract {
     if (depth == 0) Some((start, i)) else None
   }
 
-  private def toRows(triples: Iterable[Triple], url: String, scope: String): Iterator[TripleRow] =
-    triples.iterator.map { case Triple(s, p, o) =>
-      val (sv, _, _, _) = termToColumns(s, scope)
-      val (pv, _, _, _) = termToColumns(p, scope)
-      val (ov, ok, lang, dt) = termToColumns(o, scope)
-      TripleRow(url, sv, pv, ov, ok, lang, dt)
-    }
+  private[graft] def toRow(t: Triple, url: String, scope: String): TripleRow = {
+    val (sv, _, _, _) = termToColumns(t.s, scope)
+    val (pv, _, _, _) = termToColumns(t.p, scope)
+    val (ov, ok, lang, dt) = termToColumns(t.o, scope)
+    TripleRow(url, sv, pv, ov, ok, lang, dt)
+  }
+
+  private[graft] def toRows(triples: Iterable[Triple], url: String, scope: String): Iterator[TripleRow] =
+    triples.iterator.map(toRow(_, url, scope))
 
   def triplesOf(url: String, html: Array[Byte]): Either[String, Vector[TripleRow]] = {
     val scope = urlScope(url)

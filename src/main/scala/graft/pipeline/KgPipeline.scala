@@ -136,7 +136,6 @@ object KgPipeline {
     */
   def entityAliases(triples: DataFrame): DataFrame =
     triples
-      .where(col("objKind") === "iri" || !col("subj").startsWith("_:"))
       .select(col("subj").as("entity"))
       .where(!col("entity").startsWith("_:"))
       .distinct()

@@ -49,7 +49,7 @@ object StageCache {
 
   def clear(): Unit = synchronized { entries.clear(); session = null }
 
-  /** Generation watermark for [[countSince]]/[[evictSince]] — the
+  /** Generation watermark for [[evictSince]] — the
     * bench's honesty hook: a RETRIED cache-building query must not hit
     * the entries its rejected attempt built (it would publish a
     * consumer-grade time that hides the build cost), so the bench
@@ -57,9 +57,6 @@ object StageCache {
     * before re-running.
     */
   def mark(): Long = synchronized { gen }
-
-  /** How many entries were added after the watermark. */
-  def countSince(m: Long): Int = synchronized { entries.valuesIterator.map(_.count(_.gen > m)).sum }
 
   /** Drop entries added after the watermark (memoization only — any
     * already-handed-out frames stay valid; their checkpoint blocks are

@@ -1,7 +1,7 @@
 package graft.sources
 
-import graft.pipeline.{QuadRow, TripleRow}
-import graft.rdf.{BNode, Iri, Lit, NTriples, Term, Vocab}
+import graft.pipeline.{Extract, QuadRow, TripleRow}
+import graft.rdf.NTriples
 import graft.xml.RdfXmlParser
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -28,15 +28,8 @@ object RdfSources {
       .select(col("path"), col("content"))
       .as[(String, Array[Byte])]
       .flatMap { case (path, bytes) =>
-        RdfXmlParser.parseBytes(bytes, Some(fileBase(path)), bnodePrefix) match {
-          case Right(g) =>
-            val scope = graft.pipeline.Extract.urlScope(path)
-            g.triples.iterator.map { t =>
-              val (s, _, _, _) = termCols(t.s, scope)
-              val (p, _, _, _) = termCols(t.p, scope)
-              val (o, kind, lang, dt) = termCols(t.o, scope)
-              TripleRow(path, s, p, o, kind, lang, dt)
-            }
+        RdfXmlParser.parseBytesRaw(bytes, 0, bytes.length, Some(fileBase(path)), bnodePrefix) match {
+          case Right(ts) => Extract.toRows(ts, path, Extract.urlScope(path))
           case Left(_) => Iterator.empty // malformed file: contributes nothing
         }
       }
@@ -44,13 +37,6 @@ object RdfSources {
 
   private def fileBase(path: String): String =
     if (graft.rdf.Iris.isAbsolute(path)) path else "file://" + path
-
-  private def termCols(t: Term, scope: String): (String, String, String, String) = t match {
-    case Iri(v) => (v, "iri", null, null)
-    case BNode(l) => (s"_:$l@$scope", "bnode", null, null)
-    case Lit(lex, dt, lang) =>
-      (lex, "literal", if (lang.isEmpty) null else lang, if (dt == Vocab.xsdString && lang.isEmpty) null else dt)
-  }
 
   /** Parse an N-Triples file (or glob) into triple rows. The per-row
     * `url` is the actual source file (input_file_name), and blank nodes
@@ -74,13 +60,9 @@ object RdfSources {
           else scala.util.Try {
             if (file != lastFile) {
               lastFile = file
-              lastScope = graft.pipeline.Extract.urlScope(file)
+              lastScope = Extract.urlScope(file)
             }
-            val t = NTriples.parse(line).head
-            val (s, _, _, _) = termCols(t.s, lastScope)
-            val (p, _, _, _) = termCols(t.p, lastScope)
-            val (o, kind, lang, dt) = termCols(t.o, lastScope)
-            TripleRow(file, s, p, o, kind, lang, dt)
+            Extract.toRow(NTriples.parse(line).head, file, lastScope)
           }.toOption.iterator
         }
       }
@@ -196,14 +178,12 @@ object RdfSources {
           else scala.util.Try {
             if (file != lastFile) {
               lastFile = file
-              lastScope = graft.pipeline.Extract.urlScope(file)
+              lastScope = Extract.urlScope(file)
             }
             val (t, g) = NTriples.parseQuadLine(line)
-            val (s, _, _, _) = termCols(t.s, lastScope)
-            val (p, _, _, _) = termCols(t.p, lastScope)
-            val (o, kind, lang, dt) = termCols(t.o, lastScope)
-            val gl = g.map(gt => termCols(gt, lastScope)._1).orNull
-            QuadRow(file, s, p, o, kind, lang, dt, gl)
+            val r = Extract.toRow(t, file, lastScope)
+            val gl = g.map(gt => Extract.termToColumns(gt, lastScope)._1).orNull
+            QuadRow(file, r.subj, r.pred, r.obj, r.objKind, r.lang, r.datatype, gl)
           }.toOption.iterator
         }
       }

@@ -10,9 +10,8 @@ import scala.collection.mutable
   * KG-construction surface beside RDF/XML and RDFa-Lite. Microdata is
   * the most common embedded-data syntax in real crawl HTML after
   * JSON-LD, and real pages are mostly malformed, so the extractor
-  * always runs over [[RdfaLite.tokenize]], the same lenient scanner
-  * that backs the RDFa fallback path (well-formed input tokenizes
-  * identically; one code path, no SAX/lenient divergence to test).
+  * always runs over [[RdfaLite.tokenize]], the lenient scanner every
+  * RDFa island takes too.
   *
   * Supported subset (documented scope, deterministic):
   *   - `itemscope` — creates an item; subject = resolved `itemid` when
@@ -103,12 +102,7 @@ object Microdata {
     override def startElement(uri: String, localName: String, qName: String, attrs: Attributes): Unit = {
       val parent = if (stack.isEmpty) new Frame(null, null, null) else stack.last
       def attr(n: String): String = attrs.getValue(n)
-      val elemName: String = {
-        val n = if (localName != null && localName.nonEmpty) localName
-                else if (qName != null) qName else ""
-        val ci = n.indexOf(':')
-        (if (ci >= 0) n.substring(ci + 1) else n).toLowerCase
-      }
+      val elemName = localName.substring(localName.indexOf(':') + 1)
       val lang = {
         val l = if (attr("xml:lang") != null) attr("xml:lang") else attr("lang")
         if (l != null) l else parent.lang

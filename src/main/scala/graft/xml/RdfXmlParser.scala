@@ -3,7 +3,6 @@ package graft.xml
 import graft.rdf._
 import graft.rdf.Iris.ParseError
 
-import javax.xml.parsers.SAXParserFactory
 import org.xml.sax.{Attributes, InputSource, SAXException}
 import org.xml.sax.helpers.DefaultHandler
 import java.io.{ByteArrayInputStream, StringReader}
@@ -54,10 +53,6 @@ object RdfXmlParser {
   def parseBytes(xml: Array[Byte], base: Option[String] = None, bnodePrefix: String = "b"): Either[ParseError, RdfGraph] =
     run(new InputSource(new ByteArrayInputStream(xml)), base, bnodePrefix)
 
-  /** Zero-copy slice variant — parse an RDF/XML island in place. */
-  def parseBytes(xml: Array[Byte], offset: Int, length: Int, base: Option[String]): Either[ParseError, RdfGraph] =
-    run(new InputSource(new ByteArrayInputStream(xml, offset, length)), base, "b")
-
   /** Streaming decode from an InputStream — the document is consumed
     * incrementally by the SAX parser, never pre-buffered, so a
     * larger-than-heap document (or a socket feed) decodes in bounded
@@ -93,42 +88,32 @@ object RdfXmlParser {
         }
     }, base, bnodePrefix)
 
-  /** Extraction fast path: triples as the parser's internal (deduped,
-    * insertion-ordered) collection, skipping the RdfGraph Set copy —
-    * one less full-materialization per document on the 100 TB path.
+  /** Extraction fast path: an RDF/XML island parsed in place, its
+    * triples as the parser's internal (deduped, insertion-ordered)
+    * collection, skipping the RdfGraph Set copy — one less
+    * full-materialization per document on the 100 TB path.
     */
-  def parseBytesRaw(xml: Array[Byte], offset: Int, length: Int, base: Option[String]): Either[ParseError, Iterable[Triple]] =
-    try {
-      val parser = SaxPool.parser()
-      val handler = new Handler(base.map(Iris.normalizeBase).orNull, "b")
-      parser.parse(new InputSource(new ByteArrayInputStream(xml, offset, length)), handler)
-      Right(handler.triples)
-    } catch {
-      case e: ParseError => SaxPool.invalidate(); Left(e)
-      case e: SAXException =>
-        SaxPool.invalidate()
-        e.getCause match {
-          case pe: ParseError => Left(pe)
-          case _ => Left(ParseError(s"XML parse error: ${e.getMessage}"))
-        }
-      case e: Exception =>
-        SaxPool.invalidate()
-        Left(ParseError(s"parse failure: ${e.getClass.getSimpleName}: ${e.getMessage}"))
-    }
+  def parseBytesRaw(xml: Array[Byte], offset: Int, length: Int, base: Option[String],
+                    bnodePrefix: String = "b"): Either[ParseError, Iterable[Triple]] =
+    decode(new InputSource(new ByteArrayInputStream(xml, offset, length)), base, bnodePrefix).map(_.triples)
 
   private def run(src: InputSource, base: Option[String], bnodePrefix: String): Either[ParseError, RdfGraph] =
+    decode(src, base, bnodePrefix).map(h => RdfGraph(h.triples.toSet, Option(h.graphBase), h.graphPrefixes))
+
+  /** The one SAX decode: thread-local reused parser (SaxPool) — no
+    * factory lookup and no Xerces reset() per document, both measured
+    * multi-x scaling killers; a parse that threw invalidates the
+    * thread's instance.
+    */
+  private def decode(src: InputSource, base: Option[String], bnodePrefix: String): Either[ParseError, Handler] =
     try {
-      // thread-local reused parser (SaxPool): no factory lookup and no
-      // Xerces reset() per document — both measured multi-x scaling
-      // killers; a parse that threw invalidates the thread's instance
-      val parser = SaxPool.parser()
       val handler = new Handler(base.map(Iris.normalizeBase).orNull, bnodePrefix)
-      parser.parse(src, handler)
-      Right(RdfGraph(handler.triples.toSet, Option(handler.graphBase), handler.graphPrefixes))
+      SaxPool.parser().parse(src, handler)
+      Right(handler)
     } catch {
       case e: ParseError => SaxPool.invalidate(); Left(e)
       case e: SAXException =>
-        SaxPool.invalidate() // aborted parse: discard the thread's parser
+        SaxPool.invalidate()
         e.getCause match {
           case pe: ParseError => Left(pe) // our errors thrown inside SAX callbacks
           case _ => Left(ParseError(s"XML parse error: ${e.getMessage}"))

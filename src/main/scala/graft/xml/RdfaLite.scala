@@ -2,9 +2,8 @@ package graft.xml
 
 import graft.rdf._
 import graft.rdf.Iris.ParseError
-import org.xml.sax.{Attributes, InputSource}
+import org.xml.sax.Attributes
 import org.xml.sax.helpers.DefaultHandler
-import java.io.ByteArrayInputStream
 import scala.collection.mutable
 
 /** Minimal RDFa-Lite extractor for XHTML-ish islands (the "RDFa-like
@@ -60,39 +59,30 @@ import scala.collection.mutable
   *     established the subject ends (the RDFa Core list-mapping rule)
   *   - `lang`/`xml:lang` — literal language, inherited
   *
-  * Well-formed islands go through the same hardened SAX stack as the
-  * RDF/XML decoder (fast, and behavior-identical to prior rounds).
+  * Every island takes one path: the lenient HTML tokenizer
+  * ([[tokenize]], shared with [[Microdata]]) driving [[RdfaHandler]].
   * Real Common-Crawl HTML is mostly MALFORMED — unclosed tags, bare
-  * ampersands, unquoted attributes — so when the SAX parse fails the
-  * island is re-tokenized by a lenient scanner ([[parseLenient]]) that
-  * drives the SAME event handler: explicit close tags pop to their
-  * nearest matching open (orphans ignored), void/self-closing elements
-  * auto-close, everything still open closes at island end, entities
-  * decode leniently (unknown/bare `&` passes through). Blank nodes are
-  * generated per document with the same deterministic counter contract
-  * in both paths.
+  * ampersands, unquoted attributes — so the scan follows HTML rather
+  * than XML rules: explicit close tags pop to their nearest matching
+  * open (orphans ignored), void/self-closing elements auto-close,
+  * everything still open closes at island end, entities decode
+  * leniently (unknown/bare `&` passes through), attribute names are
+  * case-insensitive, script/style content is not markup. An island's
+  * triples therefore never depend on whether some unrelated element
+  * in it is well-formed. Blank nodes are generated per document with
+  * a deterministic counter.
   */
 object RdfaLite {
 
   def parseBytes(xml: Array[Byte], offset: Int, length: Int, base: Option[String]): Either[ParseError, Vector[Triple]] =
-    try {
-      val handler = new RdfaHandler(base.map(Iris.normalizeBase).orNull)
-      SaxPool.parser().parse(new InputSource(new ByteArrayInputStream(xml, offset, length)), handler)
-      Right(handler.triples.toVector)
-    } catch {
-      case e: ParseError => SaxPool.invalidate(); Left(e)
-      case _: Exception =>
-        SaxPool.invalidate()
-        // malformed markup: fall back to the lenient tokenizer (a fresh
-        // handler — the failed SAX pass may have emitted partial state)
-        try Right(parseLenient(new String(xml, offset, length, "UTF-8"), base))
-        catch { case e2: Exception => Left(ParseError(s"RDFa parse error: ${e2.getMessage}")) }
-    }
+    parse(new String(xml, offset, length, "UTF-8"), base)
 
-  def parse(xml: String, base: Option[String]): Either[ParseError, Vector[Triple]] = {
-    val b = xml.getBytes("UTF-8")
-    parseBytes(b, 0, b.length, base)
-  }
+  def parse(html: String, base: Option[String]): Either[ParseError, Vector[Triple]] =
+    try Right(parseLenient(html, base))
+    catch {
+      case e: ParseError => Left(e)
+      case e: Exception => Left(ParseError(s"RDFa parse error: ${e.getMessage}"))
+    }
 
   private val voidElements = Set(
     "area", "base", "br", "col", "embed", "hr", "img", "input",
@@ -142,9 +132,9 @@ object RdfaLite {
     sb.toString
   }
 
-  /** Malformed-markup tolerant parse: a forward tag scan feeding the
-    * same [[RdfaHandler]] as the SAX path. Never throws on bad nesting;
-    * deterministic for any input bytes.
+  /** Tokenize + [[RdfaHandler]]; never throws on bad nesting,
+    * deterministic for any input. Throws [[ParseError]] on an
+    * unresolvable IRI; [[parse]] turns that into a `Left`.
     */
   def parseLenient(html: String, base: Option[String]): Vector[Triple] = {
     val handler = new RdfaHandler(base.map(Iris.normalizeBase).orNull)
@@ -159,9 +149,11 @@ object RdfaLite {
     * raw-text elements (script/style) skip their content, lenient
     * entity decode, everything still open closes at input end.
     * Attribute names reach the handler lowercased; boolean attributes
-    * carry the value "".
+    * carry the value "". CRLF and a lone CR become LF first (HTML's
+    * input-stream preprocessing).
     */
-  private[xml] def tokenize(html: String, handler: DefaultHandler): Unit = {
+  private[xml] def tokenize(input: String, handler: DefaultHandler): Unit = {
+    val html = if (input.indexOf('\r') < 0) input else input.replace("\r\n", "\n").replace('\r', '\n')
     val open = mutable.ArrayBuffer.empty[String]
     val text = new StringBuilder
     val n = html.length
@@ -450,15 +442,9 @@ object RdfaLite {
     override def startElement(uri: String, localName: String, qName: String, attrs: Attributes): Unit = {
       val parent = if (stack.isEmpty) new Scope(null, null, Map.empty, null) else stack.last
       def attr(n: String): String = attrs.getValue(n)
-      // element name for the HTML-specific literal rules (time/data):
-      // the strict SAX parser is not namespace-aware, so localName is
-      // empty there — fall back to qName, prefix-stripped
-      val elemName: String = {
-        val n = if (localName != null && localName.nonEmpty) localName
-                else if (qName != null) qName else ""
-        val ci = n.indexOf(':')
-        if (ci >= 0) n.substring(ci + 1) else n
-      }
+      // element name for the HTML-specific literal rules (time/data),
+      // prefix-stripped
+      val elemName = localName.substring(localName.indexOf(':') + 1)
 
       var prefixes = parent.prefixes
       val prefixDecl = attr("prefix")

@@ -2,7 +2,7 @@ package graft.xml
 
 import javax.xml.parsers.{SAXParser, SAXParserFactory}
 
-/** Thread-local SAX parser pool shared by all XML-consuming operators.
+/** Thread-local SAX parser pool of the RDF/XML decoder ([[RdfXmlParser]]).
   *
   * SAXParserFactory.newInstance performs a synchronized service-loader
   * lookup and Xerces' parser.reset() re-allocates its feature state —

@@ -107,4 +107,25 @@ class RdfSourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
     val t = NTriples.parse(line).head
     assert(t.o == graft.rdf.Lit.plain("a\"b\\c\nd"))
   }
+
+  test("rdfXmlFiles scopes bnodes per file under the chosen prefix; a malformed file contributes nothing") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_rdfsrc")
+    def doc(body: String) =
+      s"""<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#" xmlns:ex="http://ex/">$body</rdf:RDF>"""
+    java.nio.file.Files.writeString(dir.resolve("a.rdf"),
+      doc("""<rdf:Description rdf:about="#a"><ex:p><rdf:Description><ex:q>x</ex:q></rdf:Description></ex:p></rdf:Description>"""))
+    java.nio.file.Files.writeString(dir.resolve("b.rdf"),
+      doc("""<rdf:Description><ex:q xml:lang="en">y</ex:q></rdf:Description>"""))
+    java.nio.file.Files.writeString(dir.resolve("c.rdf"), doc("<rdf:Description>"))
+    val rows = RdfSources.rdfXmlFiles(spark, dir.toString + "/*.rdf", bnodePrefix = "k").collect()
+    val byFile = rows.groupBy(_.url.replaceAll(".*/", ""))
+    assert(byFile.keySet == Set("a.rdf", "b.rdf"), rows.mkString("\n"))
+    assert(byFile("a.rdf").length == 2 && byFile("b.rdf").length == 1)
+    // relative rdf:about resolves against the file path
+    assert(byFile("a.rdf").exists(r => r.subj.startsWith("file:") && r.subj.endsWith("a.rdf#a")))
+    // equal per-document labels stay apart across files
+    val bnodes = rows.flatMap(r => Seq(r.subj, r.obj)).filter(_.startsWith("_:k0@"))
+    assert(bnodes.toSet.size == 2, rows.mkString("\n"))
+    assert(byFile("b.rdf").head.lang == "en")
+  }
 }

@@ -136,4 +136,11 @@ class MicrodataSpec extends AnyFunSuite {
     // itemid unresolvable without base → bnode subject; empty href drops
     assert(ts == Set(Triple(BNode("md0"), Iri(Vocab.rdfType), Iri(schema + "Thing"))))
   }
+
+  test("CRLF and a lone CR in text content become LF") {
+    val html = "<div itemscope itemtype=\"http://schema.org/Thing\" itemid=\"http://e/t\">" +
+      "<p itemprop=\"description\">a\r\nb\rc</p></div>"
+    val ts = Microdata.parse(html, None).toSet
+    assert(ts.contains(Triple(Iri("http://e/t"), Iri(schema + "description"), Lit.plain("a\nb\nc"))), ts.toString)
+  }
 }

@@ -487,4 +487,47 @@ class RdfaLiteSpec extends AnyFunSuite {
     assert(rows.exists(_.subj == p.url + "#thing"))
     assert(rows.exists(_.pred == "http://example.org/value")) // from the RDF/XML island
   }
+
+  test("an island's triples do not depend on unrelated malformed markup") {
+    // each island is well-formed; the twin adds an unclosed <br> right
+    // inside the root div, which an XML parser would reject
+    val islands = Seq(
+      """<div vocab="http://schema.org/" about="http://ex/s"><p PROPERTY="name">Ada</p></div>""",
+      "<div vocab=\"http://schema.org/\" about=\"http://ex/s\">\r\n<p property=\"description\">a\r\nb\rc</p>\r\n</div>",
+      """<div vocab="http://schema.org/" about="http://ex/s" prefix="dc: http://purl.org/dc/terms/">
+        |<a rel="license" property="name" href="http://l/1">The License</a>
+        |<span property="dc:creator" inlist="">Alice</span>
+        |<span property="dc:creator" inlist="">Bob</span>
+        |<div rel="dc:hasPart"><div about="http://ex/part"><span property="name">P</span></div></div>
+        |</div>""".stripMargin)
+    islands.foreach { island =>
+      val twin = island.patch(island.indexOf('>') + 1, "<br>", 0)
+      val a = RdfaLite.parse(island, Some("http://ex/page")).toOption.get
+      val b = RdfaLite.parse(twin, Some("http://ex/page")).toOption.get
+      assert(a.nonEmpty && a == b, s"$island\n$a\n$b")
+    }
+  }
+
+  test("CRLF and a lone CR in element text become LF") {
+    val island = "<div vocab=\"http://schema.org/\" about=\"http://ex/s\">" +
+      "<p property=\"description\">a\r\nb\rc</p></div>"
+    val ts = RdfaLite.parse(island, Some("http://ex/page")).toOption.get
+    assert(ts == Vector(Triple(Iri("http://ex/s"), Iri(schema + "description"), Lit.plain("a\nb\nc"))))
+  }
+
+  test("well-formed islands follow HTML tokenization rules") {
+    def one(body: String): Set[Triple] = RdfaLite.parse(
+      s"""<div vocab="http://schema.org/" about="http://ex/s">$body</div>""", Some("http://ex/page")).toOption.get.toSet
+    val s = Iri("http://ex/s")
+    val name = Iri(schema + "name")
+    // attribute names are case-insensitive
+    assert(one("""<p PROPERTY="name">Ada</p>""") == Set(Triple(s, name, Lit.plain("Ada"))))
+    // script/style content is raw text, not markup
+    assert(one("""<script><span property="name">Ada</span></script>""").isEmpty)
+    assert(one("""<style><span property="name">Ada</span></style>""").isEmpty)
+    // attribute values keep newlines and tabs (no XML value normalization)
+    assert(one("<meta property=\"name\" content=\"a\n\tb\"/>") == Set(Triple(s, name, Lit.plain("a\n\tb"))))
+    // CDATA is a bogus comment up to the first '>'
+    assert(one("""<span property="name"><![CDATA[Ada]]></span>""") == Set(Triple(s, name, Lit.plain(""))))
+  }
 }
