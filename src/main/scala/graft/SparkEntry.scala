@@ -3204,9 +3204,15 @@ object SparkEntry {
         shard, pages.iterator.map(p => (p.url, p.warc_ts, p.html)))
       Extract.run(graft.sources.WarcSource.pages(s, shard)).flatMap(_.triple).toDF()
     }),
-    "x_rdfxml_file_source" -> ((s, _) =>
-      graft.sources.RdfSources.rdfXmlFiles(
-        s, "/root/reference/test/data/w3c-rdf-1.1-xml-test-suite/xmlbase/*.rdf").toDF()),
+    "x_rdfxml_file_source" -> ((s, _) => {
+      // the fixture corpus may sit inside the application jar, where the
+      // binaryFile source cannot read it: copy xmlbase/ out first
+      val dir = java.nio.file.Files.createTempDirectory("graft_rdfxml_q")
+      SyntheticPages.fixtureFiles().collect { case (rel, bytes) if rel.startsWith("xmlbase/") =>
+        java.nio.file.Files.write(dir.resolve(rel.stripPrefix("xmlbase/")), bytes)
+      }
+      graft.sources.RdfSources.rdfXmlFiles(s, s"$dir/*.rdf").toDF()
+    }),
     "x_ntriples_sink" -> ((s, _) => {
       import s.implicits._
       val triples = Extract.run(SyntheticPages.pages(s, copies = 1, numPartitions = 4)).flatMap(_.triple).toDF()

@@ -1,39 +1,51 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{FileSystemAlreadyExistsException, FileSystems, Files, Path, Paths}
 import java.sql.Timestamp
 import scala.jdk.CollectionConverters._
 
 /** Deterministic synthetic Common-Crawl-style page table (FIXTURES.md §1).
   *
-  * Every page embeds one reference RDF/XML fixture document — either
-  * verbatim as the whole body (application/rdf+xml case) or wrapped as
-  * an island inside minimal HTML boilerplate. `url` identifies fixture
-  * and copy; `warc_ts` is a fixed epoch + row index; `text` is the
-  * page's canonical extracted text, which [[Extract.extractText]] must
-  * reproduce byte-identically. No wall clock, no randomness: content is
-  * a pure function of (fixture bytes, copy index).
+  * Every page embeds one document of the hand-written RDF/XML fixture
+  * corpus that ships on the classpath under `graft/fixtures/`
+  * (FIXTURES.md §3) — either verbatim as the whole body
+  * (application/rdf+xml case) or wrapped as an island inside minimal
+  * HTML boilerplate. `url` identifies fixture and copy; `warc_ts` is a
+  * fixed epoch + row index; `text` is the page's canonical extracted
+  * text, which [[Extract.extractText]] must reproduce byte-identically.
+  * No wall clock, no randomness, no external data: content is a pure
+  * function of (fixture bytes, copy index), the same on every machine.
   */
 object SyntheticPages {
 
-  val fixtureRoot: Path = Paths.get("/root/reference/test/data/w3c-rdf-1.1-xml-test-suite")
-  val benchDoc: Path = Paths.get("/root/reference/bench/data/org.rdf")
+  /** Root of the fixture corpus on the classpath: a directory when the
+    * classes are unpacked, a directory inside the jar when packaged.
+    */
+  lazy val fixtureRoot: Path = {
+    val url = getClass.getResource("/graft/fixtures")
+    require(url != null, "fixture corpus graft/fixtures is not on the classpath")
+    val uri = url.toURI
+    if (uri.getScheme == "jar")
+      try FileSystems.newFileSystem(uri, java.util.Collections.emptyMap[String, Any]())
+      catch { case _: FileSystemAlreadyExistsException => }
+    Paths.get(uri)
+  }
   private val epochMs = 1704067200000L // 2024-01-01T00:00:00Z, fixed
 
   private val langs = Array("en", "de", "fr", "es", "zh")
 
-  /** The positive .rdf fixtures (negative `error*.rdf` inputs are included
-    * too — the pipeline must count them as parse errors, not die).
+  /** Every `.rdf` document of the corpus as (path relative to the
+    * corpus root, bytes), sorted by path. Negative `error*.rdf` inputs
+    * are included — the pipeline must count them as parse errors, not die.
     */
-  def fixtureFiles(): Seq[(String, Array[Byte])] = {
-    val files = Files.walk(fixtureRoot).iterator().asScala
+  def fixtureFiles(): Seq[(String, Array[Byte])] =
+    Files.walk(fixtureRoot).iterator().asScala
       .filter(p => p.toString.endsWith(".rdf"))
+      .map(p => (fixtureRoot.relativize(p).toString, p))
       .toSeq
-      .sortBy(_.toString)
-    files.map(p => (fixtureRoot.relativize(p).toString, Files.readAllBytes(p))) :+
-      ("bench/org.rdf", Files.readAllBytes(benchDoc))
-  }
+      .sortBy(_._1)
+      .map { case (rel, p) => (rel, Files.readAllBytes(p)) }
 
   /** Deterministic pseudo-text for a page, derived from its URL only. */
   def pageText(url: String): String = {

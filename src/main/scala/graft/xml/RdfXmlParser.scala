@@ -255,7 +255,10 @@ object RdfXmlParser {
         val an = attrs.getQName(i)
         val av = attrs.getValue(i)
         if (an == "xml:lang") lang = av
-        else if (an == "xml:base") base = Iris.normalizeBase(av)
+        else if (an == "xml:base")
+          // XML Base: a relative xml:base resolves against the base in scope
+          base = Iris.normalizeBase(
+            if (parentBase == null || Iris.isAbsolute(av)) av else Iris.resolve(av, parentBase))
         else if (an.startsWith("xmlns:")) prefixes = prefixes.updated(an.substring(6), av)
         else if (an == "xmlns") prefixes = prefixes.updated("", av)
         else ordinary += ((an, av))

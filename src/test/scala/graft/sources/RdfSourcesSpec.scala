@@ -18,9 +18,19 @@ class RdfSourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
+  // xmlbase/ of the shipped fixture corpus and, wherever it is present,
+  // of the W3C suite
+  private val xmlbaseDirs =
+    (graft.pipeline.SyntheticPages.fixtureRoot.resolve("xmlbase") +:
+      Seq(java.nio.file.Paths.get("/root/reference/test/data/w3c-rdf-1.1-xml-test-suite/xmlbase"))
+        .filter(java.nio.file.Files.isDirectory(_))).map(_.toString)
+
   test("rdfXmlFiles reads a directory of .rdf documents in parallel") {
-    val rows = RdfSources.rdfXmlFiles(
-      spark, "/root/reference/test/data/w3c-rdf-1.1-xml-test-suite/xmlbase/*.rdf")
+    xmlbaseDirs.foreach(readsDirectory)
+  }
+
+  private def readsDirectory(dir: String): Unit = {
+    val rows = RdfSources.rdfXmlFiles(spark, s"$dir/*.rdf")
     val byFile = rows.collect().groupBy(_.url)
     assert(byFile.keySet.size == 12) // the 12 xmlbase fixtures
     assert(byFile.values.forall(_.nonEmpty))
@@ -29,7 +39,11 @@ class RdfSourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("nTriples round trip: parse golden, write lines, re-parse identical") {
-    val golden = "/root/reference/test/data/w3c-rdf-1.1-xml-test-suite/xmlbase/test001.nt"
+    xmlbaseDirs.foreach(nTriplesRoundTrip)
+  }
+
+  private def nTriplesRoundTrip(dir: String): Unit = {
+    val golden = s"$dir/test001.nt"
     val rows = RdfSources.nTriplesFile(spark, golden)
     val lines = RdfSources.toNTriplesLines(rows.toDF()).collect().map(_.getString(0))
     assert(lines.nonEmpty)

@@ -15,11 +15,15 @@ import java.nio.file.{Files, Paths}
 class RdfXmlFuzzSpec extends AnyFunSuite {
 
   private val suiteDir = "/root/reference/test/data/w3c-rdf-1.1-xml-test-suite"
-  private val seeds = Seq(
-    s"$suiteDir/rdfms-syntax-incomplete/test001.rdf",
-    s"$suiteDir/rdf-containers-syntax-vs-schema/test003.rdf",
-    s"$suiteDir/datatypes/test001.rdf",
-    s"$suiteDir/amp-in-url/test001.rdf")
+  // the seed documents by their relative names, read from the shipped
+  // fixture corpus and, wherever it is present, from the W3C suite too
+  private val roots = graft.pipeline.SyntheticPages.fixtureRoot.toString +:
+    Seq(suiteDir).filter(d => Files.isDirectory(Paths.get(d)))
+  private def seedsUnder(root: String): Seq[String] = Seq(
+    s"$root/rdfms-syntax-incomplete/test001.rdf",
+    s"$root/rdf-containers-syntax-vs-schema/test003.rdf",
+    s"$root/datatypes/test001.rdf",
+    s"$root/amp-in-url/test001.rdf")
 
   private def lcg(seed: Long): Iterator[Long] =
     Iterator.iterate(seed * 2654435761L + 101)(s =>
@@ -58,6 +62,10 @@ class RdfXmlFuzzSpec extends AnyFunSuite {
   }
 
   test("mutated W3C inputs always land in the Either lane (no escape, no hang)") {
+    roots.foreach(root => eitherLane(seedsUnder(root)))
+  }
+
+  private def eitherLane(seeds: Seq[String]): Unit = {
     var ok = 0; var err = 0
     seeds.zipWithIndex.foreach { case (path, idx) =>
       val bytes = Files.readAllBytes(Paths.get(path))
@@ -82,6 +90,10 @@ class RdfXmlFuzzSpec extends AnyFunSuite {
   }
 
   test("parseChunks handles mutated chunk boundaries identically to whole-buffer parse") {
+    roots.foreach(root => chunkParity(seedsUnder(root)))
+  }
+
+  private def chunkParity(seeds: Seq[String]): Unit = {
     val bytes = Files.readAllBytes(Paths.get(seeds.head))
     val mut = bytes.take(bytes.length * 3 / 4) // mid-element truncation
     val whole = RdfXmlParser.parseBytes(mut, base = Some("http://fuzz.example/base"))
