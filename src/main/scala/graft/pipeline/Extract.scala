@@ -235,8 +235,9 @@ object Extract {
   private val jsonldMarker = JsonLd.marker.getBytes("US-ASCII")
 
   /** Single-pass extraction emitting triples AND a per-partition lineage
-    * tail row. Persist the result once, then split by kind (KgPipeline);
-    * at 100 TB this is one scan of the page table, not two.
+    * tail row. KgPipeline writes the triples straight from this pass and
+    * takes the lineage rows out through an accumulator on the way, so
+    * at 100 TB this is one scan of the page table and one job.
     */
   def run(pages: Dataset[Page]): Dataset[ExtractOut] = {
     val spark = pages.sparkSession

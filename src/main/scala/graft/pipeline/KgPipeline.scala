@@ -1,12 +1,12 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
 import scala.jdk.CollectionConverters._
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{Callable, ExecutionException, ExecutorService, Executors}
 
 /** The end-to-end KG-construction DAG (north_rule):
   *
@@ -22,8 +22,18 @@ import java.nio.file.{Files, Paths}
   * `outRoot/metrics` (append mode).
   *
   * Scale design:
-  *   - extraction is a single pass over (url, html) with per-partition
-  *     lineage; no second scan, no driver collect.
+  *   - the DAG runs as a DAG: `links` needs only the alias dictionary
+  *     and the pages, so it runs beside the chain canonical_map →
+  *     edges; `nodes` and `adjacency` read only `edges`, so they run
+  *     side by side. Each run owns a pool of two threads (the DAG's
+  *     branch width) and waits for every branch before it returns or
+  *     rethrows, so no job of a run outlives it.
+  *   - extraction is one job: the triples are written straight from a
+  *     single pass over (url, html), with no persisted copy and no
+  *     second scan. The per-partition lineage rows travel back in an
+  *     accumulator and are committed as a small local relation.
+  *   - a computed stage is read back with the schema it was written
+  *     with, so reading it costs no schema-inference job.
   *   - the alias dictionary is small by construction → broadcast join
   *     for entity linking; the mention side stays shuffle-free.
   *   - canonicalization blocks candidate pairs with MinHash-LSH built
@@ -31,8 +41,8 @@ import java.nio.file.{Files, Paths}
   *     aggregate) — no UDFs in the hot path; verification and
   *     connected components only touch the candidate set. A verified
   *     pair graph of at most [[LocalComponentsMaxEdges]] edges is
-  *     labelled on the driver in one collect; larger ones run the
-  *     distributed large-star/small-star rounds.
+  *     labelled on the driver from one bounded collect; larger ones
+  *     run the distributed large-star/small-star rounds.
   *   - node degree counts use a salted two-phase aggregation so hub
   *     entities cannot skew a single reducer.
   *   - adjacency is materialized via repartitionByRange(subj) +
@@ -52,21 +62,30 @@ object KgPipeline {
     def done(name: String): Boolean
     /** Write `df` as table `name`: replace it, or add to it when `append`. */
     def commit(name: String, df: DataFrame, append: Boolean): Unit
-    def read(name: String): DataFrame
+    /** Read table `name`; a known `schema` spares inferring it from the files. */
+    def read(name: String, schema: Option[StructType]): DataFrame
   }
 
   private final class ParquetStore(spark: SparkSession, outRoot: String) extends Store {
     def done(name: String): Boolean = Files.exists(Paths.get(outRoot, name, "_SUCCESS"))
     def commit(name: String, df: DataFrame, append: Boolean): Unit =
       df.write.mode(if (append) SaveMode.Append else SaveMode.Overwrite).parquet(s"$outRoot/$name")
-    def read(name: String): DataFrame = spark.read.parquet(s"$outRoot/$name")
+    def read(name: String, schema: Option[StructType]): DataFrame =
+      schema.fold(spark.read)(spark.read.schema).parquet(s"$outRoot/$name")
   }
 
-  private def stageIn(store: Store, name: String)(compute: => DataFrame): StageResult = {
-    val resumed = store.done(name)
-    if (!resumed) store.commit(name, compute, append = false)
-    StageResult(name, store.read(name), resumed)
-  }
+  /** A computed stage is read back with the schema it was just written
+    * with. A resumed one infers it: taking it from the planned frame
+    * would plan `compute`, and planning [[canonicalize]] already runs
+    * the connected-components jobs.
+    */
+  private def stageIn(store: Store, name: String)(compute: => DataFrame): StageResult =
+    if (store.done(name)) StageResult(name, store.read(name, None), resumed = true)
+    else {
+      val df = compute
+      store.commit(name, df, append = false)
+      StageResult(name, store.read(name, Some(df.schema)), resumed = false)
+    }
 
   /** Run (or resume) one stage: compute and write unless output exists. */
   def stage(spark: SparkSession, outRoot: String, name: String)(compute: => DataFrame): StageResult =
@@ -91,7 +110,7 @@ object KgPipeline {
       def done(name: String): Boolean = !refresh && SnapTable.exists(warehouse, name)
       def commit(name: String, df: DataFrame, append: Boolean): Unit =
         SnapTable.commit(spark, warehouse, name, df, op = if (append) "append" else "overwrite")
-      def read(name: String): DataFrame = SnapTable.read(spark, warehouse, name)
+      def read(name: String, schema: Option[StructType]): DataFrame = SnapTable.read(spark, warehouse, name)
     })
 
   /** The DAG itself, once for both stores. */
@@ -99,35 +118,63 @@ object KgPipeline {
     import spark.implicits._
     def stage(name: String)(compute: => DataFrame): DataFrame = stageIn(store, name)(compute).df
 
-    // ---- stage: extract (triples + lineage from ONE pass) --------------
+    // ---- stage: extract (triples in ONE job, lineage by accumulator) ---
     if (!store.done("triples")) {
-      val env = Extract.run(pages).persist(StorageLevel.MEMORY_AND_DISK)
-      store.commit("triples", env.flatMap(_.triple).toDF(), append = false)
-      store.commit("metrics", env.flatMap(_.lineage).toDF(), append = true)
-      env.unpersist()
+      val lineage = spark.sparkContext.collectionAccumulator[LineageRow]
+      store.commit("triples",
+        Extract.run(pages).flatMap { o => o.lineage.foreach(lineage.add); o.triple }.toDF(),
+        append = false)
+      // a retried task adds its partition's row again: keep one each
+      val rows = lineage.value.asScala.groupBy(_.partitionId).valuesIterator.map(_.head).toSeq
+      store.commit("metrics", rows.sortBy(_.partitionId).toDF(), append = true)
     }
-    val triples = store.read("triples")
+    val triples = store.read("triples", Some(Encoders.product[TripleRow].schema))
 
     // ---- stage: alias dictionary (small, broadcastable) -----------------
     val aliasDict = stage("alias_dict")(entityAliases(triples))
 
-    // ---- stage: entity linking (broadcast join, no big-side shuffle) ----
-    val links = stage("links")(linkMentions(pages.toDF(), aliasDict))
+    // two branches from here on, on a pool owned by this run: threads
+    // started from the calling thread inherit its Spark local
+    // properties and active session
+    val pool = Executors.newFixedThreadPool(2)
+    try {
+      val (links, (canonicalMap, edges, nodes, adjacency)) = both(pool)(
+        // ---- stage: entity linking (broadcast join, no big-side shuffle)
+        stage("links")(linkMentions(pages.toDF(), aliasDict))) {
+        // ---- stage: canonicalization (MinHash-LSH blocking + CC) --------
+        val canonicalMap = stage("canonical_map")(canonicalize(aliasDict))
+        // ---- stage: materialize graph tables ----------------------------
+        val edges = stage("edges")(materializeEdges(triples, canonicalMap))
+        val (nodes, adjacency) = both(pool)(stage("nodes")(materializeNodes(edges)))(
+          stage("adjacency")(
+            edges.repartitionByRange(col("subj")).sortWithinPartitions("subj", "pred", "obj")))
+        (canonicalMap, edges, nodes, adjacency)
+      }
+      Map(
+        "triples" -> triples, "alias_dict" -> aliasDict, "links" -> links,
+        "canonical_map" -> canonicalMap, "edges" -> edges, "nodes" -> nodes,
+        "adjacency" -> adjacency,
+        "metrics" -> store.read("metrics", Some(Encoders.product[LineageRow].schema)))
+    } finally pool.shutdown()
+  }
 
-    // ---- stage: canonicalization (MinHash-LSH blocking + CC) ------------
-    val canonicalMap = stage("canonical_map")(canonicalize(aliasDict))
-
-    // ---- stage: materialize graph tables --------------------------------
-    val edges = stage("edges")(materializeEdges(triples, canonicalMap))
-    val nodes = stage("nodes")(materializeNodes(edges))
-    val adjacency = stage("adjacency")(
-      edges.repartitionByRange(col("subj")).sortWithinPartitions("subj", "pred", "obj"))
-
-    Map(
-      "triples" -> triples, "alias_dict" -> aliasDict, "links" -> links,
-      "canonical_map" -> canonicalMap, "edges" -> edges, "nodes" -> nodes,
-      "adjacency" -> adjacency,
-      "metrics" -> store.read("metrics"))
+  /** `a` on `pool` beside `b` on the calling thread. Returns or throws
+    * only once both have finished: `b`'s failure is rethrown with `a`'s
+    * added as suppressed, else `a`'s failure.
+    */
+  private def both[A, B](pool: ExecutorService)(a: => A)(b: => B): (A, B) = {
+    val fa = pool.submit(new Callable[A] { def call(): A = a })
+    def awaitA(): Either[Throwable, A] =
+      try Right(fa.get()) catch { case e: ExecutionException => Left(e.getCause) }
+    val rb = try b catch {
+      case t: Throwable =>
+        awaitA().left.foreach(t.addSuppressed)
+        throw t
+    }
+    awaitA() match {
+      case Right(ra) => (ra, rb)
+      case Left(t) => throw t
+    }
   }
 
   /** Alias dictionary: every IRI entity mentioned as a subject, keyed by
@@ -228,7 +275,7 @@ object KgPipeline {
         (size(array_intersect(col("s1"), col("s2"))).cast("double") /
           size(array_union(col("s1"), col("s2")))).as("jaccard"))
       .where(col("jaccard") >= 0.9)
-      .select("e1", "e2").distinct()
+      .select("e1", "e2") // connectedComponents deduplicates its input
 
     // connected components over the verified pair graph; isolated
     // entities (no pair) stay their own canonical via the left join
@@ -272,10 +319,11 @@ object KgPipeline {
     * round; each round checkpoints its output and checks convergence
     * on that same materialization.
     *
-    * Small inputs skip the rounds: when the deduplicated, canonically
-    * directed edge set has at most [[LocalComponentsMaxEdges]] edges,
-    * it is collected once and labelled on the driver by union-find
-    * (see [[localComponents]]). Every round costs a few Spark jobs of
+    * Small inputs skip the rounds: the deduplicated, canonically
+    * directed edge set is collected with a limit of one more than
+    * [[LocalComponentsMaxEdges]]; when no more than the cap comes back,
+    * those edges are labelled on the driver by union-find (see
+    * [[localComponents]]). Every round costs a few Spark jobs of
     * fixed overhead whatever the edge count; on pair graphs of a few
     * thousand edges the rounds would be most of the canonicalization
     * stage. The labels are the same on both paths.
@@ -293,8 +341,9 @@ object KgPipeline {
     }
 
   /** Edge count up to which [[connectedComponents]] labels on the
-    * driver. Decided from the row count the first convergence
-    * signature already takes, so the distributed path gains no job.
+    * driver. Decided by one collect limited to the cap plus one row,
+    * which is also the largest edge set the gate brings to the driver;
+    * the labels come from those same rows, with no second collect.
     *
     * The cap bounds driver memory; it is not a speed crossover.
     * Measured on random sparse graphs (n edges over n nodes, local[2],
@@ -417,36 +466,41 @@ object KgPipeline {
       (r.getLong(0), bd(1), bd(2))
     }
 
-    // the round-0 signature's row count picks the path: the
-    // distributed rounds gain no job from the gate
-    val sig0 = signature(cur)
-    if (sig0._1 <= localMaxEdges && labelsOnDriver(cur.schema("u").dataType))
-      localComponents(cur)
-    else {
-      var sig = sig0
-      var i = 0
-      var converged = false
-      while (i < maxIters && !converged) {
-        // eager checkpoint per round: one materialization the signature
-        // action then reads from blocks, plan reset to a leaf
-        val next = smallStar(largeStar(cur)).localCheckpoint(true)
-        val nsig = signature(next)
-        cur = next
-        converged = nsig == sig
-        sig = nsig
-        i += 1
-      }
-      if (!converged)
-        // q26 is a value-exact oracle query: shipping unstable labels
-        // would compare silently-wrong — fail loudly instead
-        throw new IllegalStateException(
-          s"connectedComponents did not converge in $maxIters large-star/small-star rounds " +
-            "(O(log n) expected — this indicates a bug or an adversarial input)")
-      // at the fixpoint every edge is (child, center) with center = the
-      // component minimum; centers label themselves
-      cur.select(col("u").as("node"), col("v").as("component"))
-        .union(cur.select(col("v").as("node"), col("v").as("component")))
-        .distinct()
+    // a bounded collect picks the path: at most localMaxEdges + 1 rows
+    // reach the driver, and the driver labels them when no more than
+    // the cap came back
+    val t = cur.schema("u").dataType
+    val small =
+      if (localMaxEdges < 0 || !labelsOnDriver(t)) None
+      else Some(cur.limit(math.min(localMaxEdges, Int.MaxValue - 1L).toInt + 1).collect())
+        .filter(_.length <= localMaxEdges)
+    small match {
+      case Some(edges) => localComponents(cur.sparkSession, t, edges)
+      case None =>
+        var sig = signature(cur)
+        var i = 0
+        var converged = false
+        while (i < maxIters && !converged) {
+          // eager checkpoint per round: one materialization the signature
+          // action then reads from blocks, plan reset to a leaf
+          val next = smallStar(largeStar(cur)).localCheckpoint(true)
+          val nsig = signature(next)
+          cur = next
+          converged = nsig == sig
+          sig = nsig
+          i += 1
+        }
+        if (!converged)
+          // q26 is a value-exact oracle query: shipping unstable labels
+          // would compare silently-wrong — fail loudly instead
+          throw new IllegalStateException(
+            s"connectedComponents did not converge in $maxIters large-star/small-star rounds " +
+              "(O(log n) expected — this indicates a bug or an adversarial input)")
+        // at the fixpoint every edge is (child, center) with center = the
+        // component minimum; centers label themselves
+        cur.select(col("u").as("node"), col("v").as("component"))
+          .union(cur.select(col("v").as("node"), col("v").as("component")))
+          .distinct()
     }
   }
 
@@ -476,16 +530,14 @@ object KgPipeline {
     case _ => values.sortBy(_.asInstanceOf[Number].longValue)
   }
 
-  /** Driver-side components of a small, checkpointed, canonically
-    * directed edge set (u, v): one collect, then union-find over the
+  /** Driver-side components of a small, collected, canonically
+    * directed edge set (u, v) of node type `t`: union-find over the
     * nodes indexed in [[inSparkOrder]], each set rooted at its least
     * index. A node's root is thus its component minimum — the label
     * the distributed rounds converge to. Returned as a local relation
     * with the rounds' (node, component) schema.
     */
-  private def localComponents(cur: DataFrame): DataFrame = {
-    val t = cur.schema("u").dataType
-    val edges = cur.collect()
+  private def localComponents(spark: SparkSession, t: DataType, edges: Array[Row]): DataFrame = {
     val nodes = inSparkOrder(t,
       edges.iterator.flatMap(r => Iterator(r.get(0), r.get(1))).distinct.toArray)
     val index = nodes.iterator.zipWithIndex.toMap
@@ -503,7 +555,7 @@ object KgPipeline {
     val labels = nodes.indices.map(i => Row(nodes(i), nodes(root(i))))
     // nullable like the rounds' output, whose columns come from `min`
     val schema = StructType(Seq(StructField("node", t), StructField("component", t)))
-    cur.sparkSession.createDataFrame(labels.asJava, schema)
+    spark.createDataFrame(labels.asJava, schema)
   }
 
   /** Coherence-reranked entity disambiguation — the collective step

@@ -25,7 +25,9 @@ final case class TripleRow(
     obj: String,
     objKind: String, // iri | bnode | literal
     lang: String, // null unless lang-tagged literal
-    datatype: String // null unless typed literal
+    // null for IRIs, blank nodes and plain (xsd:string) literals;
+    // rdf:langString for every lang-tagged literal; else the datatype IRI
+    datatype: String
 )
 
 /** N-Quads row: [[TripleRow]] plus the graph label — null for the
@@ -44,7 +46,9 @@ final case class QuadRow(
 )
 
 /** Per-partition lineage/metrics row (north_rule): one per extraction
-  * task, written to the metrics table alongside stage outputs.
+  * task, written to the metrics table alongside stage outputs. Under
+  * KgPipeline the task also writes its partition's triples as it
+  * extracts them, so `wallMs` includes that write.
   */
 final case class LineageRow(
     stage: String,

@@ -152,9 +152,8 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
-  // measured with the driver-side labelling (stable over repeated
-  // runs); with every edge set on the distributed rounds it was 28
-  private val CanonicalizeJobBudget = 10
+  // measured with the driver-side labelling (stable over repeated runs)
+  private val CanonicalizeJobBudget = 8
 
   test("canonicalize stays within its Spark-job budget on a small alias dictionary") {
     val s = spark

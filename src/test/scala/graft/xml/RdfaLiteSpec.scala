@@ -326,15 +326,16 @@ class RdfaLiteSpec extends AnyFunSuite {
   }
 
   test("malformed island (unclosed tags, bare ampersand, unquoted attr) yields the well-formed twin's triples") {
-    // the well-formed twin — parses via the strict SAX path
+    // the well-formed twin of the island below; both take the one
+    // lenient HTML tokenizer
     val wellFormed =
       """<div vocab="http://schema.org/" about="http://ex/alice" typeof="Person">
         |<p><span property="name">Alice &amp; Bob</span></p>
         |<a property="url" href="http://ex/a?x=1&amp;y=2">site</a>
         |</div>""".stripMargin
     // real-world shape: <p> never closed, bare & in text AND in an
-    // attribute value, unquoted attribute — the SAX parse fails and the
-    // lenient tokenizer must recover the SAME triples
+    // attribute value, unquoted attribute — a strict XML parse would
+    // fail, and the lenient tokenizer must recover the SAME triples
     val malformed =
       """<div vocab="http://schema.org/" about="http://ex/alice" typeof=Person>
         |<p><span property="name">Alice & Bob</span>
