@@ -474,33 +474,31 @@ object KgPipeline {
       if (localMaxEdges < 0 || !labelsOnDriver(t)) None
       else Some(cur.limit(math.min(localMaxEdges, Int.MaxValue - 1L).toInt + 1).collect())
         .filter(_.length <= localMaxEdges)
-    small match {
-      case Some(edges) => localComponents(cur.sparkSession, t, edges)
-      case None =>
-        var sig = signature(cur)
-        var i = 0
-        var converged = false
-        while (i < maxIters && !converged) {
-          // eager checkpoint per round: one materialization the signature
-          // action then reads from blocks, plan reset to a leaf
-          val next = smallStar(largeStar(cur)).localCheckpoint(true)
-          val nsig = signature(next)
-          cur = next
-          converged = nsig == sig
-          sig = nsig
-          i += 1
-        }
-        if (!converged)
-          // q26 is a value-exact oracle query: shipping unstable labels
-          // would compare silently-wrong — fail loudly instead
-          throw new IllegalStateException(
-            s"connectedComponents did not converge in $maxIters large-star/small-star rounds " +
-              "(O(log n) expected — this indicates a bug or an adversarial input)")
-        // at the fixpoint every edge is (child, center) with center = the
-        // component minimum; centers label themselves
-        cur.select(col("u").as("node"), col("v").as("component"))
-          .union(cur.select(col("v").as("node"), col("v").as("component")))
-          .distinct()
+    small.map(localComponents(cur.sparkSession, t, _)).getOrElse {
+      var sig = signature(cur)
+      var i = 0
+      var converged = false
+      while (i < maxIters && !converged) {
+        // eager checkpoint per round: one materialization the signature
+        // action then reads from blocks, plan reset to a leaf
+        val next = smallStar(largeStar(cur)).localCheckpoint(true)
+        val nsig = signature(next)
+        cur = next
+        converged = nsig == sig
+        sig = nsig
+        i += 1
+      }
+      if (!converged)
+        // q26 is a value-exact oracle query: shipping unstable labels
+        // would compare silently-wrong — fail loudly instead
+        throw new IllegalStateException(
+          s"connectedComponents did not converge in $maxIters large-star/small-star rounds " +
+            "(O(log n) expected — this indicates a bug or an adversarial input)")
+      // at the fixpoint every edge is (child, center) with center = the
+      // component minimum; centers label themselves
+      cur.select(col("u").as("node"), col("v").as("component"))
+        .union(cur.select(col("v").as("node"), col("v").as("component")))
+        .distinct()
     }
   }
 

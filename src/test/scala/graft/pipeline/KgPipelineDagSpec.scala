@@ -4,16 +4,18 @@ import org.apache.spark.TestListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.{col, udf}
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.atomic.AtomicInteger
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** How [[KgPipeline.run]] executes its DAG: the Spark-job budget of one
   * run, its overlapping branches failing without leaving jobs behind,
   * and extract lineage as it lands in the `metrics` table.
   */
-class KgPipelineDagSpec extends AnyFunSuite {
+class KgPipelineDagSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[2]")
@@ -62,7 +64,19 @@ class KgPipelineDagSpec extends AnyFunSuite {
     s.sparkContext.parallelize(pages, partitions).toDS()
   }
 
-  private def freshRoot(): String = Files.createTempDirectory("graft_dag").toString
+  private val roots = mutable.ArrayBuffer.empty[Path]
+
+  private def freshRoot(): String = {
+    val root = Files.createTempDirectory("graft_dag")
+    roots += root
+    root.toString
+  }
+
+  override def afterAll(): Unit =
+    roots.foreach { r =>
+      val s = Files.walk(r)
+      try s.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists) finally s.close()
+    }
 
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
 
