@@ -71,6 +71,93 @@ object Dedup {
     base.select(col("doc_id"), explode(sh).as("s"))
   }
 
+  // The near-dup family's blocking skeleton (Dedup, Similarity,
+  // Multimodal): key rows into buckets → suppressHot → bucketPairs (or
+  // hammingPairs for chunked hashes) → a verify, overlaps for shingle sets.
+
+  /** Hot-bucket guard: drops every row of a bucket over `keys` with more
+    * than `maxBucket` members — a degenerate bucket would cost
+    * |bucket|^2 join rows, and a genuinely similar pair recurs in the
+    * other bands/tables/chunks with near-certainty.
+    *
+    * `keyed` is materialized once (eager localCheckpoint) because it
+    * feeds three consumers — the census and both sides of the bucket
+    * join — and Spark's ReuseExchange does not unify them (measured on
+    * the LSH scan → explode → distinct subtree: 8 parquet scans, 0
+    * reused exchanges). Checkpoint blocks are reference-tracked and
+    * reclaimed by the ContextCleaner when the result frame is dropped;
+    * persist() would pin the plan in the CacheManager for the session.
+    */
+  private[pipeline] def suppressHot(keyed: DataFrame, keys: Seq[String], maxBucket: Int): DataFrame = {
+    val k = keyed.localCheckpoint(true)
+    val hot = k.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("n")).where(col("n") > maxBucket)
+      .select(keys.map(col): _*)
+    k.join(broadcast(hot), keys, "left_anti")
+  }
+
+  /** Distinct id pairs (a < b) sharing a bucket over `keys` — ids only
+    * through the self-join, deduped before any verify, so a pair sharing
+    * several buckets is verified once.
+    */
+  private[pipeline] def bucketPairs(blocked: DataFrame, keys: Seq[String], id: String): DataFrame = {
+    def side(name: String) = blocked.select(keys.map(col) :+ col(id).as(name): _*)
+    side("a").join(side("b"), keys)
+      .where(col("a") < col("b"))
+      .select(col("a"), col("b"))
+      .distinct()
+  }
+
+  /** Distinct (a, b, hamming) pairs with a < b and
+    * bit_count(ha ^ hb) ≤ maxHamming over a bigint `hash` column.
+    * Pigeonhole blocking: the hash splits into `chunks` 8-bit chunks and
+    * any pair within hamming < `chunks` agrees on at least one of them,
+    * so joining on (chunk, value) loses nothing below that bound (minus
+    * pairs whose only shared chunks are hot). The payload rides the join
+    * because the verify is one popcount. Callers keep their own bound on
+    * maxHamming.
+    */
+  private[pipeline] def hammingPairs(hashes: DataFrame, id: String, hash: String, chunks: Int,
+                                     maxHamming: Int, maxBucket: Int): DataFrame = {
+    val chunked = suppressHot(hashes.select(col(id), col(hash),
+      posexplode(array((0 until chunks).map(c =>
+        shiftrightunsigned(col(hash), c * 8).bitwiseAND(255)): _*))
+        .as(Seq("chunk", "value"))), Seq("chunk", "value"), maxBucket)
+    val l = chunked.select(col("chunk"), col("value"), col(id).as("a"), col(hash).as("ha"))
+    val r = chunked.select(col("chunk"), col("value"), col(id).as("b"), col(hash).as("hb"))
+    l.join(r, Seq("chunk", "value"))
+      .where(col("a") < col("b"))
+      .select(col("a"), col("b"), bit_count(expr("ha ^ hb")).as("hamming"))
+      .where(col("hamming") <= maxHamming)
+      .distinct()
+  }
+
+  /** Exact set overlap of candidate id pairs: (a, b, ic, sza, szb) with
+    * ic = |S(a) ∩ S(b)| and sz = |S(doc)| over materialized (doc_id, s)
+    * set rows — relational intersection by an equi-join on s, sizes by a
+    * groupBy, work proportional to |candidates|, no array transport.
+    * Callers apply their own threshold and projection.
+    *
+    * Only the b-side leg broadcasts, when the cheap row count on the
+    * materialized `rows` says it fits: the fat (cand × rows-of-a)
+    * intermediate then streams through the second join and the partial
+    * count instead of being shuffled by (b, s). A variant that also
+    * checkpointed and broadcast the candidate set regressed (q59 +2.4s,
+    * q17 +0.9s): its extra blocking actions serialized a one-action
+    * pipeline. At scale the gate falls back to the shuffle join.
+    */
+  private[pipeline] def overlaps(candIds: DataFrame, rows: DataFrame): DataFrame = {
+    val sizes = rows.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
+    candIds
+      .join(rows.select(col("doc_id").as("a"), col("s")), Seq("a"))
+      .join(broadcastIfSmall(rows, 2000000L).select(col("doc_id").as("b"), col("s")), Seq("b", "s"))
+      .groupBy(col("a"), col("b"))
+      .agg(count(lit(1)).as("ic"))
+      .join(sizes.select(col("doc_id").as("a"), col("sz").as("sza")), Seq("a"))
+      .join(sizes.select(col("doc_id").as("b"), col("sz").as("szb")), Seq("b"))
+      .select(col("a"), col("b"), col("ic"), col("sza"), col("szb"))
+  }
+
   /** MinHash-LSH near-dup candidate pairs with exact-Jaccard verify.
     * bands*rows must equal nHashes. Hot buckets (more than `maxBucket`
     * members) are suppressed — the standard skew guard: a degenerate
@@ -98,39 +185,24 @@ object Dedup {
     // cheaper, and no array ever enters a shuffle.
     // eager localCheckpoint: this subtree (scan → explode → distinct)
     // feeds FOUR consumers (signatures, sizes, both sides of the
-    // intersection join) and Spark's ReuseExchange does NOT unify them
-    // (measured: 8 parquet scans, 0 reused exchanges) — materialize
-    // once, read from blocks. Reference-tracked, reclaimed by the
-    // ContextCleaner when the result frame is dropped; persist() would
-    // instead pin the plan in the CacheManager for the whole session.
+    // intersection join) — the suppressHot census note
     val expl = shingleRows(documents, shingleWidth)
       .select(col("doc_id"), xxhash64(col("s")).as("h"))
       .distinct() // shingle SET semantics
       .localCheckpoint(true)
     val sigCols = (0 until nHashes).map(i => min(xxhash64(col("h"), lit(i))).as(s"m$i"))
     val sig = expl.groupBy(col("doc_id")).agg(sigCols.head, sigCols.tail: _*)
-    // banded rows feed three consumers (hot census + both join sides);
-    // tiny (bands rows/doc) — checkpoint skips re-running the 16-min
-    // groupBy per consumer
-    val banded0 = sig.select(
+    val banded = suppressHot(sig.select(
       col("doc_id"),
       posexplode(array((0 until bands).map(b =>
         hash((b * rows until (b + 1) * rows).map(i => col(s"m$i")): _*)): _*))
-        .as(Seq("band", "bucket"))
-    ).localCheckpoint(true)
-    val hot = banded0.groupBy(col("band"), col("bucket"))
-      .agg(count(lit(1)).as("n")).where(col("n") > maxBucket)
-      .select(col("band"), col("bucket"))
-    val banded = banded0.join(broadcast(hot), Seq("band", "bucket"), "left_anti")
-    val l = banded.select(col("band"), col("bucket"), col("doc_id").as("a"))
-    val r = banded.select(col("band"), col("bucket"), col("doc_id").as("b"))
-    val candIds = l.join(r, Seq("band", "bucket"))
-      .where(col("a") < col("b"))
-      .select(col("a"), col("b"))
-      .distinct()
+        .as(Seq("band", "bucket"))), Seq("band", "bucket"), maxBucket)
+    val candIds = bucketPairs(banded, Seq("band", "bucket"), "doc_id")
     // relational exact-Jaccard verify over the candidate pairs only:
     // intersection via hash-equality join, sizes via groupBy — work
-    // proportional to |candidates|, zero array transport
+    // proportional to |candidates|, zero array transport. Not
+    // [[overlaps]]: its b-leg count + broadcast measured slower here
+    // (QueryProbe sf0.1, min of 5 interleaved: 1.05 → 1.13 s)
     val sizes = expl.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
     val inter = candIds
       .join(expl.select(col("doc_id").as("a"), col("h")), Seq("a"))
@@ -163,26 +235,9 @@ object Dedup {
     val agg = hw.groupBy(col("doc_id")).agg(bitSums.head, bitSums.tail: _*)
     val sim = (0 until 32).map(b =>
       when(col(s"s$b") > 0, lit(1L << b)).otherwise(0L)).reduce((a, b) => a + b)
-    val withSim = agg.select(col("doc_id"), sim.as("simhash"))
-    // 3 consumers (hot census + both join sides) — materialize the
-    // 32-sum signature aggregation once (see minhashLsh census note)
-    val chunked0 = withSim.select(
-      col("doc_id"), col("simhash"),
-      posexplode(array((0 until 4).map(c => shiftright(col("simhash"), c * 8).bitwiseAND(255)): _*))
-        .as(Seq("chunk", "value"))
-    ).localCheckpoint(true)
-    // hot-chunk suppression: same skew guard as minhashLsh
-    val hot = chunked0.groupBy(col("chunk"), col("value"))
-      .agg(count(lit(1)).as("n")).where(col("n") > maxBucket)
-      .select(col("chunk"), col("value"))
-    val chunked = chunked0.join(broadcast(hot), Seq("chunk", "value"), "left_anti")
-    val l = chunked.select(col("chunk"), col("value"), col("doc_id").as("a"), col("simhash").as("ha"))
-    val r = chunked.select(col("chunk"), col("value"), col("doc_id").as("b"), col("simhash").as("hb"))
-    l.join(r, Seq("chunk", "value"))
-      .where(col("a") < col("b"))
-      .select(col("a"), col("b"), bit_count(expr("ha ^ hb")).as("hamming"))
-      .where(col("hamming") <= maxHamming)
-      .distinct()
+    // 4 × 8-bit chunks cover the 32-bit signature
+    hammingPairs(agg.select(col("doc_id"), sim.as("simhash")), "doc_id", "simhash",
+      chunks = 4, maxHamming, maxBucket)
   }
 
   /** Cross-engine-exact SimHash: bit b of the 32-bit signature comes
@@ -215,23 +270,8 @@ object Dedup {
     */
   def simhashMd5Pairs(documents: DataFrame, maxHamming: Int = 3, maxBucket: Int = 500): DataFrame = {
     require(maxHamming <= 3, "4 pigeonhole chunks only guarantee recall for hamming <= 3")
-    val withSim = simhashMd5(documents)
-    val chunked0 = withSim.select(
-      col("doc_id"), col("simhash"),
-      posexplode(array((0 until 4).map(c => shiftright(col("simhash"), c * 8).bitwiseAND(255)): _*))
-        .as(Seq("chunk", "value")))
-      .localCheckpoint(true) // 3 consumers — see minhashLsh census note
-    val hot = chunked0.groupBy(col("chunk"), col("value"))
-      .agg(count(lit(1)).as("n")).where(col("n") > maxBucket)
-      .select(col("chunk"), col("value"))
-    val chunked = chunked0.join(broadcast(hot), Seq("chunk", "value"), "left_anti")
-    val l = chunked.select(col("chunk"), col("value"), col("doc_id").as("a"), col("simhash").as("ha"))
-    val r = chunked.select(col("chunk"), col("value"), col("doc_id").as("b"), col("simhash").as("hb"))
-    l.join(r, Seq("chunk", "value"))
-      .where(col("a") < col("b"))
-      .select(col("a"), col("b"), bit_count(expr("ha ^ hb")).cast("bigint").as("hamming"))
-      .where(col("hamming") <= maxHamming)
-      .distinct()
+    hammingPairs(simhashMd5(documents), "doc_id", "simhash", chunks = 4, maxHamming, maxBucket)
+      .select(col("a"), col("b"), col("hamming").cast("bigint").as("hamming"))
   }
 
   /** Cross-engine-exact MinHash-LSH pair recovery: signatures are
@@ -252,15 +292,8 @@ object Dedup {
       // same relational shape as minhashLsh (explode + codegen + groupBy
       // minima — array lambdas are interpreted); md5-string minima and
       // md5 band buckets keep every value replayable in ANSI SQL
-      // same materialization points as minhashLsh: expl feeds 4 consumers,
-      // banded0 feeds 3 (see the scan/exchange census note there)
       val expl = md5ShingleSet(documents, shingleWidth)
-      val banded = md5BandedSuppressed(expl, maxBucket)
-      val candIds = banded.select(col("band"), col("bucket"), col("doc_id").as("a"))
-        .join(banded.select(col("band"), col("bucket"), col("doc_id").as("b")), Seq("band", "bucket"))
-        .where(col("a") < col("b"))
-        .select(col("a"), col("b"))
-        .distinct()
+      val candIds = bucketPairs(md5BandedSuppressed(expl, maxBucket), Seq("band", "bucket"), "doc_id")
       md5JaccardVerify(candIds, expl, threshold).localCheckpoint(true)
     }
 
@@ -279,20 +312,8 @@ object Dedup {
   def scoredPairsMd5(documents: DataFrame, maxBucket: Int = 200,
                      shingleWidth: Int = 3): DataFrame = {
     val expl = md5ShingleSet(documents, shingleWidth)
-    val banded = md5BandedSuppressed(expl, maxBucket)
-    val candIds = banded.select(col("band"), col("bucket"), col("doc_id").as("a"))
-      .join(banded.select(col("band"), col("bucket"), col("doc_id").as("b")), Seq("band", "bucket"))
-      .where(col("a") < col("b"))
-      .select(col("a"), col("b"))
-      .distinct()
-    val sizes = expl.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-    // verify joins in the md5JaccardVerify r6 shape (b-leg broadcast only)
-    candIds
-      .join(expl.select(col("doc_id").as("a"), col("s")), Seq("a"))
-      .join(broadcastIfSmall(expl, 2000000L).select(col("doc_id").as("b"), col("s")), Seq("b", "s"))
-      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("ic"))
-      .join(sizes.select(col("doc_id").as("a"), col("sz").as("sza")), Seq("a"))
-      .join(sizes.select(col("doc_id").as("b"), col("sz").as("szb")), Seq("b"))
+    val candIds = bucketPairs(md5BandedSuppressed(expl, maxBucket), Seq("band", "bucket"), "doc_id")
+    overlaps(candIds, expl)
       .select(col("a"), col("b"), col("ic").cast("bigint").as("ic"),
         (col("sza") + col("szb") - col("ic")).cast("bigint").as("uc"))
   }
@@ -334,10 +355,6 @@ object Dedup {
     md5JaccardVerify(candIds, expl, threshold)
   }
 
-  /** Distinct (doc_id, shingle) rows, eagerly materialized — feeds the
-    * signature census, both verify legs and the size census (see the
-    * scan/exchange note on [[minhashLsh]]).
-    */
   /** The lazy (pre-checkpoint) shingle-set plan — split out so the
     * PipelineSparkSpec scan-pruning pin can inspect the parquet scan
     * that the eager checkpoint in [[md5ShingleSet]] otherwise hides
@@ -347,6 +364,10 @@ object Dedup {
     shingleRows(documents, shingleWidth)
       .distinct() // shingle SET semantics
 
+  /** Distinct (doc_id, shingle) rows, eagerly materialized — feeds the
+    * signatures and [[overlaps]] (both verify legs and the size census;
+    * see the [[suppressHot]] census note).
+    */
   private def md5ShingleSet(documents: DataFrame, shingleWidth: Int): DataFrame =
     // stage-cached: the batch and incremental LSH variants (and any
     // same-width caller) share one materialization per corpus
@@ -365,44 +386,17 @@ object Dedup {
       val sig = expl.groupBy(col("doc_id")).agg(sigCols.head, sigCols.tail: _*)
       val bucketCols = (0 until 4).map(b =>
         md5(concat(col(s"m${3 * b}"), col(s"m${3 * b + 1}"), col(s"m${3 * b + 2}"))))
-      val banded0 = sig.select(
+      suppressHot(sig.select(
         col("doc_id"),
-        posexplode(array(bucketCols: _*)).as(Seq("band", "bucket")))
-        .localCheckpoint(true)
-      val hot = banded0.groupBy(col("band"), col("bucket"))
-        .agg(count(lit(1)).as("n")).where(col("n") > maxBucket)
-        .select(col("band"), col("bucket"))
-      banded0.join(broadcast(hot), Seq("band", "bucket"), "left_anti")
+        posexplode(array(bucketCols: _*)).as(Seq("band", "bucket"))), Seq("band", "bucket"), maxBucket)
     }
 
-  /** Exact set-Jaccard verify over candidate id pairs: relational
-    * intersection counts against the materialized shingle rows, sizes
-    * from the same frame — verify-once-per-pair, id-only transport.
-    *
-    * Join shape (r6, opt-guide §3.1): the b-side shingle leg
-    * broadcasts when the (already materialized) shingle frame's cheap
-    * row count says it fits — the fat (cand × shingles-of-a)
-    * intermediate then STREAMS through the second join and the
-    * map-side partial count instead of being shuffled whole by
-    * (b, s). That single hint is the whole change: a first attempt
-    * that ALSO checkpointed + broadcast the candidate set regressed
-    * the family in clean-window captures (q59 +2.4s, q17 +0.9s) —
-    * the extra blocking actions and broadcast builds serialized a
-    * previously one-action pipeline, while the a-leg join's inputs
-    * are small either way. Row-count-gated with the sort-merge
-    * fallback at scale.
+  /** Exact set-Jaccard verify over candidate id pairs: [[overlaps]]
+    * gated at jaccard ≥ threshold, rounded to 4 places.
     */
   private def md5JaccardVerify(candIds: DataFrame, expl: DataFrame, threshold: Double): DataFrame = {
-    val sizes = expl.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-    val inter = candIds
-      .join(expl.select(col("doc_id").as("a"), col("s")), Seq("a"))
-      .join(broadcastIfSmall(expl, 2000000L).select(col("doc_id").as("b"), col("s")), Seq("b", "s"))
-      .groupBy(col("a"), col("b"))
-      .agg(count(lit(1)).as("ic"))
     val jaccard = col("ic").cast("double") / (col("sza") + col("szb") - col("ic"))
-    inter
-      .join(sizes.select(col("doc_id").as("a"), col("sz").as("sza")), Seq("a"))
-      .join(sizes.select(col("doc_id").as("b"), col("sz").as("szb")), Seq("b"))
+    overlaps(candIds, expl)
       .where(jaccard >= threshold)
       .select(col("a"), col("b"), round(jaccard, 4).as("jaccard"))
   }
@@ -465,7 +459,7 @@ object Dedup {
     require(tNum > 0 && tDen >= tNum, "threshold must be in (0,1]")
     import org.apache.spark.sql.expressions.Window
     // expl feeds the df-count, the ranked window AND both verify sides:
-    // materialize once (the LSH-family eager-checkpoint rule)
+    // materialize once (the suppressHot census note)
     val expl = shingleRows(documents, shingleWidth)
       .distinct() // shingle SET semantics
       .localCheckpoint(true)
@@ -483,8 +477,8 @@ object Dedup {
     // NOT materialized: the self-join legs are canonically identical,
     // so ReuseExchange already computes the ranked window once — an
     // eager checkpoint here only serializes the pipeline (the
-    // md5JaccardVerify r6 note: measured q59 +2.4s from the
-    // extra-actions variant in a clean-window capture)
+    // overlaps note: measured q59 +2.4s from the extra-actions variant
+    // in a clean-window capture)
     val prefix = ranked
       .where(col("pos") <= col("sz") - minOv + lit(1))
       .select(col("doc_id"), col("s"), col("sz"))
@@ -495,21 +489,9 @@ object Dedup {
         lit(tDen) * col("sza") >= lit(tNum) * col("szb"))
       .select(col("a"), col("b"))
       .distinct()
-    val sizes = expl.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-    // verify joins in the md5JaccardVerify r6 shape: only the b-side
-    // shingle leg broadcasts (cheap gate on the materialized expl), so
-    // the fat (cand × shingles-of-a) intermediate streams through the
-    // second join and the partial count without the big exchange
-    val inter = candIds
-      .join(expl.select(col("doc_id").as("a"), col("s")), Seq("a"))
-      .join(broadcastIfSmall(expl, 2000000L).select(col("doc_id").as("b"), col("s")), Seq("b", "s"))
-      .groupBy(col("a"), col("b"))
-      .agg(count(lit(1)).as("ic"))
     // exact rational threshold: ic/(sza+szb-ic) >= tNum/tDen
     //   <=> tDen*ic >= tNum*(sza+szb-ic), all BIGINT
-    inter
-      .join(sizes.select(col("doc_id").as("a"), col("sz").as("sza")), Seq("a"))
-      .join(sizes.select(col("doc_id").as("b"), col("sz").as("szb")), Seq("b"))
+    overlaps(candIds, expl)
       .where(lit(tDen) * col("ic") >= lit(tNum) * (col("sza") + col("szb") - col("ic")))
       .select(col("a"), col("b"),
         round(col("ic").cast("double") / (col("sza") + col("szb") - col("ic")), 4).as("jaccard"))
@@ -579,16 +561,7 @@ object Dedup {
       .where(col("x") =!= col("y"))
       .select(least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"))
       .distinct()
-    val sizes = expl.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-    // verify joins in the md5JaccardVerify r6 shape (b-leg broadcast only)
-    val inter = candIds
-      .join(expl.select(col("doc_id").as("a"), col("s")), Seq("a"))
-      .join(broadcastIfSmall(expl, 2000000L).select(col("doc_id").as("b"), col("s")), Seq("b", "s"))
-      .groupBy(col("a"), col("b"))
-      .agg(count(lit(1)).as("ic"))
-    inter
-      .join(sizes.select(col("doc_id").as("a"), col("sz").as("sza")), Seq("a"))
-      .join(sizes.select(col("doc_id").as("b"), col("sz").as("szb")), Seq("b"))
+    overlaps(candIds, expl)
       .where(lit(tDen) * col("ic") >= lit(tNum) * least(col("sza"), col("szb")))
       .select(col("a"), col("b"),
         col("ic").cast("bigint").as("ic"),

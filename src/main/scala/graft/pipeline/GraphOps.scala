@@ -517,8 +517,8 @@ object GraphOps {
     // §3.1, decided once from the initial node count (alive only
     // shrinks): the peel round becomes scan → BHJ → BHJ → one
     // exchange (the groupBy key); falls back to shuffle joins at scale
-    val bState: DataFrame => DataFrame =
-      if (n <= StateBroadcastRows) broadcast else identity
+    val n0 = n
+    val bState: DataFrame => DataFrame = broadcastIfSmall(_, n0, StateBroadcastRows)
     while (r < maxRounds && !converged) {
       val next = edges
         .join(bState(alive.select(col("node").as("src"))), Seq("src"))
@@ -694,8 +694,8 @@ object GraphOps {
       .withColumn("lab", col("node"))
       .localCheckpoint(true)
     // §3.1, decided once (label state is node-sized every round)
-    val bState: DataFrame => DataFrame =
-      if (labels.count() <= StateBroadcastRows) broadcast else identity
+    val nLabels = labels.count()
+    val bState: DataFrame => DataFrame = broadcastIfSmall(_, nLabels, StateBroadcastRows)
     for (_ <- 1 to iters) {
       // argmax by (count DESC, label ASC) as a map-side-combinable
       // min over the (-count, label) struct — same total order the
@@ -777,8 +777,8 @@ object GraphOps {
     // maxima, claim frontiers, claimed sets) is bounded by the initial
     // node set, which only shrinks across outer rounds — one count
     // gates them all, with the shuffle-join fallback at scale
-    val bState: DataFrame => DataFrame =
-      if (nodes.count() <= StateBroadcastRows) broadcast else identity
+    val nNodes = nodes.count()
+    val bState: DataFrame => DataFrame = broadcastIfSmall(_, nNodes, StateBroadcastRows)
     var outer = 0
     while (outer < maxOuter) {
       if (nodes.isEmpty) return done

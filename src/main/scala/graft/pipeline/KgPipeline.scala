@@ -43,8 +43,8 @@ import java.util.concurrent.{Callable, ExecutionException, ExecutorService, Exec
   *     pair graph of at most [[LocalComponentsMaxEdges]] edges is
   *     labelled on the driver from one bounded collect; larger ones
   *     run the distributed large-star/small-star rounds.
-  *   - node degree counts use a salted two-phase aggregation so hub
-  *     entities cannot skew a single reducer.
+  *   - node degree counts are one map-side-combinable groupBy: partial
+  *     aggregation sends a reducer one row per hub subject per map task.
   *   - adjacency is materialized via repartitionByRange(subj) +
   *     sortWithinPartitions — range-partitioned, clusterable layout
   *     instead of giant collect_list arrays.
@@ -793,17 +793,14 @@ object KgPipeline {
       .format("parquet")
       .saveAsTable(table)
 
-  /** Node table with degree counts — salted two-phase aggregation so hub
-    * subjects (rdf:type objects, popular entities) cannot skew one
-    * reducer at 100 TB.
+  /** Node table with out-degree counts: one map-side-combinable groupBy.
+    * Partial aggregation already collapses a hub subject to one row per
+    * map task before the shuffle, so a reducer receives at most one row
+    * per (subject, map task) — salting the key would add a second
+    * shuffle stage without shrinking that.
     */
-  def materializeNodes(edges: DataFrame): DataFrame = {
-    val salted = edges
-      .withColumn("salt", pmod(xxhash64(col("pred"), col("obj")), lit(16)))
-      .groupBy(col("subj"), col("salt"))
-      .agg(count(lit(1)).as("partialDeg"))
-    salted.groupBy(col("subj"))
-      .agg(sum(col("partialDeg")).as("outDegree"))
+  def materializeNodes(edges: DataFrame): DataFrame =
+    edges.groupBy(col("subj"))
+      .agg(count(lit(1)).as("outDegree"))
       .withColumn("isBlank", col("subj").startsWith("_:"))
-  }
 }

@@ -1562,24 +1562,6 @@ object Multimodal {
     */
   def phashNearDup(hashes: DataFrame, maxHamming: Int = 4, maxBucket: Int = 2000): DataFrame = {
     require(maxHamming <= 7, "the 8-chunk pigeonhole only guarantees hamming <= 7")
-    val withH = hashes.where(col("ok")).select(col("asset_id"), col("phash"))
-    // 3 consumers (hot census + both join sides) — materialize once
-    val chunked0 = withH.select(
-      col("asset_id"), col("phash"),
-      posexplode(array((0 until 8).map(c =>
-        shiftrightunsigned(col("phash"), c * 8).bitwiseAND(255)): _*))
-        .as(Seq("chunk", "value"))
-    ).localCheckpoint(true)
-    val hot = chunked0.groupBy(col("chunk"), col("value"))
-      .agg(count(lit(1)).as("n")).where(col("n") > maxBucket)
-      .select(col("chunk"), col("value"))
-    val chunked = chunked0.join(broadcast(hot), Seq("chunk", "value"), "left_anti")
-    val l = chunked.select(col("chunk"), col("value"), col("asset_id").as("a"), col("phash").as("ha"))
-    val r = chunked.select(col("chunk"), col("value"), col("asset_id").as("b"), col("phash").as("hb"))
-    l.join(r, Seq("chunk", "value"))
-      .where(col("a") < col("b"))
-      .select(col("a"), col("b"), bit_count(expr("ha ^ hb")).as("hamming"))
-      .where(col("hamming") <= maxHamming)
-      .distinct()
+    Dedup.hammingPairs(hashes.where(col("ok")), "asset_id", "phash", chunks = 8, maxHamming, maxBucket)
   }
 }

@@ -98,20 +98,24 @@ object Similarity {
       posexplode(array(bucketCols: _*)).as(Seq("table", "bucket")))
   }
 
-  /** Hot-bucket suppression — a degenerate bucket costs |bucket|^2 join
-    * rows; similar vectors recur in other tables' buckets anyway.
+  /** [[sketch]] buckets after [[Dedup.suppressHot]], ids only. */
+  private def sketchIds(corpus: DataFrame, planes: Int, tables: Int, maxBucket: Int): DataFrame =
+    Dedup.suppressHot(sketch(corpus, planes, tables), Seq("table", "bucket"), maxBucket)
+      .select(col("table"), col("bucket"), col("vec_id"))
+
+  /** The query leg of a bucket join over [[sketchIds]] rows, the id
+    * renamed to `name`. `probeRadius = 1` adds every single sign-bit flip
+    * of the row's own bucket (multi-probe, see [[lshCosine]]): flip masks
+    * are 0 (the exact bucket) plus one per plane, and the table tag lives
+    * in bits 40+, so a flip below bit 40 never crosses tables.
     */
-  private def suppressHot(sketched: DataFrame, maxBucket: Int): DataFrame = {
-    // the sketch aggregation feeds the hot census AND (via the anti-
-    // join) both sides of the candidate join — materialize it once
-    // (eager localCheckpoint: reference-tracked blocks, no CacheManager
-    // pinning; same census rationale as Dedup.minhashLsh)
-    val sk = sketched.localCheckpoint(true)
-    val hot = sk.groupBy(col("table"), col("bucket"))
-      .agg(count(lit(1)).as("n")).where(col("n") > maxBucket)
-      .select(col("table"), col("bucket"))
-    sk.join(broadcast(hot), Seq("table", "bucket"), "left_anti")
-  }
+  private def probeLeg(ids: DataFrame, planes: Int, probeRadius: Int, name: String): DataFrame =
+    if (probeRadius == 0) ids.select(col("table"), col("bucket"), col("vec_id").as(name))
+    else {
+      val flips = lit(0L) +: (0 until planes).map(i => lit(1L << i))
+      ids.select(col("table"), explode(array(flips: _*)).as("flip"), col("bucket"), col("vec_id"))
+        .select(col("table"), col("bucket").bitwiseXOR(col("flip")).as("bucket"), col("vec_id").as(name))
+    }
 
   /** Quantized-cosine scoring of id pairs against a vector corpus via
     * the codegen'd [[graft.functions.IntVecDotNorms]] kernel: vectors
@@ -139,7 +143,7 @@ object Similarity {
     // stream then flows through two hash joins and the codegen kernel
     // without an exchange. The cap is conservative because rows carry
     // the packed array payload; above it both joins fall back to the r5
-    // shuffle plan. (The same shape as Dedup.md5JaccardVerify's r6 note.)
+    // shuffle plan. (The same shape as Dedup.overlaps's b-leg gate.)
     val packed = broadcastIfSmall(packed0, 200000L)
     pairs
       .join(packed.select(col("vec_id").as(l), col("qv").as("ql")), Seq(l))
@@ -172,20 +176,8 @@ object Similarity {
     require(probeRadius == 0 || probeRadius == 1, s"probeRadius must be 0 or 1, got $probeRadius")
     // id-only bucket join + pair dedup BEFORE the exact re-rank; the
     // re-rank is the relational quantized-cosine kernel
-    val sketched = suppressHot(sketch(corpus, planes, tables), maxBucket)
-    val ids = sketched.select(col("table"), col("bucket"), col("vec_id"))
-    val l =
-      if (probeRadius == 0) ids.select(col("table"), col("bucket"), col("vec_id").as("query_id"))
-      else {
-        // flip masks: 0 (the exact bucket) + one per plane; the table
-        // tag lives in bits 40+ so single-bit flips below bit 40 can
-        // never cross tables
-        val flips = lit(0L) +: (0 until planes).map(i => lit(1L << i))
-        ids.select(col("table"),
-          explode(array(flips: _*)).as("flip"), col("bucket"), col("vec_id"))
-          .select(col("table"), col("bucket").bitwiseXOR(col("flip")).as("bucket"),
-            col("vec_id").as("query_id"))
-      }
+    val ids = sketchIds(corpus, planes, tables, maxBucket)
+    val l = probeLeg(ids, planes, probeRadius, "query_id")
     val r = ids.select(col("table"), col("bucket"), col("vec_id").as("corpus_id"))
     val candIds = l.join(r, Seq("table", "bucket"))
       .where(col("query_id") =!= col("corpus_id"))
@@ -325,18 +317,9 @@ object Similarity {
         when(col(s"p${t * planes + pp}") >= 0, lit(1L << pp)).otherwise(lit(0L))
       }.reduce(_ + _) + lit(t.toLong * 4096L)
     }
-    val banded0 = proj.select(col("vec_id"),
-      posexplode(array(bucketCols: _*)).as(Seq("tbl", "bucket")))
-      .localCheckpoint(true) // 3 consumers — see suppressHot rationale
-    val hot = banded0.groupBy(col("tbl"), col("bucket"))
-      .agg(count(lit(1)).as("n")).where(col("n") > maxBucket)
-      .select(col("tbl"), col("bucket"))
-    val banded = banded0.join(broadcast(hot), Seq("tbl", "bucket"), "left_anti")
-    val candIds = banded.select(col("tbl"), col("bucket"), col("vec_id").as("a"))
-      .join(banded.select(col("tbl"), col("bucket"), col("vec_id").as("b")), Seq("tbl", "bucket"))
-      .where(col("a") < col("b"))
-      .select(col("a"), col("b"))
-      .distinct()
+    val banded = Dedup.suppressHot(proj.select(col("vec_id"),
+      posexplode(array(bucketCols: _*)).as(Seq("tbl", "bucket"))), Seq("tbl", "bucket"), maxBucket)
+    val candIds = Dedup.bucketPairs(banded, Seq("tbl", "bucket"), "vec_id")
     val dnn = candIds
       .join(quant.select(col("vec_id").as("a"), col("qv").as("qa")), Seq("a"))
       .join(quant.select(col("vec_id").as("b"), col("qv").as("qb")), Seq("b"))
@@ -613,16 +596,8 @@ object Similarity {
     // ids through the bucket join, distinct pairs, then the relational
     // quantized-cosine verify (array-lambda cosine is interpreted,
     // ~50us/pair — see relationalCosine)
-    val sketched = suppressHot(sketch(corpus, planes, tables), maxBucket)
-    val ids = sketched.select(col("table"), col("bucket"), col("vec_id"))
-    val l =
-      if (probeRadius == 0) ids.select(col("table"), col("bucket"), col("vec_id").as("a"))
-      else {
-        val flips = lit(0L) +: (0 until planes).map(i => lit(1L << i))
-        ids.select(col("table"), explode(array(flips: _*)).as("flip"), col("bucket"), col("vec_id"))
-          .select(col("table"), col("bucket").bitwiseXOR(col("flip")).as("bucket"),
-            col("vec_id").as("a"))
-      }
+    val ids = sketchIds(corpus, planes, tables, maxBucket)
+    val l = probeLeg(ids, planes, probeRadius, "a")
     val r = ids.select(col("table"), col("bucket"), col("vec_id").as("b"))
     val candIds = l.join(r, Seq("table", "bucket"))
       .where(col("a") < col("b"))

@@ -112,7 +112,7 @@ class KgPipelineDagSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   // measured on these pages (stable over repeated runs)
-  private val RunJobBudget = 24
+  private val RunJobBudget = 23
 
   test("one run over a fresh root stays within its Spark-job budget") {
     val ds = pageTable(2)
