@@ -16,6 +16,119 @@ object SparkEntry {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
+  /** The d<id> IRI of a document: the subject of its triples in the
+    * synthetic knowledge graph. */
+  private val dId = concat(lit("d"), col("doc_id"))
+
+  /** One recurring lane of the synthetic knowledge graph that the
+    * SPARQL/RDF family queries: its Spark frame over `documents` and its
+    * DuckDB SELECT, side by side so the two engines read one definition.
+    * `sql` is the lane as the first SELECT of a CTE, with the s/p/o
+    * column aliases; `bare` drops them for the later UNION ALL lanes.
+    */
+  private final case class Lane(frame: DataFrame => DataFrame, sql: String) {
+    def apply(docs: DataFrame): DataFrame = frame(docs)
+    def bare: String = sql.replaceAll(" AS [spo](?=[,\\s]|$)", "")
+  }
+
+  private object Lane {
+    /** d<id> name n<id%100>, over all docs. */
+    val name = Lane(
+      _.select(dId.as("s"), lit("name").as("p"),
+        concat(lit("n"), pmod(col("doc_id"), lit(100))).as("o")),
+      """  SELECT 'd' || CAST(doc_id AS VARCHAR) AS s, 'name' AS p,
+        |         'n' || CAST(doc_id % 100 AS VARCHAR) AS o FROM documents""".stripMargin)
+    /** d<id> worksFor o<id%16>, over all docs. */
+    val worksForAll = Lane(
+      _.select(dId.as("s"), lit("worksFor").as("p"),
+        concat(lit("o"), pmod(col("doc_id"), lit(16))).as("o")),
+      """  SELECT 'd' || CAST(doc_id AS VARCHAR) AS s, 'worksFor' AS p,
+        |         'o' || CAST(doc_id % 16 AS VARCHAR) AS o FROM documents""".stripMargin)
+    /** The same edges over even docs only: the employed half, whose
+      * employers are the even orgs. */
+    val worksFor = Lane(docs => worksForAll(docs.where(pmod(col("doc_id"), lit(2)) === 0)),
+      worksForAll.sql + " WHERE doc_id % 2 = 0")
+    /** d<id> age "<id%90>"^^xsd:integer, over all docs. */
+    val age = Lane(
+      _.select(dId.as("s"), lit("age").as("p"),
+        concat(lit("\""), pmod(col("doc_id"), lit(90)), lit("\"^^xsd:integer")).as("o")),
+      """  SELECT 'd' || CAST(doc_id AS VARCHAR) AS s, 'age' AS p,
+        |         '"' || CAST(doc_id % 90 AS VARCHAR) || '"^^xsd:integer' AS o FROM documents""".stripMargin)
+    /** d<id> lang <lang>, over all docs. */
+    val lang = Lane(
+      _.select(dId.as("s"), lit("lang").as("p"), col("lang").as("o")),
+      "  SELECT 'd' || CAST(doc_id AS VARCHAR) AS s, 'lang' AS p, lang AS o FROM documents")
+    /** d<id> memberOf o<id%12>, over docs with id % 3 = 0. */
+    val memberOf = Lane(
+      _.where(pmod(col("doc_id"), lit(3)) === 0).select(dId.as("s"), lit("memberOf").as("p"),
+        concat(lit("o"), pmod(col("doc_id"), lit(12))).as("o")),
+      """  SELECT 'd' || CAST(doc_id AS VARCHAR) AS s, 'memberOf' AS p,
+        |         'o' || CAST(doc_id % 12 AS VARCHAR) AS o FROM documents WHERE doc_id % 3 = 0""".stripMargin)
+    /** d<id> topic <source>, over all docs: noise for predicate pushdown. */
+    val topic = Lane(
+      _.select(dId.as("s"), lit("topic").as("p"), col("source").as("o")),
+      "  SELECT 'd' || CAST(doc_id AS VARCHAR) AS s, 'topic' AS p, source AS o FROM documents")
+    /** d<id> reportsTo d<id div 3>, over docs with id > 0. */
+    val reportsTo = Lane(
+      _.where(col("doc_id") > 0).select(dId.as("s"), lit("reportsTo").as("p"),
+        concat(lit("d"), expr("doc_id div 3")).as("o")),
+      """  SELECT 'd' || CAST(doc_id AS VARCHAR) AS s, 'reportsTo' AS p,
+        |         'd' || CAST(doc_id // 3 AS VARCHAR) AS o FROM documents WHERE doc_id > 0""".stripMargin)
+    private val eId = concat(lit("e"), pmod(col("doc_id"), lit(50)))
+    /** e<id%50> color v<(31 id)%3>: conflicting values for KG fusion. */
+    val colors = Lane(
+      _.select(eId.as("s"), lit("color").as("p"),
+        concat(lit("v"), pmod(col("doc_id") * 31, lit(3))).as("o")),
+      """  SELECT 'e' || CAST(doc_id % 50 AS VARCHAR) AS s, 'color' AS p,
+        |         'v' || CAST((doc_id * 31) % 3 AS VARCHAR) AS o FROM documents""".stripMargin)
+    /** e<id%50> shape w<(17 id)%4>. */
+    val shapes = Lane(
+      _.select(eId.as("s"), lit("shape").as("p"),
+        concat(lit("w"), pmod(col("doc_id") * 17, lit(4))).as("o")),
+      """  SELECT 'e' || CAST(doc_id % 50 AS VARCHAR) AS s, 'shape' AS p,
+        |         'w' || CAST((doc_id * 17) % 4 AS VARCHAR) AS o FROM documents""".stripMargin)
+    /** o<i> label L<i>, for from <= i < until: orgs past `until` are
+      * unlabeled. */
+    def labels(until: Int, from: Int = 0): Lane = Lane(
+      _.sparkSession.range(from, until).select(concat(lit("o"), col("id")).as("s"),
+        lit("label").as("p"), concat(lit("L"), col("id")).as("o")),
+      s"""  SELECT 'o' || CAST(i AS VARCHAR) AS s, 'label' AS p, 'L' || CAST(i AS VARCHAR) AS o
+         |  FROM range($from, $until) t(i)""".stripMargin)
+    /** o<i> sector s<i%4>, for i < 16. */
+    val sectors = Lane(
+      _.sparkSession.range(0, 16).select(concat(lit("o"), col("id")).as("s"),
+        lit("sector").as("p"), concat(lit("s"), pmod(col("id"), lit(4))).as("o")),
+      """  SELECT 'o' || CAST(i AS VARCHAR) AS s, 'sector' AS p, 's' || CAST(i % 4 AS VARCHAR) AS o
+        |  FROM range(0, 16) t(i)""".stripMargin)
+  }
+
+  /** q128's and q135's per-source named graphs with bnode authors:
+    * each doc's author bnode _:b<id%24> carries a per-doc name, %3-docs
+    * add a knows edge to their own _:k<id> bnode with its own note. */
+  private def bnodeAuthorQuads(docs: DataFrame): DataFrame = {
+    val bId = concat(lit("_:b"), pmod(col("doc_id"), lit(24)))
+    docs.select(col("source").as("g"), dId.as("s"), lit("author").as("p"), bId.as("o"))
+      .unionByName(docs.select(col("source").as("g"), bId.as("s"),
+        lit("name").as("p"), concat(lit("n"), col("doc_id")).as("o")))
+      .unionByName(docs.where(pmod(col("doc_id"), lit(3)) === 0)
+        .select(col("source").as("g"), bId.as("s"), lit("knows").as("p"),
+          concat(lit("_:k"), col("doc_id")).as("o")))
+      .unionByName(docs.where(pmod(col("doc_id"), lit(3)) === 0)
+        .select(col("source").as("g"), concat(lit("_:k"), col("doc_id")).as("s"),
+          lit("note").as("p"), concat(lit("m"), col("doc_id")).as("o")))
+      .unionByName(docs.select(col("source").as("g"), dId.as("s"),
+        lit("lang").as("p"), col("lang").as("o")))
+  }
+
+  /** The union of `lanes` over `docs`, in order. */
+  private def spoOf(docs: DataFrame, lanes: Lane*): DataFrame =
+    lanes.map(_(docs)).reduce(_ unionByName _)
+
+  /** The UNION ALL body of `lanes` for an spo CTE: the first lane names
+    * the s/p/o columns, the later ones are bare. */
+  private def spoSql(lanes: Lane*): String =
+    (lanes.head.sql +: lanes.tail.map(_.bare)).mkString("\n  UNION ALL\n")
+
   /** Flagship: full extraction over the synthetic page corpus. */
   def entry(spark: SparkSession): DataFrame = {
     import spark.implicits._
@@ -290,19 +403,8 @@ object SparkEntry {
     // the label/sector rows survive and the person-subject name lane
     // drops entirely — the semi-join is doing real work
     "q107_describe" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
-      val spo = docs.select(dId.as("s"), lit("name").as("p"),
-          concat(lit("n"), pmod(col("doc_id"), lit(100))).as("o"))
-        .unionByName(docs.where(pmod(col("doc_id"), lit(2)) === 0)
-          .select(dId.as("s"), lit("worksFor").as("p"),
-            concat(lit("o"), pmod(col("doc_id"), lit(16))).as("o")))
-        .unionByName(s.range(0, 12).select(
-          concat(lit("o"), col("id")).as("s"), lit("label").as("p"),
-          concat(lit("L"), col("id")).as("o")))
-        .unionByName(s.range(0, 16).select(
-          concat(lit("o"), col("id")).as("s"), lit("sector").as("p"),
-          concat(lit("s"), pmod(col("id"), lit(4))).as("o")))
+      val spo = spoOf(t(s, d, "documents"), Lane.name, Lane.worksFor, Lane.labels(12),
+        Lane.sectors)
       TripleOps.describe(spo, Seq(("?x", "worksFor", "?org")), "?org")
         .select("s", "p", "o")
     }),
@@ -311,13 +413,7 @@ object SparkEntry {
     // then FILTER selects on the bound expression — both stay inside
     // whole-stage codegen, zero shuffles beyond the BGP join itself
     "q108_bind_filter" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
-      val spo = docs.select(dId.as("s"), lit("name").as("p"),
-          concat(lit("n"), pmod(col("doc_id"), lit(100))).as("o"))
-        .unionByName(docs.where(pmod(col("doc_id"), lit(2)) === 0)
-          .select(dId.as("s"), lit("worksFor").as("p"),
-            concat(lit("o"), pmod(col("doc_id"), lit(16))).as("o")))
+      val spo = spoOf(t(s, d, "documents"), Lane.name, Lane.worksFor)
       val sols = TripleOps.bgp(spo,
         Seq(("?x", "name", "?name"), ("?x", "worksFor", "?org")))
       val bound = TripleOps.bind(
@@ -332,14 +428,7 @@ object SparkEntry {
     // subqueries exist: aggregate the TB-sized affiliation slice down
     // to org cardinality FIRST, then join the small result
     "q109_subquery" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
-      val spo = docs.where(pmod(col("doc_id"), lit(2)) === 0)
-          .select(dId.as("s"), lit("worksFor").as("p"),
-            concat(lit("o"), pmod(col("doc_id"), lit(16))).as("o"))
-        .unionByName(s.range(0, 12).select(
-          concat(lit("o"), col("id")).as("s"), lit("label").as("p"),
-          concat(lit("L"), col("id")).as("o")))
+      val spo = spoOf(t(s, d, "documents"), Lane.worksFor, Lane.labels(12))
       val inner = TripleOps.bgp(spo, Seq(("?x", "worksFor", "?org")))
         .groupBy(col("org")).agg(count(lit(1)).as("n"))
       TripleOps.bgp(spo, Seq(("?org", "label", "?lbl")))
@@ -352,13 +441,7 @@ object SparkEntry {
     // dedup to the pair set; the self-pairs the round trip always
     // produces are FILTERed off, the spec's `?x != ?y` idiom
     "q110_path_seq" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
-      val spo = docs.where(col("doc_id") > 0)
-          .select(dId.as("s"), lit("reportsTo").as("p"),
-            concat(lit("d"), expr("doc_id div 3")).as("o"))
-        .unionByName(docs.select(dId.as("s"), lit("name").as("p"),
-          concat(lit("n"), pmod(col("doc_id"), lit(100))).as("o")))
+      val spo = spoOf(t(s, d, "documents"), Lane.reportsTo, Lane.name)
       TripleOps.pathSteps(spo, Seq(("reportsTo", false), ("reportsTo", true)))
         .where(col("src") =!= col("dst"))
         .select(col("src"), col("dst"))
@@ -370,7 +453,6 @@ object SparkEntry {
     // query a per-shard extraction corpus answers
     "q111_graph_quads" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
       val quads = docs.select(col("source").as("g"), dId.as("s"),
           lit("lang").as("p"), col("lang").as("o"))
         .unionByName(docs.select(
@@ -392,15 +474,13 @@ object SparkEntry {
     "q112_owl_entail" -> ((s, d) => {
       import s.implicits._
       val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
       val spo = docs.where(col("doc_id") > 0)
           .select(dId.as("s"), lit("partOf").as("p"),
             concat(lit("d"), expr("doc_id div 2")).as("o"))
         .unionByName(docs.where(col("doc_id") > 0 && pmod(col("doc_id"), lit(11)) === 0)
           .select(concat(lit("d"), expr("doc_id div 2")).as("s"),
             lit("hasPart").as("p"), dId.as("o")))
-        .unionByName(docs.select(dId.as("s"), lit("name").as("p"),
-          concat(lit("n"), pmod(col("doc_id"), lit(100))).as("o")))
+        .unionByName(Lane.name(docs))
       val inv = Seq(("partOf", "hasPart")).toDF("p", "q")
       // intermediate stages defer the graph-set dedup to the final
       // inverse pass (r6): one full-graph distinct instead of three —
@@ -415,16 +495,7 @@ object SparkEntry {
     // delete via (s,p,o) anti-join, insert via construct, set-dedup;
     // edges to unlabeled orgs (o12/o14) and the name lane survive
     "q113_sparql_update" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
-      val spo = docs.select(dId.as("s"), lit("name").as("p"),
-          concat(lit("n"), pmod(col("doc_id"), lit(100))).as("o"))
-        .unionByName(docs.where(pmod(col("doc_id"), lit(2)) === 0)
-          .select(dId.as("s"), lit("worksFor").as("p"),
-            concat(lit("o"), pmod(col("doc_id"), lit(16))).as("o")))
-        .unionByName(s.range(0, 12).select(
-          concat(lit("o"), col("id")).as("s"), lit("label").as("p"),
-          concat(lit("L"), col("id")).as("o")))
+      val spo = spoOf(t(s, d, "documents"), Lane.name, Lane.worksFor, Lane.labels(12))
       TripleOps.deleteInsert(spo,
         wherePatterns = Seq(("?x", "worksFor", "?org"), ("?org", "label", "?lbl")),
         deleteTemplate = Seq(("?x", "worksFor", "?org")),
@@ -444,20 +515,14 @@ object SparkEntry {
     // a pure filter, no joins
     "q115_owl_constraints" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
-      val spo = docs.where(pmod(col("doc_id"), lit(2)) === 0)
-          .select(dId.as("s"), lit("worksFor").as("p"),
-            concat(lit("o"), pmod(col("doc_id"), lit(16))).as("o"))
+      val spo = Lane.worksFor(docs)
         .unionByName(docs
           .where(pmod(col("doc_id"), lit(21)) === 0 && pmod(col("doc_id"), lit(2)) === 0)
           .select(dId.as("s"), lit("worksFor").as("p"), lit("oX").as("o")))
-        .unionByName(docs.where(col("doc_id") > 0)
-          .select(dId.as("s"), lit("reportsTo").as("p"),
-            concat(lit("d"), expr("doc_id div 3")).as("o")))
+        .unionByName(Lane.reportsTo(docs))
         .unionByName(docs.where(pmod(col("doc_id"), lit(13)) === 0)
           .select(dId.as("s"), lit("reportsTo").as("p"), dId.as("o")))
-        .unionByName(docs.select(dId.as("s"), lit("name").as("p"),
-          concat(lit("n"), pmod(col("doc_id"), lit(100))).as("o")))
+        .unionByName(Lane.name(docs))
       TripleOps.owlConstraintViolations(spo,
         functional = Seq("worksFor"), irreflexive = Seq("reportsTo"))
     }),
@@ -469,17 +534,11 @@ object SparkEntry {
     // sols(base)), an independent formulation of the telescoped sum
     "q116_bgp_incremental" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
-      val work = docs.select(dId.as("s"), lit("worksFor").as("p"),
-        concat(lit("o"), pmod(col("doc_id"), lit(16))).as("o"))
+      val work = Lane.worksForAll(docs)
       val base = work.where(pmod(col("doc_id"), lit(2)) === 0)
-        .unionByName(s.range(0, 12).select(
-          concat(lit("o"), col("id")).as("s"), lit("label").as("p"),
-          concat(lit("L"), col("id")).as("o")))
+        .unionByName(Lane.labels(12)(docs))
       val added = work.where(pmod(col("doc_id"), lit(3)) === 0)
-        .unionByName(s.range(12, 14).select(
-          concat(lit("o"), col("id")).as("s"), lit("label").as("p"),
-          concat(lit("L"), col("id")).as("o")))
+        .unionByName(Lane.labels(14, from = 12)(docs))
       TripleOps.bgpDelta(base, added,
         Seq(("?x", "worksFor", "?org"), ("?org", "label", "?lbl")))
         .select(col("x"), col("org"), col("lbl"))
@@ -492,12 +551,7 @@ object SparkEntry {
     // traversal of a heterogeneous web KG
     "q119_path_negated" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
-      val spo = docs.select(dId.as("s"), lit("name").as("p"),
-          concat(lit("n"), pmod(col("doc_id"), lit(100))).as("o"))
-        .unionByName(docs.where(pmod(col("doc_id"), lit(2)) === 0)
-          .select(dId.as("s"), lit("worksFor").as("p"),
-            concat(lit("o"), pmod(col("doc_id"), lit(16))).as("o")))
+      val spo = spoOf(docs, Lane.name, Lane.worksFor)
         .unionByName(docs.where(pmod(col("doc_id"), lit(7)) === 0 && col("doc_id") > 0)
           .select(dId.as("s"), lit("mentorOf").as("p"),
             concat(lit("d"), expr("doc_id div 7")).as("o")))
@@ -512,17 +566,11 @@ object SparkEntry {
     // DEFINITION (sols(base) EXCEPT sols(base ∖ removed))
     "q118_bgp_retract" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
-      val work = docs.select(dId.as("s"), lit("worksFor").as("p"),
-        concat(lit("o"), pmod(col("doc_id"), lit(16))).as("o"))
+      val work = Lane.worksForAll(docs)
       val base = work.where(pmod(col("doc_id"), lit(2)) === 0)
-        .unionByName(s.range(0, 14).select(
-          concat(lit("o"), col("id")).as("s"), lit("label").as("p"),
-          concat(lit("L"), col("id")).as("o")))
+        .unionByName(Lane.labels(14)(docs))
       val removed = work.where(pmod(col("doc_id"), lit(5)) === 0)
-        .unionByName(s.range(12, 13).select(
-          concat(lit("o"), col("id")).as("s"), lit("label").as("p"),
-          concat(lit("L"), col("id")).as("o")))
+        .unionByName(Lane.labels(13, from = 12)(docs))
       TripleOps.bgpDeltaRetract(base, removed,
         Seq(("?x", "worksFor", "?org"), ("?org", "label", "?lbl")))
         .select(col("x"), col("org"), col("lbl"))
@@ -535,18 +583,14 @@ object SparkEntry {
     // (integer lexical forms both engines)
     "q125_typed_literals" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
-      val spo = docs.select(dId.as("s"), lit("age").as("p"),
-          concat(lit("\""), pmod(col("doc_id"), lit(90)), lit("\"^^xsd:integer")).as("o"))
+      val spo = Lane.age(docs)
         .unionByName(docs.select(dId.as("s"), lit("label").as("p"),
           concat(lit("\"name"), pmod(col("doc_id"), lit(100)),
             when(pmod(col("doc_id"), lit(2)) === 0, lit("\"@en"))
               .otherwise(lit("\"@de"))).as("o")))
         .unionByName(docs.select(dId.as("s"), lit("note").as("p"),
           concat(lit("\"plain"), pmod(col("doc_id"), lit(10)), lit("\"")).as("o")))
-        .unionByName(docs.where(pmod(col("doc_id"), lit(2)) === 0)
-          .select(dId.as("s"), lit("worksFor").as("p"),
-            concat(lit("o"), pmod(col("doc_id"), lit(16))).as("o")))
+        .unionByName(Lane.worksFor(docs))
       val parsed = spo.select(Seq(col("s"), col("p")) ++ TripleOps.termColumns(col("o")): _*)
       parsed.where(col("kind") === "literal" &&
           ((col("dt") === "xsd:integer" && col("lex").cast("long") > 50) ||
@@ -558,14 +602,13 @@ object SparkEntry {
     // is spec-pinned — the oracle replicates the mangle directly
     "q126_skolemize" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
       val spo = docs.where(pmod(col("doc_id"), lit(3)) === 0)
           .select(dId.as("s"), lit("author").as("p"),
             concat(lit("_:b"), pmod(col("doc_id"), lit(50))).as("o"))
         .unionByName(docs.where(pmod(col("doc_id"), lit(3)) === 0)
           .select(concat(lit("_:b"), pmod(col("doc_id"), lit(50))).as("s"),
             lit("name").as("p"), concat(lit("n"), pmod(col("doc_id"), lit(50))).as("o")))
-        .unionByName(docs.select(dId.as("s"), lit("lang").as("p"), col("lang").as("o")))
+        .unionByName(Lane.lang(docs))
       TripleOps.skolemize(spo.distinct()).select("s", "p", "o")
     }),
     // canonical per-graph digests over the per-source named graphs:
@@ -574,7 +617,6 @@ object SparkEntry {
     // skolemize first, the spec's portability prescription)
     "q127_graph_digest" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
       val quads = docs.select(col("source").as("g"), dId.as("s"),
           lit("lang").as("p"), col("lang").as("o"))
         .unionByName(docs.select(col("source").as("g"), dId.as("s"),
@@ -590,21 +632,7 @@ object SparkEntry {
     // only line would be '_:z knows _:a', indistinguishable from any
     // other dangling target in the graph (measured: 20 collisions)
     "q128_canonical_bnodes" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
-      val bId = concat(lit("_:b"), pmod(col("doc_id"), lit(24)))
-      val quads = docs.select(col("source").as("g"), dId.as("s"),
-          lit("author").as("p"), bId.as("o"))
-        .unionByName(docs.select(col("source").as("g"), bId.as("s"),
-          lit("name").as("p"), concat(lit("n"), col("doc_id")).as("o")))
-        .unionByName(docs.where(pmod(col("doc_id"), lit(3)) === 0)
-          .select(col("source").as("g"), bId.as("s"), lit("knows").as("p"),
-            concat(lit("_:k"), col("doc_id")).as("o")))
-        .unionByName(docs.where(pmod(col("doc_id"), lit(3)) === 0)
-          .select(col("source").as("g"), concat(lit("_:k"), col("doc_id")).as("s"),
-            lit("note").as("p"), concat(lit("m"), col("doc_id")).as("o")))
-        .unionByName(docs.select(col("source").as("g"), dId.as("s"),
-          lit("lang").as("p"), col("lang").as("o")))
+      val quads = bnodeAuthorQuads(t(s, d, "documents"))
       TripleOps.canonicalBNodeQuads(quads).select("g", "s", "p", "o")
     }),
     // SPARQL numeric aggregates over TYPED literals — the SUM / MAX /
@@ -616,13 +644,7 @@ object SparkEntry {
     // the q68 regime, no FP); SAMPLE's spec-arbitrary pick is pinned
     // to MIN (the q105 GROUP_CONCAT determinism rule)
     "q129_bgp_num_aggregates" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
-      val spo = docs.select(dId.as("s"), lit("age").as("p"),
-          concat(lit("\""), pmod(col("doc_id"), lit(90)), lit("\"^^xsd:integer")).as("o"))
-        .unionByName(docs.where(pmod(col("doc_id"), lit(2)) === 0)
-          .select(dId.as("s"), lit("worksFor").as("p"),
-            concat(lit("o"), pmod(col("doc_id"), lit(16))).as("o")))
+      val spo = spoOf(t(s, d, "documents"), Lane.age, Lane.worksFor)
       val sols = TripleOps.bgp(spo, Seq(("?x", "worksFor", "?org"), ("?x", "age", "?a")))
       val typed = sols.select(col("org") +: TripleOps.termColumns(col("a")): _*)
         .where(col("kind") === "literal" && col("dt") === "xsd:integer")
@@ -643,7 +665,6 @@ object SparkEntry {
     // the oracle anyway
     "q131_sparql_strfuncs" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
       val spo = docs.select(dId.as("s"), lit("label").as("p"),
         concat(lit("\"name"), pmod(col("doc_id"), lit(100)),
           when(pmod(col("doc_id"), lit(2)) === 0, lit("\"@en"))
@@ -664,8 +685,7 @@ object SparkEntry {
     // the spec pins applyPatch(prev, diff) == next
     "q132_graph_diff" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
-      val prev = docs.select(dId.as("s"), lit("lang").as("p"), col("lang").as("o"))
+      val prev = Lane.lang(docs)
         .unionByName(docs.where(pmod(col("doc_id"), lit(2)) === 0)
           .select(dId.as("s"), lit("bucket").as("p"),
             concat(lit("b"), pmod(col("doc_id"), lit(7))).as("o")))
@@ -682,14 +702,7 @@ object SparkEntry {
     // integer multiplicative stepping picks the corrupt index, and
     // corruptions colliding with true positives anti-join away
     "q133_kg_negatives" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
-      val edges = docs.where(pmod(col("doc_id"), lit(2)) === 0)
-          .select(dId.as("h"), lit("worksFor").as("r"),
-            concat(lit("o"), pmod(col("doc_id"), lit(16))).as("t"))
-        .unionByName(docs.where(pmod(col("doc_id"), lit(3)) === 0)
-          .select(dId.as("h"), lit("memberOf").as("r"),
-            concat(lit("o"), pmod(col("doc_id"), lit(12))).as("t")))
+      val edges = spoOf(t(s, d, "documents"), Lane.worksFor, Lane.memberOf).toDF("h", "r", "t")
       TripleOps.negativeSamples(edges, k = 3)
         .select("h", "r", "t", "neg_k", "t_neg")
     }),
@@ -700,17 +713,13 @@ object SparkEntry {
     // class pair, the q91-closure-compatible semantics
     "q134_schema_summary" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
       val types = docs.select(dId.as("inst"),
           concat(lit("c"), pmod(col("doc_id"), lit(12))).as("cls"))
         .unionByName(docs.where(pmod(col("doc_id"), lit(4)) === 0)
           .select(dId.as("inst"), lit("cSpecial").as("cls")))
         .unionByName(docs.select(concat(lit("o"), pmod(col("doc_id"), lit(16))).as("inst"),
           concat(lit("Org"), pmod(pmod(col("doc_id"), lit(16)), lit(3))).as("cls")))
-      val edges = docs.where(pmod(col("doc_id"), lit(2)) === 0)
-        .select(dId.as("s"), lit("worksFor").as("p"),
-          concat(lit("o"), pmod(col("doc_id"), lit(16))).as("o"))
-      TripleOps.schemaSummary(types, edges)
+      TripleOps.schemaSummary(types, Lane.worksFor(docs))
         .select("src_cls", "p", "dst_cls", "n_edges", "n_src", "n_dst")
     }),
     // the composition the q128 machinery exists FOR: canonical
@@ -718,21 +727,7 @@ object SparkEntry {
     // stamps for bnode-BEARING named graphs (the q128 fixture's quads,
     // so the oracle is q128's pipeline with q127's digest tail)
     "q135_canonical_digest" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
-      val bId = concat(lit("_:b"), pmod(col("doc_id"), lit(24)))
-      val quads = docs.select(col("source").as("g"), dId.as("s"),
-          lit("author").as("p"), bId.as("o"))
-        .unionByName(docs.select(col("source").as("g"), bId.as("s"),
-          lit("name").as("p"), concat(lit("n"), col("doc_id")).as("o")))
-        .unionByName(docs.where(pmod(col("doc_id"), lit(3)) === 0)
-          .select(col("source").as("g"), bId.as("s"), lit("knows").as("p"),
-            concat(lit("_:k"), col("doc_id")).as("o")))
-        .unionByName(docs.where(pmod(col("doc_id"), lit(3)) === 0)
-          .select(col("source").as("g"), concat(lit("_:k"), col("doc_id")).as("s"),
-            lit("note").as("p"), concat(lit("m"), col("doc_id")).as("o")))
-        .unionByName(docs.select(col("source").as("g"), dId.as("s"),
-          lit("lang").as("p"), col("lang").as("o")))
+      val quads = bnodeAuthorQuads(t(s, d, "documents"))
       TripleOps.graphDigest(TripleOps.canonicalBNodeQuads(quads))
         .select(col("g"), col("digest"), col("n_triples"))
     }),
@@ -744,7 +739,6 @@ object SparkEntry {
     // T=3500 (re-asserts back), union-tagged by t_at
     "q136_triple_snapshot" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
       val log = docs.select((lit(1000) + pmod(col("doc_id"), lit(7))).cast("bigint").as("ts"),
           lit("A").as("op"), dId.as("s"), lit("lang").as("p"), col("lang").as("o"))
         .unionByName(docs.where(pmod(col("doc_id"), lit(5)) === 0)
@@ -767,11 +761,7 @@ object SparkEntry {
     // name + 'x' + md5 over the sorted-column binding tuple, which
     // the oracle replays verbatim
     "q137_construct_bnodes" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
-      val spo = docs.where(pmod(col("doc_id"), lit(2)) === 0)
-        .select(dId.as("s"), lit("worksFor").as("p"),
-          concat(lit("o"), pmod(col("doc_id"), lit(16))).as("o"))
+      val spo = Lane.worksFor(t(s, d, "documents"))
       val sols = TripleOps.bgp(spo, Seq(("?x", "worksFor", "?org")))
       TripleOps.construct(sols, Seq(
         ("?x", "hasRole", "_:r"), ("_:r", "roleIn", "?org"), ("_:r", "type", "Role")))
@@ -784,7 +774,7 @@ object SparkEntry {
     // set still yields the header line)
     "q138_results_csv" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val sols = docs.select(concat(lit("d"), col("doc_id")).as("x"),
+      val sols = docs.select(dId.as("x"),
         concat(lit("v,"), pmod(col("doc_id"), lit(10))).as("a"),
         concat(lit("q\""), pmod(col("doc_id"), lit(7))).as("b"),
         col("lang").as("c"))
@@ -800,14 +790,12 @@ object SparkEntry {
     // the genuinely-new delta's groups
     "q139_schema_summary_delta" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
       val oId = concat(lit("o"), pmod(col("doc_id"), lit(16)))
       val types = docs.select(dId.as("inst"),
           concat(lit("c"), pmod(col("doc_id"), lit(12))).as("cls"))
         .unionByName(docs.select(oId.as("inst"),
           concat(lit("Org"), pmod(pmod(col("doc_id"), lit(16)), lit(3))).as("cls")))
-      val base = docs.where(pmod(col("doc_id"), lit(2)) === 0)
-        .select(dId.as("s"), lit("worksFor").as("p"), oId.as("o"))
+      val base = Lane.worksFor(docs)
       val added = docs.where(pmod(col("doc_id"), lit(6)) === 0)
           .select(dId.as("s"), lit("fundedBy").as("p"), oId.as("o"))
         .unionByName(docs.where(pmod(col("doc_id"), lit(4)) === 0)
@@ -823,17 +811,13 @@ object SparkEntry {
     // proj(sols(base∖removed))
     "q140_bgp_retract_projected" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
-      val oId = concat(lit("o"), pmod(col("doc_id"), lit(16)))
-      val base = docs.select(dId.as("s"), lit("worksFor").as("p"), oId.as("o"))
+      val base = Lane.worksForAll(docs)
         .unionByName(docs.where(pmod(col("doc_id"), lit(4)) === 0)
           .select(dId.as("s"), lit("worksFor").as("p"), lit("oX").as("o")))
-        .unionByName(s.range(16).select(concat(lit("o"), col("id")).as("s"),
-          lit("label").as("p"), concat(lit("L"), col("id")).as("o")))
+        .unionByName(Lane.labels(16)(docs))
         .unionByName(s.range(1).select(lit("oX").as("s"),
           lit("label").as("p"), lit("LX").as("o")))
-      val removed = s.range(8).select(concat(lit("o"), col("id")).as("s"),
-        lit("label").as("p"), concat(lit("L"), col("id")).as("o"))
+      val removed = Lane.labels(8)(docs)
       TripleOps.bgpDeltaRetractProjected(base, removed,
         Seq(("?x", "worksFor", "?org"), ("?org", "label", "?lbl")), Seq("?x"))
         .select("x")
@@ -854,13 +838,13 @@ object SparkEntry {
         concat(lit("e"), pmod(col("doc_id") + col("i"), lit(7))).as("o"))
       val rests = cells.select(cell(col("i")).as("s"), lit("rest").as("p"),
         when(col("i") < col("lm1"), cell(col("i") + 1)).otherwise(lit("nil")).as("o"))
-      val entries = docs.select(concat(lit("d"), col("doc_id")).as("s"),
+      val entries = docs.select(dId.as("s"),
           lit("keywords").as("p"), cell(lit(0)).as("o"))
         .unionByName(docs.where(pmod(col("doc_id"), lit(10)) === 0 && lm1 >= 1)
-          .select(concat(lit("d"), col("doc_id")).as("s"),
+          .select(dId.as("s"),
             lit("top2").as("p"), cell(lit(1)).as("o")))
         .unionByName(docs.where(pmod(col("doc_id"), lit(5)) === 0)
-          .select(concat(lit("d"), col("doc_id")).as("s"),
+          .select(dId.as("s"),
             lit("alsoTags").as("p"), lit("nil").as("o")))
       TripleOps.rdfListUnroll(firsts.unionByName(rests).unionByName(entries))
         .select("s", "p", "idx", "elem")
@@ -917,7 +901,7 @@ object SparkEntry {
       val pred = when(pmod(col("doc_id"), lit(51)) === 1,
         pmod(col("doc_id") * 31, lit(17))).otherwise(gold)
       Curation.pairwiseErMetrics(docs.select(
-        concat(lit("d"), col("doc_id")).as("id"),
+        dId.as("id"),
         concat(lit("p"), pred).as("pred"),
         concat(lit("g"), gold).as("gold")))
     }),
@@ -987,7 +971,6 @@ object SparkEntry {
     // own residue class, conforming docs stay silent
     "q180_shacl_pairs" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
       val m = pmod(col("doc_id"), lit(50))
       val spo = docs.select(dId.as("s"), lit("alias_a").as("p"),
           concat(lit("\"a"), pmod(col("doc_id"), lit(20)), lit("\"")).as("o"))
@@ -1030,7 +1013,6 @@ object SparkEntry {
     "q181_owl_restrictions" -> ((s, d) => {
       import s.implicits._
       val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
       val spo = docs.where(pmod(col("doc_id"), lit(10)) === 0)
           .select(dId.as("s"), lit("rdf:type").as("p"), lit("VIP").as("o"))
         .unionByName(docs.where(pmod(col("doc_id"), lit(10)) === 5)
@@ -1060,7 +1042,6 @@ object SparkEntry {
     // the oracle restates presence as pure residue CASE arithmetic
     "q182_shacl_logical" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
       val spo = docs.select(dId.as("s"), lit("name").as("p"),
           concat(lit("\"n"), pmod(col("doc_id"), lit(30)), lit("\"")).as("o"))
         .unionByName(docs.where(pmod(col("doc_id"), lit(3)) === 0)
@@ -1491,7 +1472,6 @@ object SparkEntry {
     // sorted-rows compare hashes
     "q200_canon_ndegree" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
       val bId = concat(lit("_:b"), col("doc_id"))
       val srcs = docs.select(col("source").as("g")).distinct()
       val quads = docs.select(col("source").as("g"), dId.as("s"),
@@ -1622,8 +1602,7 @@ object SparkEntry {
     // lane makes n_triples exceed the predicate count for some sets
     "q206_char_sets" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
-      val spo = docs.select(dId.as("s"), lit("lang").as("p"), col("lang").as("o"))
+      val spo = Lane.lang(docs)
         .unionByName(docs.where(pmod(col("doc_id"), lit(2)) === 0)
           .select(dId.as("s"), lit("author").as("p"),
             concat(lit("a"), pmod(col("doc_id"), lit(24))).as("o")))
@@ -1689,10 +1668,9 @@ object SparkEntry {
     // the rlike filter must exclude
     "q170_rdf_star" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
       val org = concat(lit("o"), pmod(col("doc_id"), lit(16)))
       val qt = TripleOps.quoteTriple(dId, lit("worksFor"), org)
-      val spo = docs.select(dId.as("s"), lit("worksFor").as("p"), org.as("o"))
+      val spo = Lane.worksForAll(docs)
         .unionByName(docs.select(qt.as("s"), lit("confidence").as("p"),
           concat(lit("c"), pmod(col("doc_id"), lit(5))).as("o")))
         .unionByName(docs.select(qt.as("s"), lit("source").as("p"),
@@ -1709,7 +1687,7 @@ object SparkEntry {
     "q171_owl_equiv_prop" -> ((s, d) => {
       import s.implicits._
       val docs = t(s, d, "documents")
-      val spo = docs.select(concat(lit("d"), col("doc_id")).as("s"),
+      val spo = docs.select(dId.as("s"),
         concat(lit("p"), pmod(col("doc_id"), lit(6))).as("p"),
         concat(lit("v"), pmod(col("doc_id"), lit(10))).as("o"))
       val equiv = Seq(("p0", "p1"), ("p1", "p2"), ("p3", "p4")).toDF("a", "b")
@@ -1724,9 +1702,7 @@ object SparkEntry {
     // unbound rows
     "q169_exists_unbound" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
-      val spo = docs.select(dId.as("s"), lit("worksFor").as("p"),
-          concat(lit("o"), pmod(col("doc_id"), lit(16))).as("o"))
+      val spo = Lane.worksForAll(docs)
         .unionByName(docs.where(pmod(col("doc_id"), lit(4)) === 0)
           .select(dId.as("s"), lit("mentor").as("p"),
             concat(lit("m"), pmod(col("doc_id"), lit(10))).as("o")))
@@ -1746,9 +1722,7 @@ object SparkEntry {
     // unbound rows (nulls), never poison the aggregate
     "q168_agg_unbound" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
-      val spo = docs.select(dId.as("s"), lit("worksFor").as("p"),
-          concat(lit("o"), pmod(col("doc_id"), lit(16))).as("o"))
+      val spo = Lane.worksForAll(docs)
         .unionByName(docs.where(pmod(col("doc_id"), lit(3)) === 0)
           .select(dId.as("s"), lit("bonus").as("p"),
             pmod(col("doc_id"), lit(500)).cast("string").as("o")))
@@ -1768,9 +1742,7 @@ object SparkEntry {
     "q167_subquery_topk_group" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
       val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
-      val spo = docs.select(dId.as("s"), lit("worksFor").as("p"),
-          concat(lit("o"), pmod(col("doc_id"), lit(16))).as("o"))
+      val spo = Lane.worksForAll(docs)
         .unionByName(docs.select(dId.as("s"), lit("age").as("p"),
           pmod(col("doc_id"), lit(90)).cast("string").as("o")))
       val sols = TripleOps.bgp(spo, Seq(("?x", "worksFor", "?org"), ("?x", "age", "?a")))
@@ -1800,11 +1772,9 @@ object SparkEntry {
     // described subject)
     "q165_describe_cbd" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
       val aB = concat(lit("_:a"), col("doc_id"))
       val gB = concat(lit("_:g"), col("doc_id"))
-      val spo = docs.select(dId.as("s"), lit("worksFor").as("p"),
-          concat(lit("o"), pmod(col("doc_id"), lit(16))).as("o"))
+      val spo = Lane.worksForAll(docs)
         .unionByName(docs.select(dId.as("s"), lit("addr").as("p"), aB.as("o")))
         .unionByName(docs.select(dId.as("s"), lit("link").as("p"),
           concat(lit("http://x/"), pmod(col("doc_id"), lit(11))).as("o")))
@@ -1825,7 +1795,6 @@ object SparkEntry {
     // labels (md5-prefix of solution key + argument)
     "q163_term_constructors" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
       docs.select(dId.as("s"),
         TripleOps.strDt(concat(lit("v"), pmod(col("doc_id"), lit(90))),
           lit("xsd:token")).as("typed"),
@@ -1846,7 +1815,7 @@ object SparkEntry {
     "q164_numeric_funcs" -> ((s, d) => {
       val docs = t(s, d, "documents")
       val a = (pmod(col("doc_id"), lit(201)) - 100).cast("long")
-      docs.select(concat(lit("d"), col("doc_id")).as("s"), a.as("a"))
+      docs.select(dId.as("s"), a.as("a"))
         .select(col("s"), col("a"),
           abs(col("a")).as("abs_a"),
           when(col("a") >= 0, expr("a div 7"))
@@ -1864,13 +1833,9 @@ object SparkEntry {
     // independent of the semi-restrict plan)
     "q162_fusion_delta" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val e = concat(lit("e"), pmod(col("doc_id"), lit(50)))
-      val base = docs.select(e.as("s"), lit("color").as("p"),
-          concat(lit("v"), pmod(col("doc_id") * 31, lit(3))).as("o"))
-        .unionByName(docs.select(e.as("s"), lit("shape").as("p"),
-          concat(lit("w"), pmod(col("doc_id") * 17, lit(4))).as("o")))
+      val base = spoOf(docs, Lane.colors, Lane.shapes)
       val added = docs.where(pmod(col("doc_id"), lit(10)) < 3)
-        .select(e.as("s"), lit("color").as("p"),
+        .select(concat(lit("e"), pmod(col("doc_id"), lit(50))).as("s"), lit("color").as("p"),
           concat(lit("v"), pmod(col("doc_id") * 11, lit(3))).as("o"))
       TripleOps.resolveConflictsDelta(base, added).select("s", "p", "o", "support")
     }),
@@ -1932,7 +1897,6 @@ object SparkEntry {
     // planted violation lanes, each firing on its own residue class
     "q158_shacl_values" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
       val spo = docs.select(dId.as("s"), lit("email").as("p"),
           when(pmod(col("doc_id"), lit(5)) === 0,
             concat(lit("\"bad email "), col("doc_id"), lit("\"")))
@@ -1964,7 +1928,6 @@ object SparkEntry {
     "q159_owl_disjoint" -> ((s, d) => {
       import s.implicits._
       val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
       val types = docs.select(dId.as("inst"),
           concat(lit("c"), pmod(col("doc_id"), lit(6))).as("cls"))
         .unionByName(docs.select(dId.as("inst"),
@@ -1982,7 +1945,7 @@ object SparkEntry {
       val u = concat(lit("http://ex.org/path"), pmod(col("doc_id"), lit(20)),
         lit("/page?x="), pmod(col("doc_id"), lit(7)))
       val tRaw = concat(lit("a b/c"), pmod(col("doc_id"), lit(5)))
-      docs.select(concat(lit("d"), col("doc_id")).as("s"), u.as("u"), tRaw.as("traw"))
+      docs.select(dId.as("s"), u.as("u"), tRaw.as("traw"))
         .select(col("s"),
           when(instr(col("u"), "?") > 0,
             expr("substring(u, 1, instr(u, '?') - 1)")).otherwise(lit("")).as("before"),
@@ -2007,7 +1970,7 @@ object SparkEntry {
         format_string("%02d", pmod(col("doc_id"), lit(60))), lit(":"),
         format_string("%02d", pmod(col("doc_id") * 7, lit(60))),
         when(pmod(col("doc_id"), lit(2)) === 0, lit("Z")).otherwise(lit("+05:30")))
-      docs.select(concat(lit("d"), col("doc_id")).as("s"), lex.as("lex"))
+      docs.select(dId.as("s"), lex.as("lex"))
         .select(col("s"),
           substring(col("lex"), 1, 4).cast("long").as("yr"),
           substring(col("lex"), 6, 2).cast("long").as("mo"),
@@ -2022,12 +1985,7 @@ object SparkEntry {
     // min value on ties (deterministic under any arrival order);
     // duplicate assertion rows are votes by design
     "q156_kg_fusion" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val e = concat(lit("e"), pmod(col("doc_id"), lit(50)))
-      val a = docs.select(e.as("s"), lit("color").as("p"),
-          concat(lit("v"), pmod(col("doc_id") * 31, lit(3))).as("o"))
-        .unionByName(docs.select(e.as("s"), lit("shape").as("p"),
-          concat(lit("w"), pmod(col("doc_id") * 17, lit(4))).as("o")))
+      val a = spoOf(t(s, d, "documents"), Lane.colors, Lane.shapes)
       TripleOps.resolveConflicts(a).select("s", "p", "o", "support")
     }),
     // SPARQL COUNT(DISTINCT ?x) vs COUNT(*): the duplicated solution
@@ -2035,7 +1993,7 @@ object SparkEntry {
     // distinct counts don't
     "q157_agg_distinct" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val sols0 = docs.select(concat(lit("d"), col("doc_id")).as("x"),
+      val sols0 = docs.select(dId.as("x"),
         concat(lit("o"), pmod(col("doc_id"), lit(16))).as("org"),
         concat(lit("l"), pmod(col("doc_id"), lit(5))).as("lg"))
       val sols = sols0.unionByName(sols0)
@@ -2051,7 +2009,6 @@ object SparkEntry {
     // in the same unbound lane
     "q151_optional_filter" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
       val spo = docs.select(dId.as("s"), lit("hasBudget").as("p"),
           pmod(col("doc_id"), lit(100)).cast("string").as("o"))
         .unionByName(docs.where(pmod(col("doc_id"), lit(3)) =!= 0)
@@ -2070,7 +2027,6 @@ object SparkEntry {
     // onto Spark coalesce/when
     "q152_bind_coalesce" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
       val spo = docs.select(dId.as("s"), lit("name").as("p"),
           concat(lit("name"), pmod(col("doc_id"), lit(100))).as("o"))
         .unionByName(docs.where(pmod(col("doc_id"), lit(4)) === 0)
@@ -2090,7 +2046,6 @@ object SparkEntry {
     "q153_values_undef" -> ((s, d) => {
       import s.implicits._
       val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
       val sols = docs.select(dId.as("x"),
         concat(lit("o"), pmod(col("doc_id"), lit(4))).as("org"),
         when(pmod(col("doc_id"), lit(3)) === 0, lit("en"))
@@ -2109,14 +2064,12 @@ object SparkEntry {
     // not 'de') — non-matching lang literals are the only dropped rows
     "q149_term_functions" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
       val spo = docs.select(dId.as("s"), lit("label").as("p"),
           concat(lit("\"name"), pmod(col("doc_id"), lit(100)), lit("\"@"),
             when(pmod(col("doc_id"), lit(3)) === 0, lit("en"))
               .when(pmod(col("doc_id"), lit(3)) === 1, lit("EN-US"))
               .otherwise(lit("de"))).as("o"))
-        .unionByName(docs.select(dId.as("s"), lit("age").as("p"),
-          concat(lit("\""), pmod(col("doc_id"), lit(90)), lit("\"^^xsd:integer")).as("o")))
+        .unionByName(Lane.age(docs))
         .unionByName(docs.select(dId.as("s"), lit("ref").as("p"),
           concat(lit("_:b"), pmod(col("doc_id"), lit(7))).as("o")))
         .unionByName(docs.select(dId.as("s"), lit("link").as("p"),
@@ -2254,7 +2207,6 @@ object SparkEntry {
     // a CONFLICTING second object — must yield nothing (exactly-one)
     "q123_reified" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
       val stId = concat(lit("st"), col("doc_id"))
       val reifDocs = docs.where(pmod(col("doc_id"), lit(4)) === 0)
       val spo = reifDocs.select(stId.as("s"), lit("subject").as("p"), dId.as("o"))
@@ -2277,18 +2229,12 @@ object SparkEntry {
     // cardinalities — the publish-time dataset statistics of a KG
     "q124_void_stats" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
-      val spo = docs.select(dId.as("s"), lit("name").as("p"),
-          concat(lit("n"), pmod(col("doc_id"), lit(100))).as("o"))
-        .unionByName(docs.where(pmod(col("doc_id"), lit(2)) === 0)
-          .select(dId.as("s"), lit("worksFor").as("p"),
-            concat(lit("o"), pmod(col("doc_id"), lit(16))).as("o")))
+      val spo = Lane.name(docs)
+        .unionByName(Lane.worksFor(docs))
         .unionByName(docs.select(dId.as("s"), lit("type").as("p"),
           when(pmod(col("doc_id"), lit(3)) === 0, lit("Person"))
             .otherwise(lit("Org")).as("o")))
-        .unionByName(s.range(0, 16).select(
-          concat(lit("o"), col("id")).as("s"), lit("label").as("p"),
-          concat(lit("L"), col("id")).as("o")))
+        .unionByName(Lane.labels(16)(docs))
       TripleOps.voidPropertyPartition(spo)
         .select(col("p"), col("n_triples"), col("n_subj"), col("n_obj"))
     }),
@@ -2300,15 +2246,13 @@ object SparkEntry {
     // semi-naive rounds (prp-spo2, the OWL RL rule)
     "q121_owl_chain" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
       val spo = docs.where(col("doc_id") > 0)
           .select(dId.as("s"), lit("hasParent").as("p"),
             concat(lit("d"), expr("doc_id div 2")).as("o"))
         .unionByName(docs.where(pmod(col("doc_id"), lit(10)) === 0)
           .select(dId.as("s"), lit("marriedTo").as("p"),
             concat(lit("d"), col("doc_id") + 1).as("o")))
-        .unionByName(docs.select(dId.as("s"), lit("name").as("p"),
-          concat(lit("n"), pmod(col("doc_id"), lit(100))).as("o")))
+        .unionByName(Lane.name(docs))
       TripleOps.chainAxiomEntail(
         TripleOps.symmetricPropEntail(spo, Seq("marriedTo")),
         Seq(("hasParent", "hasParent", "hasGrandparent"),
@@ -2332,7 +2276,6 @@ object SparkEntry {
     // lifecycle of a per-shard extraction corpus
     "q120_graph_mgmt" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
       val quads = docs.select(col("source").as("g"), dId.as("s"),
           lit("lang").as("p"), col("lang").as("o"))
         .unionByName(docs.select(col("source").as("g"), dId.as("s"),
@@ -2371,7 +2314,6 @@ object SparkEntry {
     // publish-gate of a KG construction pipeline
     "q94_shacl_shapes" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
       val spo = docs.where(pmod(col("doc_id"), lit(19)) =!= 0)
         .select(dId.as("s"), lit("name").as("p"),
           concat(lit("n"), pmod(col("doc_id"), lit(100))).as("o"))
@@ -2382,9 +2324,7 @@ object SparkEntry {
           .select(dId.as("s"), lit("worksFor").as("p"),
             when(pmod(col("doc_id"), lit(17)) === 0, lit("ox"))
               .otherwise(concat(lit("o"), pmod(col("doc_id"), lit(16)))).as("o")))
-        .unionByName(s.range(0, 16).select(
-          concat(lit("o"), col("id")).as("s"), lit("label").as("p"),
-          concat(lit("L"), col("id")).as("o")))
+        .unionByName(Lane.labels(16)(docs))
       TripleOps.validateShapes(spo, docs.select(dId.as("s")), Seq(
         TripleOps.PropertyShape("name", minCount = 1L, maxCount = 1L),
         TripleOps.PropertyShape("worksFor", maxCount = 1L, objectMustHave = Some("label"))))
@@ -2394,17 +2334,7 @@ object SparkEntry {
     // label chain) binds as a whole or not at all; nulls surface as
     // '' (the q79 rule: no nullable strings in oracle outputs)
     "q95_bgp_optional" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
-      val spo = docs.select(dId.as("s"), lit("name").as("p"),
-          concat(lit("n"), pmod(col("doc_id"), lit(100))).as("o"))
-        .unionByName(docs.where(pmod(col("doc_id"), lit(2)) === 0)
-          .select(dId.as("s"), lit("worksFor").as("p"),
-            concat(lit("o"), pmod(col("doc_id"), lit(16))).as("o")))
-        .unionByName(s.range(0, 16).select(
-          concat(lit("o"), col("id")).as("s"), lit("label").as("p"),
-          concat(lit("L"), col("id")).as("o")))
-        .unionByName(docs.select(dId.as("s"), lit("topic").as("p"), col("source").as("o")))
+      val spo = spoOf(t(s, d, "documents"), Lane.name, Lane.worksFor, Lane.labels(16), Lane.topic)
       TripleOps.bgpOptional(spo,
         Seq(("?person", "name", "?name")),
         Seq(Seq(("?person", "worksFor", "?org"), ("?org", "label", "?lbl"))))
@@ -2420,15 +2350,13 @@ object SparkEntry {
     // frontier — noise predicates prove the slice pushes down
     "q96_property_path" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
       val spo = docs.where(col("doc_id") > 0)
           .select(dId.as("s"), lit("linksTo").as("p"),
             concat(lit("d"), expr("doc_id div 2")).as("o"))
         .unionByName(docs.where(col("doc_id") > 0 && pmod(col("doc_id"), lit(7)) === 0)
           .select(dId.as("s"), lit("redirectsTo").as("p"),
             concat(lit("d"), expr("doc_id div 3")).as("o")))
-        .unionByName(docs.select(dId.as("s"), lit("name").as("p"),
-          concat(lit("n"), pmod(col("doc_id"), lit(100))).as("o")))
+        .unionByName(Lane.name(docs))
       TripleOps.boundedPath(spo, Seq("linksTo", "redirectsTo"), 3)
         .select(col("src"), col("dst"))
     }),
@@ -2437,16 +2365,7 @@ object SparkEntry {
     // LABELED org — labels stop at o11, so even docs pointing at
     // o12-o15 survive the minus (the group must match as a whole)
     "q97_bgp_minus" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
-      val spo = docs.select(dId.as("s"), lit("name").as("p"),
-          concat(lit("n"), pmod(col("doc_id"), lit(100))).as("o"))
-        .unionByName(docs.where(pmod(col("doc_id"), lit(2)) === 0)
-          .select(dId.as("s"), lit("worksFor").as("p"),
-            concat(lit("o"), pmod(col("doc_id"), lit(16))).as("o")))
-        .unionByName(s.range(0, 12).select(
-          concat(lit("o"), col("id")).as("s"), lit("label").as("p"),
-          concat(lit("L"), col("id")).as("o")))
+      val spo = spoOf(t(s, d, "documents"), Lane.name, Lane.worksFor, Lane.labels(12))
       TripleOps.bgpMinus(spo,
         Seq(("?person", "name", "?name")),
         Seq(Seq(("?person", "worksFor", "?org"), ("?org", "label", "?lbl"))))
@@ -2475,17 +2394,7 @@ object SparkEntry {
     // VALUES pins three orgs (broadcast inline-binding join)
     "q99_bgp_union_values" -> ((s, d) => {
       import s.implicits._
-      val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
-      val spo = docs.where(pmod(col("doc_id"), lit(2)) === 0)
-          .select(dId.as("s"), lit("worksFor").as("p"),
-            concat(lit("o"), pmod(col("doc_id"), lit(16))).as("o"))
-        .unionByName(docs.where(pmod(col("doc_id"), lit(3)) === 0)
-          .select(dId.as("s"), lit("memberOf").as("p"),
-            concat(lit("o"), pmod(col("doc_id"), lit(12))).as("o")))
-        .unionByName(s.range(0, 12).select(
-          concat(lit("o"), col("id")).as("s"), lit("label").as("p"),
-          concat(lit("L"), col("id")).as("o")))
+      val spo = spoOf(t(s, d, "documents"), Lane.worksFor, Lane.memberOf, Lane.labels(12))
       val u = TripleOps.bgpUnion(spo, Seq(
         Seq(("?x", "worksFor", "?org")),
         Seq(("?x", "memberOf", "?org"), ("?org", "label", "?lbl"))))
@@ -2499,14 +2408,7 @@ object SparkEntry {
     // materialize as a graph SET, entries referencing an unbound
     // optional var emit nothing for that solution
     "q100_construct" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
-      val spo = docs.where(pmod(col("doc_id"), lit(2)) === 0)
-          .select(dId.as("s"), lit("worksFor").as("p"),
-            concat(lit("o"), pmod(col("doc_id"), lit(16))).as("o"))
-        .unionByName(s.range(0, 12).select(
-          concat(lit("o"), col("id")).as("s"), lit("label").as("p"),
-          concat(lit("L"), col("id")).as("o")))
+      val spo = spoOf(t(s, d, "documents"), Lane.worksFor, Lane.labels(12))
       val sols = TripleOps.bgpOptional(spo,
         Seq(("?x", "worksFor", "?org")),
         Seq(Seq(("?org", "label", "?lbl"))))
@@ -2522,16 +2424,7 @@ object SparkEntry {
     // so only even docs with doc_id % 16 in 12..15 survive; both
     // polarities are semi/anti joins on the shared ?person variable
     "q102_bgp_exists" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
-      val spo = docs.select(dId.as("s"), lit("name").as("p"),
-          concat(lit("n"), pmod(col("doc_id"), lit(100))).as("o"))
-        .unionByName(docs.where(pmod(col("doc_id"), lit(2)) === 0)
-          .select(dId.as("s"), lit("worksFor").as("p"),
-            concat(lit("o"), pmod(col("doc_id"), lit(16))).as("o")))
-        .unionByName(s.range(0, 12).select(
-          concat(lit("o"), col("id")).as("s"), lit("label").as("p"),
-          concat(lit("L"), col("id")).as("o")))
+      val spo = spoOf(t(s, d, "documents"), Lane.name, Lane.worksFor, Lane.labels(12))
       val base = TripleOps.bgp(spo, Seq(("?person", "name", "?name")))
       val employed = TripleOps.filterExists(base, spo,
         Seq(("?person", "worksFor", "?org")))
@@ -2546,14 +2439,7 @@ object SparkEntry {
     // deterministic), OFFSET 2, LIMIT 5; sort+limit collapses to
     // per-partition top-k heaps, never a global sort
     "q103_bgp_topk" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
-      val spo = docs.where(pmod(col("doc_id"), lit(2)) === 0)
-          .select(dId.as("s"), lit("worksFor").as("p"),
-            concat(lit("o"), pmod(col("doc_id"), lit(16))).as("o"))
-        .unionByName(docs.where(pmod(col("doc_id"), lit(3)) === 0)
-          .select(dId.as("s"), lit("memberOf").as("p"),
-            concat(lit("o"), pmod(col("doc_id"), lit(12))).as("o")))
+      val spo = spoOf(t(s, d, "documents"), Lane.worksFor, Lane.memberOf)
       val sols = TripleOps.bgpUnion(spo, Seq(
         Seq(("?x", "worksFor", "?org")), Seq(("?x", "memberOf", "?org"))))
       val counts = sols.groupBy(col("org")).agg(countDistinct(col("x")).as("n"))
@@ -2567,14 +2453,7 @@ object SparkEntry {
     // output serializes as a comma STRING (the q79 rule: array columns
     // hash-mismatch across engines even when equal)
     "q105_bgp_aggregates" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
-      val spo = docs.where(pmod(col("doc_id"), lit(2)) === 0)
-          .select(dId.as("s"), lit("worksFor").as("p"),
-            concat(lit("o"), pmod(col("doc_id"), lit(16))).as("o"))
-        .unionByName(docs.where(pmod(col("doc_id"), lit(3)) === 0)
-          .select(dId.as("s"), lit("memberOf").as("p"),
-            concat(lit("o"), pmod(col("doc_id"), lit(12))).as("o")))
+      val spo = spoOf(t(s, d, "documents"), Lane.worksFor, Lane.memberOf)
       val sols = TripleOps.bgpUnion(spo, Seq(
         Seq(("?x", "worksFor", "?org")), Seq(("?x", "memberOf", "?org"))))
       sols.groupBy(col("org"))
@@ -2613,10 +2492,10 @@ object SparkEntry {
         concat(lit("c"), col("id")).as("sub"),
         concat(lit("c"), expr("id div 2")).as("sup"))
       val asserted = docs.select(
-        concat(lit("d"), col("doc_id")).as("inst"),
+        dId.as("inst"),
         concat(lit("c"), pmod(col("doc_id"), lit(32))).as("cls"))
       val authored = docs.where(pmod(col("doc_id"), lit(5)) === 0)
-        .select(concat(lit("d"), col("doc_id")).as("inst"), lit("author").as("prop"))
+        .select(dId.as("inst"), lit("author").as("prop"))
       val domains = s.range(1).select(lit("author").as("prop"), lit("c9").as("cls"))
       val types = asserted.unionByName(TripleOps.domainTypes(authored, domains))
       TripleOps.entailTypes(types, TripleOps.transitiveClosure(tbox))
@@ -2630,17 +2509,7 @@ object SparkEntry {
     // ?o label ?l — the canonical KG query shape; a `topic` predicate
     // per doc is noise the predicate pushdown must discard
     "q92_bgp_star" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val dId = concat(lit("d"), col("doc_id"))
-      val spo = docs.select(dId.as("s"), lit("name").as("p"),
-          concat(lit("n"), pmod(col("doc_id"), lit(100))).as("o"))
-        .unionByName(docs.where(pmod(col("doc_id"), lit(2)) === 0)
-          .select(dId.as("s"), lit("worksFor").as("p"),
-            concat(lit("o"), pmod(col("doc_id"), lit(16))).as("o")))
-        .unionByName(s.range(0, 16).select(
-          concat(lit("o"), col("id")).as("s"), lit("label").as("p"),
-          concat(lit("L"), col("id")).as("o")))
-        .unionByName(docs.select(dId.as("s"), lit("topic").as("p"), col("source").as("o")))
+      val spo = spoOf(t(s, d, "documents"), Lane.name, Lane.worksFor, Lane.labels(16), Lane.topic)
       TripleOps.bgp(spo, Seq(
         ("?person", "worksFor", "?org"),
         ("?person", "name", "?name"),
@@ -3288,6 +3157,18 @@ object SparkEntry {
        |)""".stripMargin
   }
 
+  /** Connected components of an undirected `edges(a, b)` CTE by
+    * recursive label propagation: each node reaches every label of its
+    * component, so `min(lab)` per node is its component.
+    */
+  private val reachSql: String =
+    """nodes AS (SELECT DISTINCT a AS node FROM edges),
+      |reach AS (
+      |  SELECT node, node AS lab FROM nodes
+      |  UNION
+      |  SELECT e.b AS node, r.lab FROM edges e JOIN reach r ON e.a = r.node
+      |)""".stripMargin
+
   private def minhashLshSql(width: Int, threshold: Double, src: String = "documents"): String =
     s"""WITH ${minhashCandCtes(width, src)}
        |SELECT a, b, round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE) / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))), 4) AS jaccard
@@ -3662,12 +3543,7 @@ object SparkEntry {
   private def q32Sql: String =
     s"""WITH RECURSIVE pairs AS (SELECT a, b FROM (${minhashLshSql(width = 3, threshold = 0.5)}) q17),
       |edges AS (SELECT a, b FROM pairs UNION SELECT b AS a, a AS b FROM pairs),
-      |nodes AS (SELECT DISTINCT a AS node FROM edges),
-      |reach AS (
-      |  SELECT node, node AS lab FROM nodes
-      |  UNION
-      |  SELECT e.b AS node, r.lab FROM edges e JOIN reach r ON e.a = r.node
-      |),
+      |$reachSql,
       |cc AS (SELECT node, min(lab) AS component FROM reach GROUP BY node),
       |q AS (SELECT doc_id, $q10QualityExpr AS q FROM documents),
       |j AS (SELECT cc.node, cc.component, q.q FROM cc JOIN q ON q.doc_id = cc.node),
@@ -4389,17 +4265,8 @@ object SparkEntry {
     * coalesce to '' on both sides.
     */
   private val q95Sql: String =
-    """WITH spo AS (
-      |  SELECT 'd' || CAST(doc_id AS VARCHAR) AS s, 'name' AS p,
-      |         'n' || CAST(doc_id % 100 AS VARCHAR) AS o FROM documents
-      |  UNION ALL
-      |  SELECT 'd' || CAST(doc_id AS VARCHAR), 'worksFor',
-      |         'o' || CAST(doc_id % 16 AS VARCHAR) FROM documents WHERE doc_id % 2 = 0
-      |  UNION ALL
-      |  SELECT 'o' || CAST(i AS VARCHAR), 'label', 'L' || CAST(i AS VARCHAR)
-      |  FROM range(0, 16) t(i)
-      |  UNION ALL
-      |  SELECT 'd' || CAST(doc_id AS VARCHAR), 'topic', source FROM documents
+    s"""WITH spo AS (
+      |${spoSql(Lane.name, Lane.worksFor, Lane.labels(16), Lane.topic)}
       |), wl AS (
       |  SELECT w.s, w.o AS org, l.o AS lbl
       |  FROM spo w JOIN spo l ON l.p = 'label' AND l.s = w.o
@@ -4418,7 +4285,7 @@ object SparkEntry {
     * == DuckDB `//` on the non-negative doc_id.
     */
   private val q96Sql: String =
-    """WITH spo AS MATERIALIZED (
+    s"""WITH spo AS MATERIALIZED (
       |  SELECT 'd' || CAST(doc_id AS VARCHAR) AS s, 'linksTo' AS p,
       |         'd' || CAST(doc_id // 2 AS VARCHAR) AS o
       |  FROM documents WHERE doc_id > 0
@@ -4427,8 +4294,7 @@ object SparkEntry {
       |         'd' || CAST(doc_id // 3 AS VARCHAR)
       |  FROM documents WHERE doc_id > 0 AND doc_id % 7 = 0
       |  UNION ALL
-      |  SELECT 'd' || CAST(doc_id AS VARCHAR), 'name',
-      |         'n' || CAST(doc_id % 100 AS VARCHAR) FROM documents
+      |${Lane.name.bare}
       |), edges AS MATERIALIZED (
       |  SELECT DISTINCT s AS src, o AS dst FROM spo
       |  WHERE p IN ('linksTo', 'redirectsTo')
@@ -4449,15 +4315,8 @@ object SparkEntry {
     * as a plain predicate.
     */
   private val q97Sql: String =
-    """WITH spo AS (
-      |  SELECT 'd' || CAST(doc_id AS VARCHAR) AS s, 'name' AS p,
-      |         'n' || CAST(doc_id % 100 AS VARCHAR) AS o FROM documents
-      |  UNION ALL
-      |  SELECT 'd' || CAST(doc_id AS VARCHAR), 'worksFor',
-      |         'o' || CAST(doc_id % 16 AS VARCHAR) FROM documents WHERE doc_id % 2 = 0
-      |  UNION ALL
-      |  SELECT 'o' || CAST(i AS VARCHAR), 'label', 'L' || CAST(i AS VARCHAR)
-      |  FROM range(0, 12) t(i)
+    s"""WITH spo AS (
+      |${spoSql(Lane.name, Lane.worksFor, Lane.labels(12))}
       |)
       |SELECT n.s AS person, n.o AS name
       |FROM spo n
@@ -4471,15 +4330,8 @@ object SparkEntry {
     * decorrelation vs the Spark side's explicit semi/anti joins.
     */
   private val q102Sql: String =
-    """WITH spo AS (
-      |  SELECT 'd' || CAST(doc_id AS VARCHAR) AS s, 'name' AS p,
-      |         'n' || CAST(doc_id % 100 AS VARCHAR) AS o FROM documents
-      |  UNION ALL
-      |  SELECT 'd' || CAST(doc_id AS VARCHAR), 'worksFor',
-      |         'o' || CAST(doc_id % 16 AS VARCHAR) FROM documents WHERE doc_id % 2 = 0
-      |  UNION ALL
-      |  SELECT 'o' || CAST(i AS VARCHAR), 'label', 'L' || CAST(i AS VARCHAR)
-      |  FROM range(0, 12) t(i)
+    s"""WITH spo AS (
+      |${spoSql(Lane.name, Lane.worksFor, Lane.labels(12))}
       |)
       |SELECT n.s AS person, n.o AS name
       |FROM spo n
@@ -4493,18 +4345,8 @@ object SparkEntry {
     * native EXISTS over the worksFor objects — subject-outbound slice.
     */
   private val q107Sql: String =
-    """WITH spo AS (
-      |  SELECT 'd' || CAST(doc_id AS VARCHAR) AS s, 'name' AS p,
-      |         'n' || CAST(doc_id % 100 AS VARCHAR) AS o FROM documents
-      |  UNION ALL
-      |  SELECT 'd' || CAST(doc_id AS VARCHAR), 'worksFor',
-      |         'o' || CAST(doc_id % 16 AS VARCHAR) FROM documents WHERE doc_id % 2 = 0
-      |  UNION ALL
-      |  SELECT 'o' || CAST(i AS VARCHAR), 'label', 'L' || CAST(i AS VARCHAR)
-      |  FROM range(0, 12) t(i)
-      |  UNION ALL
-      |  SELECT 'o' || CAST(i AS VARCHAR), 'sector', 's' || CAST(i % 4 AS VARCHAR)
-      |  FROM range(0, 16) t(i)
+    s"""WITH spo AS (
+      |${spoSql(Lane.name, Lane.worksFor, Lane.labels(12), Lane.sectors)}
       |)
       |SELECT t.s, t.p, t.o FROM spo t
       |WHERE EXISTS (SELECT 1 FROM spo w WHERE w.p = 'worksFor' AND w.o = t.s)""".stripMargin
@@ -4514,12 +4356,8 @@ object SparkEntry {
     * characters in both engines (ASCII fixture).
     */
   private val q108Sql: String =
-    """WITH spo AS (
-      |  SELECT 'd' || CAST(doc_id AS VARCHAR) AS s, 'name' AS p,
-      |         'n' || CAST(doc_id % 100 AS VARCHAR) AS o FROM documents
-      |  UNION ALL
-      |  SELECT 'd' || CAST(doc_id AS VARCHAR), 'worksFor',
-      |         'o' || CAST(doc_id % 16 AS VARCHAR) FROM documents WHERE doc_id % 2 = 0
+    s"""WITH spo AS (
+      |${spoSql(Lane.name, Lane.worksFor)}
       |)
       |SELECT n.s AS x, n.o AS name, w.o AS org, w.o || '/' || n.o AS tag,
       |       CAST(length(n.o) AS BIGINT) AS nlen
@@ -4530,12 +4368,8 @@ object SparkEntry {
     * derived table joined to the label slice.
     */
   private val q109Sql: String =
-    """WITH spo AS (
-      |  SELECT 'd' || CAST(doc_id AS VARCHAR) AS s, 'worksFor' AS p,
-      |         'o' || CAST(doc_id % 16 AS VARCHAR) AS o FROM documents WHERE doc_id % 2 = 0
-      |  UNION ALL
-      |  SELECT 'o' || CAST(i AS VARCHAR), 'label', 'L' || CAST(i AS VARCHAR)
-      |  FROM range(0, 12) t(i)
+    s"""WITH spo AS (
+      |${spoSql(Lane.worksFor, Lane.labels(12))}
       |)
       |SELECT l.s AS org, l.o AS lbl, cnt.n AS n
       |FROM spo l
@@ -4580,7 +4414,7 @@ object SparkEntry {
     * graph-set semantics both sides share.
     */
   private val q112Sql: String =
-    """WITH RECURSIVE base AS (
+    s"""WITH RECURSIVE base AS (
       |  SELECT 'd' || CAST(doc_id AS VARCHAR) AS s, 'partOf' AS p,
       |         'd' || CAST(doc_id // 2 AS VARCHAR) AS o
       |  FROM documents WHERE doc_id > 0
@@ -4589,8 +4423,7 @@ object SparkEntry {
       |         'd' || CAST(doc_id AS VARCHAR)
       |  FROM documents WHERE doc_id > 0 AND doc_id % 11 = 0
       |  UNION ALL
-      |  SELECT 'd' || CAST(doc_id AS VARCHAR), 'name',
-      |         'n' || CAST(doc_id % 100 AS VARCHAR) FROM documents
+      |${Lane.name.bare}
       |),
       |part AS (
       |  SELECT s, o FROM base WHERE p = 'partOf'
@@ -4615,15 +4448,8 @@ object SparkEntry {
     * precedence, so this parses as ((spo EXCEPT del) UNION ins)).
     */
   private val q113Sql: String =
-    """WITH spo AS (
-      |  SELECT 'd' || CAST(doc_id AS VARCHAR) AS s, 'name' AS p,
-      |         'n' || CAST(doc_id % 100 AS VARCHAR) AS o FROM documents
-      |  UNION ALL
-      |  SELECT 'd' || CAST(doc_id AS VARCHAR), 'worksFor',
-      |         'o' || CAST(doc_id % 16 AS VARCHAR) FROM documents WHERE doc_id % 2 = 0
-      |  UNION ALL
-      |  SELECT 'o' || CAST(i AS VARCHAR), 'label', 'L' || CAST(i AS VARCHAR)
-      |  FROM range(0, 12) t(i)
+    s"""WITH spo AS (
+      |${spoSql(Lane.name, Lane.worksFor, Lane.labels(12))}
       |),
       |sols AS (
       |  SELECT w.s AS x, w.o AS org FROM spo w
@@ -4654,21 +4480,18 @@ object SparkEntry {
     * filter; the name lane and legal edges contribute nothing.
     */
   private val q115Sql: String =
-    """WITH spo AS (
-      |  SELECT 'd' || CAST(doc_id AS VARCHAR) AS s, 'worksFor' AS p,
-      |         'o' || CAST(doc_id % 16 AS VARCHAR) AS o FROM documents WHERE doc_id % 2 = 0
+    s"""WITH spo AS (
+      |${Lane.worksFor.sql}
       |  UNION ALL
       |  SELECT 'd' || CAST(doc_id AS VARCHAR), 'worksFor', 'oX'
       |  FROM documents WHERE doc_id % 21 = 0 AND doc_id % 2 = 0
       |  UNION ALL
-      |  SELECT 'd' || CAST(doc_id AS VARCHAR), 'reportsTo',
-      |         'd' || CAST(doc_id // 3 AS VARCHAR) FROM documents WHERE doc_id > 0
+      |${Lane.reportsTo.bare}
       |  UNION ALL
       |  SELECT 'd' || CAST(doc_id AS VARCHAR), 'reportsTo',
       |         'd' || CAST(doc_id AS VARCHAR) FROM documents WHERE doc_id % 13 = 0
       |  UNION ALL
-      |  SELECT 'd' || CAST(doc_id AS VARCHAR), 'name',
-      |         'n' || CAST(doc_id % 100 AS VARCHAR) FROM documents
+      |${Lane.name.bare}
       |)
       |SELECT s, p, 'functional' AS violation, n FROM (
       |  SELECT s, p, CAST(COUNT(DISTINCT o) AS BIGINT) AS n
@@ -4685,19 +4508,14 @@ object SparkEntry {
     * (the q71 rule → MATERIALIZED).
     */
   private val q116Sql: String =
-    """WITH base AS MATERIALIZED (
-      |  SELECT 'd' || CAST(doc_id AS VARCHAR) AS s, 'worksFor' AS p,
-      |         'o' || CAST(doc_id % 16 AS VARCHAR) AS o FROM documents WHERE doc_id % 2 = 0
-      |  UNION ALL
-      |  SELECT 'o' || CAST(i AS VARCHAR), 'label', 'L' || CAST(i AS VARCHAR)
-      |  FROM range(0, 12) t(i)
+    s"""WITH base AS MATERIALIZED (
+      |${spoSql(Lane.worksFor, Lane.labels(12))}
       |),
       |delta AS (
       |  SELECT 'd' || CAST(doc_id AS VARCHAR) AS s, 'worksFor' AS p,
       |         'o' || CAST(doc_id % 16 AS VARCHAR) AS o FROM documents WHERE doc_id % 3 = 0
       |  UNION ALL
-      |  SELECT 'o' || CAST(i AS VARCHAR), 'label', 'L' || CAST(i AS VARCHAR)
-      |  FROM range(12, 14) t(i)
+      |${Lane.labels(14, from = 12).bare}
       |),
       |fullg AS MATERIALIZED (
       |  SELECT s, p, o FROM base UNION SELECT s, p, o FROM delta
@@ -4719,12 +4537,8 @@ object SparkEntry {
     * independent of the Spark side's identity-universe hop frame.
     */
   private val q119Sql: String =
-    """WITH spo AS MATERIALIZED (
-      |  SELECT 'd' || CAST(doc_id AS VARCHAR) AS s, 'name' AS p,
-      |         'n' || CAST(doc_id % 100 AS VARCHAR) AS o FROM documents
-      |  UNION ALL
-      |  SELECT 'd' || CAST(doc_id AS VARCHAR), 'worksFor',
-      |         'o' || CAST(doc_id % 16 AS VARCHAR) FROM documents WHERE doc_id % 2 = 0
+    s"""WITH spo AS MATERIALIZED (
+      |${spoSql(Lane.name, Lane.worksFor)}
       |  UNION ALL
       |  SELECT 'd' || CAST(doc_id AS VARCHAR), 'mentorOf',
       |         'd' || CAST(doc_id // 7 AS VARCHAR) FROM documents
@@ -4743,12 +4557,8 @@ object SparkEntry {
     * (retracting a never-asserted triple is a no-op on the set).
     */
   private val q118Sql: String =
-    """WITH base AS MATERIALIZED (
-      |  SELECT 'd' || CAST(doc_id AS VARCHAR) AS s, 'worksFor' AS p,
-      |         'o' || CAST(doc_id % 16 AS VARCHAR) AS o FROM documents WHERE doc_id % 2 = 0
-      |  UNION ALL
-      |  SELECT 'o' || CAST(i AS VARCHAR), 'label', 'L' || CAST(i AS VARCHAR)
-      |  FROM range(0, 14) t(i)
+    s"""WITH base AS MATERIALIZED (
+      |${spoSql(Lane.worksFor, Lane.labels(14))}
       |),
       |removed AS (
       |  SELECT 'd' || CAST(doc_id AS VARCHAR) AS s, 'worksFor' AS p,
@@ -4782,8 +4592,7 @@ object SparkEntry {
     val la = TripleOps.LangLitRe
     val pl = TripleOps.PlainLitRe
     s"""WITH spo AS MATERIALIZED (
-      |  SELECT 'd' || CAST(doc_id AS VARCHAR) AS s, 'age' AS p,
-      |         '"' || CAST(doc_id % 90 AS VARCHAR) || '"^^xsd:integer' AS o FROM documents
+      |${Lane.age.sql}
       |  UNION ALL
       |  SELECT 'd' || CAST(doc_id AS VARCHAR), 'label',
       |         '"name' || CAST(doc_id % 100 AS VARCHAR) ||
@@ -4792,8 +4601,7 @@ object SparkEntry {
       |  SELECT 'd' || CAST(doc_id AS VARCHAR), 'note',
       |         '"plain' || CAST(doc_id % 10 AS VARCHAR) || '"' FROM documents
       |  UNION ALL
-      |  SELECT 'd' || CAST(doc_id AS VARCHAR), 'worksFor',
-      |         'o' || CAST(doc_id % 16 AS VARCHAR) FROM documents WHERE doc_id % 2 = 0
+      |${Lane.worksFor.bare}
       |),
       |parsed AS (
       |  SELECT s, p,
@@ -4825,11 +4633,7 @@ object SparkEntry {
   private def q129Sql: String = {
     val ty = TripleOps.TypedLitRe
     s"""WITH spo AS (
-      |  SELECT 'd' || CAST(doc_id AS VARCHAR) AS s, 'age' AS p,
-      |         '"' || CAST(doc_id % 90 AS VARCHAR) || '"^^xsd:integer' AS o FROM documents
-      |  UNION ALL
-      |  SELECT 'd' || CAST(doc_id AS VARCHAR), 'worksFor',
-      |         'o' || CAST(doc_id % 16 AS VARCHAR) FROM documents WHERE doc_id % 2 = 0
+      |${spoSql(Lane.age, Lane.worksFor)}
       |), sols AS (
       |  SELECT w.o AS org, a.o AS a
       |  FROM spo w JOIN spo a ON a.s = w.s
@@ -4879,8 +4683,8 @@ object SparkEntry {
     * Spark side's anti-join plan.
     */
   private val q132Sql: String =
-    """WITH prev AS MATERIALIZED (
-      |  SELECT 'd' || CAST(doc_id AS VARCHAR) AS s, 'lang' AS p, lang AS o FROM documents
+    s"""WITH prev AS MATERIALIZED (
+      |${Lane.lang.sql}
       |  UNION ALL
       |  SELECT 'd' || CAST(doc_id AS VARCHAR), 'bucket', 'b' || CAST(doc_id % 7 AS VARCHAR)
       |  FROM documents WHERE doc_id % 2 = 0
@@ -4940,7 +4744,7 @@ object SparkEntry {
     * the semantics, duplicate type rows are not).
     */
   private val q134Sql: String =
-    """WITH types AS MATERIALIZED (
+    s"""WITH types AS MATERIALIZED (
       |  SELECT DISTINCT inst, cls FROM (
       |    SELECT 'd' || CAST(doc_id AS VARCHAR) AS inst,
       |           'c' || CAST(doc_id % 12 AS VARCHAR) AS cls FROM documents
@@ -4951,8 +4755,7 @@ object SparkEntry {
       |           'Org' || CAST((doc_id % 16) % 3 AS VARCHAR) FROM documents
       |  ) u
       |), edges AS (
-      |  SELECT 'd' || CAST(doc_id AS VARCHAR) AS s, 'worksFor' AS p,
-      |         'o' || CAST(doc_id % 16 AS VARCHAR) AS o FROM documents WHERE doc_id % 2 = 0
+      |${Lane.worksFor.sql}
       |)
       |SELECT ts.cls AS src_cls, ed.p, tt.cls AS dst_cls,
       |       CAST(count(*) AS BIGINT) AS n_edges,
@@ -5157,7 +4960,7 @@ object SparkEntry {
     * Spark side's semi-join telescoping.
     */
   private val q139Sql: String =
-    """WITH types AS MATERIALIZED (
+    s"""WITH types AS MATERIALIZED (
       |  SELECT DISTINCT inst, cls FROM (
       |    SELECT 'd' || CAST(doc_id AS VARCHAR) AS inst,
       |           'c' || CAST(doc_id % 12 AS VARCHAR) AS cls FROM documents
@@ -5166,8 +4969,7 @@ object SparkEntry {
       |           'Org' || CAST((doc_id % 16) % 3 AS VARCHAR) FROM documents
       |  ) u
       |), base AS MATERIALIZED (
-      |  SELECT 'd' || CAST(doc_id AS VARCHAR) AS s, 'worksFor' AS p,
-      |         'o' || CAST(doc_id % 16 AS VARCHAR) AS o FROM documents WHERE doc_id % 2 = 0
+      |${Lane.worksFor.sql}
       |), added AS MATERIALIZED (
       |  SELECT 'd' || CAST(doc_id AS VARCHAR) AS s, 'fundedBy' AS p,
       |         'o' || CAST(doc_id % 16 AS VARCHAR) AS o FROM documents WHERE doc_id % 6 = 0
@@ -5202,15 +5004,13 @@ object SparkEntry {
     * matching the Spark anti-join on exact (s,p,o).
     */
   private val q140Sql: String =
-    """WITH base AS MATERIALIZED (
-      |  SELECT 'd' || CAST(doc_id AS VARCHAR) AS s, 'worksFor' AS p,
-      |         'o' || CAST(doc_id % 16 AS VARCHAR) AS o FROM documents
+    s"""WITH base AS MATERIALIZED (
+      |${Lane.worksForAll.sql}
       |  UNION ALL
       |  SELECT 'd' || CAST(doc_id AS VARCHAR), 'worksFor', 'oX'
       |  FROM documents WHERE doc_id % 4 = 0
       |  UNION ALL
-      |  SELECT 'o' || CAST(i AS VARCHAR), 'label', 'L' || CAST(i AS VARCHAR)
-      |  FROM range(0, 16) t(i)
+      |${Lane.labels(16).bare}
       |  UNION ALL
       |  SELECT 'oX', 'label', 'LX'
       |),
@@ -6266,12 +6066,8 @@ object SparkEntry {
     * restrict maintenance plan (the q139/q132 rule).
     */
   private val q162Sql: String =
-    """WITH a AS (
-      |  SELECT 'e' || CAST(doc_id % 50 AS VARCHAR) AS s, 'color' AS p,
-      |         'v' || CAST((doc_id * 31) % 3 AS VARCHAR) AS o FROM documents
-      |  UNION ALL
-      |  SELECT 'e' || CAST(doc_id % 50 AS VARCHAR), 'shape',
-      |         'w' || CAST((doc_id * 17) % 4 AS VARCHAR) FROM documents
+    s"""WITH a AS (
+      |${spoSql(Lane.colors, Lane.shapes)}
       |  UNION ALL
       |  SELECT 'e' || CAST(doc_id % 50 AS VARCHAR), 'color',
       |         'v' || CAST((doc_id * 11) % 3 AS VARCHAR) FROM documents
@@ -6428,12 +6224,8 @@ object SparkEntry {
     * are BIGINT both engines.
     */
   private val q156Sql: String =
-    """WITH a AS (
-      |  SELECT 'e' || CAST(doc_id % 50 AS VARCHAR) AS s, 'color' AS p,
-      |         'v' || CAST((doc_id * 31) % 3 AS VARCHAR) AS o FROM documents
-      |  UNION ALL
-      |  SELECT 'e' || CAST(doc_id % 50 AS VARCHAR), 'shape',
-      |         'w' || CAST((doc_id * 17) % 4 AS VARCHAR) FROM documents
+    s"""WITH a AS (
+      |${spoSql(Lane.colors, Lane.shapes)}
       |), v AS (
       |  SELECT s, p, o, count(*) AS support FROM a GROUP BY 1, 2, 3
       |)
@@ -6697,18 +6489,13 @@ object SparkEntry {
     * native exact count-distinct both sides.
     */
   private val q124Sql: String =
-    """WITH spo AS (
-      |  SELECT 'd' || CAST(doc_id AS VARCHAR) AS s, 'name' AS p,
-      |         'n' || CAST(doc_id % 100 AS VARCHAR) AS o FROM documents
-      |  UNION ALL
-      |  SELECT 'd' || CAST(doc_id AS VARCHAR), 'worksFor',
-      |         'o' || CAST(doc_id % 16 AS VARCHAR) FROM documents WHERE doc_id % 2 = 0
+    s"""WITH spo AS (
+      |${spoSql(Lane.name, Lane.worksFor)}
       |  UNION ALL
       |  SELECT 'd' || CAST(doc_id AS VARCHAR), 'type',
       |         CASE WHEN doc_id % 3 = 0 THEN 'Person' ELSE 'Org' END FROM documents
       |  UNION ALL
-      |  SELECT 'o' || CAST(i AS VARCHAR), 'label', 'L' || CAST(i AS VARCHAR)
-      |  FROM range(0, 16) t(i)
+      |${Lane.labels(16).bare}
       |)
       |SELECT p, CAST(COUNT(*) AS BIGINT) AS n_triples,
       |       CAST(COUNT(DISTINCT s) AS BIGINT) AS n_subj,
@@ -6722,15 +6509,14 @@ object SparkEntry {
     * MATERIALIZED rule).
     */
   private val q121Sql: String =
-    """WITH spo AS MATERIALIZED (
+    s"""WITH spo AS MATERIALIZED (
       |  SELECT 'd' || CAST(doc_id AS VARCHAR) AS s, 'hasParent' AS p,
       |         'd' || CAST(doc_id // 2 AS VARCHAR) AS o FROM documents WHERE doc_id > 0
       |  UNION ALL
       |  SELECT 'd' || CAST(doc_id AS VARCHAR), 'marriedTo',
       |         'd' || CAST(doc_id + 1 AS VARCHAR) FROM documents WHERE doc_id % 10 = 0
       |  UNION ALL
-      |  SELECT 'd' || CAST(doc_id AS VARCHAR), 'name',
-      |         'n' || CAST(doc_id % 100 AS VARCHAR) FROM documents
+      |${Lane.name.bare}
       |),
       |par AS MATERIALIZED (SELECT s, o FROM spo WHERE p = 'hasParent'),
       |gp AS MATERIALIZED (SELECT a.s, b.o FROM par a JOIN par b ON b.s = a.o),
@@ -6821,12 +6607,8 @@ object SparkEntry {
     * is deterministic in both engines.
     */
   private val q103Sql: String =
-    """WITH spo AS (
-      |  SELECT 'd' || CAST(doc_id AS VARCHAR) AS s, 'worksFor' AS p,
-      |         'o' || CAST(doc_id % 16 AS VARCHAR) AS o FROM documents WHERE doc_id % 2 = 0
-      |  UNION ALL
-      |  SELECT 'd' || CAST(doc_id AS VARCHAR), 'memberOf',
-      |         'o' || CAST(doc_id % 12 AS VARCHAR) FROM documents WHERE doc_id % 3 = 0
+    s"""WITH spo AS (
+      |${spoSql(Lane.worksFor, Lane.memberOf)}
       |), sols AS (
       |  SELECT s AS x, o AS org FROM spo WHERE p = 'worksFor'
       |  UNION ALL
@@ -6844,12 +6626,8 @@ object SparkEntry {
     * string per the q79 rule.
     */
   private val q105Sql: String =
-    """WITH spo AS (
-      |  SELECT 'd' || CAST(doc_id AS VARCHAR) AS s, 'worksFor' AS p,
-      |         'o' || CAST(doc_id % 16 AS VARCHAR) AS o FROM documents WHERE doc_id % 2 = 0
-      |  UNION ALL
-      |  SELECT 'd' || CAST(doc_id AS VARCHAR), 'memberOf',
-      |         'o' || CAST(doc_id % 12 AS VARCHAR) FROM documents WHERE doc_id % 3 = 0
+    s"""WITH spo AS (
+      |${spoSql(Lane.worksFor, Lane.memberOf)}
       |), sols AS (
       |  SELECT s AS x, o AS org FROM spo WHERE p = 'worksFor'
       |  UNION ALL
@@ -6875,7 +6653,7 @@ object SparkEntry {
     * lexicographic min == numeric min in both engines.
     */
   private val q98Sql: String =
-    """WITH RECURSIVE spo AS MATERIALIZED (
+    s"""WITH RECURSIVE spo AS MATERIALIZED (
       |  SELECT printf('e%05d', doc_id) AS s, 'sameAs' AS p,
       |         printf('e%05d', doc_id - doc_id % 5) AS o
       |  FROM documents WHERE doc_id % 5 <> 0
@@ -6887,12 +6665,7 @@ object SparkEntry {
       |         printf('e%05d', doc_id // 2) FROM documents WHERE doc_id > 0
       |), sa AS (SELECT s AS a, o AS b FROM spo WHERE p = 'sameAs'),
       |edges AS MATERIALIZED (SELECT a, b FROM sa UNION SELECT b, a FROM sa),
-      |nodes AS (SELECT DISTINCT a AS node FROM edges),
-      |reach AS (
-      |  SELECT node, node AS lab FROM nodes
-      |  UNION
-      |  SELECT e.b AS node, r.lab FROM edges e JOIN reach r ON e.a = r.node
-      |),
+      |$reachSql,
       |cc AS MATERIALIZED (SELECT node, min(lab) AS canon FROM reach GROUP BY node)
       |SELECT DISTINCT coalesce(cs.canon, t.s) AS s, t.p, coalesce(co.canon, t.o) AS o
       |FROM spo t
@@ -6905,7 +6678,7 @@ object SparkEntry {
     * VALUES clause as a plain IN list, grouped counts cast to BIGINT.
     */
   private val q99Sql: String =
-    """WITH spo AS MATERIALIZED (
+    s"""WITH spo AS MATERIALIZED (
       |  SELECT 'd' || CAST(doc_id AS VARCHAR) AS s, 'worksFor' AS p,
       |         'o' || CAST(doc_id % 16 AS VARCHAR) AS o
       |  FROM documents WHERE doc_id % 2 = 0
@@ -6914,8 +6687,7 @@ object SparkEntry {
       |         'o' || CAST(doc_id % 12 AS VARCHAR)
       |  FROM documents WHERE doc_id % 3 = 0
       |  UNION ALL
-      |  SELECT 'o' || CAST(i AS VARCHAR), 'label', 'L' || CAST(i AS VARCHAR)
-      |  FROM range(0, 12) t(i)
+      |${Lane.labels(12).bare}
       |), u AS (
       |  SELECT w.s AS x, w.o AS org, NULL AS lbl FROM spo w WHERE w.p = 'worksFor'
       |  UNION ALL
@@ -6933,13 +6705,12 @@ object SparkEntry {
     * IS NOT NULL.
     */
   private val q100Sql: String =
-    """WITH spo AS MATERIALIZED (
+    s"""WITH spo AS MATERIALIZED (
       |  SELECT 'd' || CAST(doc_id AS VARCHAR) AS s, 'worksFor' AS p,
       |         'o' || CAST(doc_id % 16 AS VARCHAR) AS o
       |  FROM documents WHERE doc_id % 2 = 0
       |  UNION ALL
-      |  SELECT 'o' || CAST(i AS VARCHAR), 'label', 'L' || CAST(i AS VARCHAR)
-      |  FROM range(0, 12) t(i)
+      |${Lane.labels(12).bare}
       |), sols AS (
       |  SELECT w.s AS x, w.o AS org, l.o AS lbl
       |  FROM spo w LEFT JOIN spo l ON l.p = 'label' AND l.s = w.o
@@ -6959,7 +6730,7 @@ object SparkEntry {
     * no NULLs in the subject sets, so NOT IN is safe).
     */
   private val q94Sql: String =
-    """WITH spo AS (
+    s"""WITH spo AS (
       |  SELECT 'd' || CAST(doc_id AS VARCHAR) AS s, 'name' AS p,
       |         'n' || CAST(doc_id % 100 AS VARCHAR) AS o
       |  FROM documents WHERE doc_id % 19 <> 0
@@ -6972,8 +6743,7 @@ object SparkEntry {
       |              ELSE 'o' || CAST(doc_id % 16 AS VARCHAR) END
       |  FROM documents WHERE doc_id % 2 = 0
       |  UNION ALL
-      |  SELECT 'o' || CAST(i AS VARCHAR), 'label', 'L' || CAST(i AS VARCHAR)
-      |  FROM range(0, 16) t(i)
+      |${Lane.labels(16).bare}
       |), focus AS (
       |  SELECT 'd' || CAST(doc_id AS VARCHAR) AS s FROM documents
       |), name_cnt AS (
@@ -7089,17 +6859,8 @@ object SparkEntry {
     * slice/reduce machinery).
     */
   private val q92Sql: String =
-    """WITH spo AS (
-      |  SELECT 'd' || CAST(doc_id AS VARCHAR) AS s, 'name' AS p,
-      |         'n' || CAST(doc_id % 100 AS VARCHAR) AS o FROM documents
-      |  UNION ALL
-      |  SELECT 'd' || CAST(doc_id AS VARCHAR), 'worksFor',
-      |         'o' || CAST(doc_id % 16 AS VARCHAR) FROM documents WHERE doc_id % 2 = 0
-      |  UNION ALL
-      |  SELECT 'o' || CAST(i AS VARCHAR), 'label', 'L' || CAST(i AS VARCHAR)
-      |  FROM range(0, 16) t(i)
-      |  UNION ALL
-      |  SELECT 'd' || CAST(doc_id AS VARCHAR), 'topic', source FROM documents
+    s"""WITH spo AS (
+      |${spoSql(Lane.name, Lane.worksFor, Lane.labels(16), Lane.topic)}
       |)
       |SELECT w.s AS person, w.o AS org, n.o AS name, l.o AS lbl
       |FROM spo w
@@ -7966,12 +7727,7 @@ object SparkEntry {
   private def q66Sql: String =
     s"""WITH RECURSIVE pairs AS (SELECT a, b FROM (${minhashLshSql(width = 1, threshold = 0.5)}) q22),
        |edges AS (SELECT a, b FROM pairs UNION SELECT b AS a, a AS b FROM pairs),
-       |nodes AS (SELECT DISTINCT a AS node FROM edges),
-       |reach AS (
-       |  SELECT node, node AS lab FROM nodes
-       |  UNION
-       |  SELECT e.b AS node, r.lab FROM edges e JOIN reach r ON e.a = r.node
-       |),
+       |$reachSql,
        |cc AS (SELECT node, min(lab) AS component FROM reach GROUP BY node)
        |SELECT d.doc_id,
        |  CAST(coalesce(cc.component, d.doc_id) AS BIGINT) AS cluster,
@@ -8406,12 +8162,7 @@ object SparkEntry {
     "q201_cluster_census" ->
       s"""WITH RECURSIVE pairs AS (SELECT a, b FROM (${minhashLshSql(width = 3, threshold = 0.5)}) q17),
         |edges AS (SELECT a, b FROM pairs UNION SELECT b AS a, a AS b FROM pairs),
-        |nodes AS (SELECT DISTINCT a AS node FROM edges),
-        |reach AS (
-        |  SELECT node, node AS lab FROM nodes
-        |  UNION
-        |  SELECT e.b AS node, r.lab FROM edges e JOIN reach r ON e.a = r.node
-        |),
+        |$reachSql,
         |cc AS MATERIALIZED (SELECT node, min(lab) AS component FROM reach GROUP BY node),
         |sizes AS (SELECT component, count(*) AS csize FROM cc GROUP BY component),
         |census AS (SELECT csize, count(*) AS n_clusters FROM sizes GROUP BY csize),
@@ -8514,8 +8265,8 @@ object SparkEntry {
     // q206: the q186 set-key discipline — ordered string_agg over the
     // (s, p) DISTINCT subselect, never string_agg(DISTINCT ...).
     "q206_char_sets" ->
-      """WITH spo AS (
-        |  SELECT 'd' || CAST(doc_id AS VARCHAR) AS s, 'lang' AS p, lang AS o FROM documents
+      s"""WITH spo AS (
+        |${Lane.lang.sql}
         |  UNION ALL
         |  SELECT 'd' || CAST(doc_id AS VARCHAR), 'author', 'a' || CAST(doc_id % 24 AS VARCHAR)
         |  FROM documents WHERE doc_id % 2 = 0
@@ -8600,12 +8351,7 @@ object SparkEntry {
     "q26_connected_components" ->
       s"""WITH RECURSIVE pairs AS (SELECT a, b FROM (${minhashLshSql(width = 3, threshold = 0.5)}) q17),
         |edges AS (SELECT a, b FROM pairs UNION SELECT b AS a, a AS b FROM pairs),
-        |nodes AS (SELECT DISTINCT a AS node FROM edges),
-        |reach AS (
-        |  SELECT node, node AS lab FROM nodes
-        |  UNION
-        |  SELECT e.b AS node, r.lab FROM edges e JOIN reach r ON e.a = r.node
-        |)
+        |$reachSql
         |SELECT node, min(lab) AS component FROM reach GROUP BY node""".stripMargin,
     "q27_embedding_dot_norms" ->
       """WITH qv AS (

@@ -109,19 +109,23 @@ object Dedup {
   }
 
   /** Distinct (a, b, hamming) pairs with a < b and
-    * bit_count(ha ^ hb) ≤ maxHamming over a bigint `hash` column.
-    * Pigeonhole blocking: the hash splits into `chunks` 8-bit chunks and
-    * any pair within hamming < `chunks` agrees on at least one of them,
-    * so joining on (chunk, value) loses nothing below that bound (minus
-    * pairs whose only shared chunks are hot). The payload rides the join
-    * because the verify is one popcount. Callers keep their own bound on
-    * maxHamming.
+    * bit_count(ha ^ hb) ≤ maxHamming over a bigint `hash` of
+    * 8 × `chunks` bits. Pigeonhole blocking: the hash splits into
+    * max(chunks, maxHamming + 1) chunks of near-equal width (8 bits
+    * each while maxHamming < chunks), and any pair within maxHamming
+    * agrees on at least one of them, so joining on (chunk, value) loses
+    * nothing (minus pairs whose only shared chunks are hot). The payload
+    * rides the join because the verify is one popcount.
     */
   private[pipeline] def hammingPairs(hashes: DataFrame, id: String, hash: String, chunks: Int,
                                      maxHamming: Int, maxBucket: Int): DataFrame = {
+    val bits = 8 * chunks
+    val n = math.max(chunks, maxHamming + 1)
+    val widths = (0 until n).map(c => bits / n + (if (c < bits % n) 1 else 0))
+    val offsets = widths.scanLeft(0)(_ + _)
     val chunked = suppressHot(hashes.select(col(id), col(hash),
-      posexplode(array((0 until chunks).map(c =>
-        shiftrightunsigned(col(hash), c * 8).bitwiseAND(255)): _*))
+      posexplode(array((0 until n).map(c =>
+        shiftrightunsigned(col(hash), offsets(c)).bitwiseAND((1 << widths(c)) - 1)): _*))
         .as(Seq("chunk", "value"))), Seq("chunk", "value"), maxBucket)
     val l = chunked.select(col("chunk"), col("value"), col(id).as("a"), col(hash).as("ha"))
     val r = chunked.select(col("chunk"), col("value"), col(id).as("b"), col(hash).as("hb"))
@@ -150,7 +154,7 @@ object Dedup {
     val sizes = rows.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
     candIds
       .join(rows.select(col("doc_id").as("a"), col("s")), Seq("a"))
-      .join(broadcastIfSmall(rows, 2000000L).select(col("doc_id").as("b"), col("s")), Seq("b", "s"))
+      .join(broadcastIfSmall(rows, BroadcastGate.MaxRows).select(col("doc_id").as("b"), col("s")), Seq("b", "s"))
       .groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("ic"))
       .join(sizes.select(col("doc_id").as("a"), col("sz").as("sza")), Seq("a"))
@@ -218,9 +222,10 @@ object Dedup {
   }
 
   /** 32-bit SimHash from word hashes; same-bucket pairs within hamming
-    * distance ≤ maxHamming. Buckets = 4 x 8-bit chunks (any pair with
-    * hamming ≤ 3 shares at least one chunk — pigeonhole), so the join
-    * is bucketed, never all-pairs.
+    * distance ≤ maxHamming. Buckets = 4 x 8-bit chunks, or
+    * maxHamming + 1 narrower ones above 3 (any pair within maxHamming
+    * shares at least one chunk — pigeonhole), so the join is bucketed,
+    * never all-pairs.
     */
   def simhash(documents: DataFrame, maxHamming: Int = 3, maxBucket: Int = 500): DataFrame = {
     // relational sign counters: explode the (distinct) word set, hash
@@ -235,7 +240,7 @@ object Dedup {
     val agg = hw.groupBy(col("doc_id")).agg(bitSums.head, bitSums.tail: _*)
     val sim = (0 until 32).map(b =>
       when(col(s"s$b") > 0, lit(1L << b)).otherwise(0L)).reduce((a, b) => a + b)
-    // 4 × 8-bit chunks cover the 32-bit signature
+    // a 32-bit signature: 4 chunks of 8 bits
     hammingPairs(agg.select(col("doc_id"), sim.as("simhash")), "doc_id", "simhash",
       chunks = 4, maxHamming, maxBucket)
   }
@@ -557,7 +562,7 @@ object Dedup {
       .select(col("doc_id").as("x"), col("s"))
       .localCheckpoint(true)
     val full = ranked.select(col("doc_id").as("y"), col("s"))
-    val candIds = broadcastIfSmall(prefix, 2000000L).join(full, Seq("s"))
+    val candIds = broadcastIfSmall(prefix, BroadcastGate.MaxRows).join(full, Seq("s"))
       .where(col("x") =!= col("y"))
       .select(least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"))
       .distinct()

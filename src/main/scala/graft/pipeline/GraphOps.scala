@@ -62,16 +62,6 @@ object GraphOps {
           .otherwise(lit(0L)).cast("bigint").as("lcc_ppm"))
   }
 
-  /** Row cap under which iteration-state frames (node-bounded, never
-    * growing) are broadcast into their per-round joins. The DECISION
-    * is made once per operator from a single count of the initial
-    * materialized state — gating inside the loop would add one
-    * driver-blocking count job per round, which is exactly the
-    * overhead class these loops are being cured of (measured: q117
-    * went 5.1s → 6.6s when the gate counted inside the loop).
-    */
-  private val StateBroadcastRows = 2000000L
-
   /** Canonical undirected edge set: orientation-normalized BEFORE
     * distinct — a reversed duplicate (2,1)+(1,2) would otherwise
     * survive as a parallel edge and inflate counts. Self-loops drop.
@@ -259,7 +249,7 @@ object GraphOps {
     val edges0 = e.select(col("u").as("src"), col("v").as("dst"))
       .unionByName(e.select(col("v").as("src"), col("u").as("dst")))
       .localCheckpoint(true) // consumed every round
-    val edges = broadcastIfSmall(edges0, 2000000L) // §3.1: one exchange per round
+    val edges = broadcastIfSmall(edges0, BroadcastGate.MaxRows) // §3.1: one exchange per round
     var dist = seeds.select(col("node").cast("bigint").as("node"), lit(0L).as("dist"))
       .distinct().localCheckpoint(true)
     for (r <- 1 to maxHops) {
@@ -322,7 +312,7 @@ object GraphOps {
     val degrees = edges0.groupBy(col("src")).agg(count(lit(1)).as("d")).coalesce(1)
       .agg(coalesce(sum(col("d")), lit(0L)), coalesce(max(col("d")), lit(0L))).head()
     val (rows, maxDegree) = (degrees.getLong(0), degrees.getLong(1))
-    val edges = broadcastIfSmall(edges0, rows, 2000000L) // §3.1: one Exchange per round, not three
+    val edges = broadcastIfSmall(edges0, rows, BroadcastGate.MaxRows) // §3.1: one Exchange per round, not three
     val hopsPerRound = if (maxDegree <= multiHopMaxDegree) 3 else 1
     var dist = seeds.select(col("node").cast("bigint").as("seed")).distinct()
       .select(col("seed"), col("seed").as("node"), lit(0L).as("dist"))
@@ -518,7 +508,7 @@ object GraphOps {
     // shrinks): the peel round becomes scan → BHJ → BHJ → one
     // exchange (the groupBy key); falls back to shuffle joins at scale
     val n0 = n
-    val bState: DataFrame => DataFrame = broadcastIfSmall(_, n0, StateBroadcastRows)
+    val bState: DataFrame => DataFrame = broadcastIfSmall(_, n0, BroadcastGate.MaxRows)
     while (r < maxRounds && !converged) {
       val next = edges
         .join(bState(alive.select(col("node").as("src"))), Seq("src"))
@@ -695,7 +685,7 @@ object GraphOps {
       .localCheckpoint(true)
     // §3.1, decided once (label state is node-sized every round)
     val nLabels = labels.count()
-    val bState: DataFrame => DataFrame = broadcastIfSmall(_, nLabels, StateBroadcastRows)
+    val bState: DataFrame => DataFrame = broadcastIfSmall(_, nLabels, BroadcastGate.MaxRows)
     for (_ <- 1 to iters) {
       // argmax by (count DESC, label ASC) as a map-side-combinable
       // min over the (-count, label) struct — same total order the
@@ -778,7 +768,7 @@ object GraphOps {
     // node set, which only shrinks across outer rounds — one count
     // gates them all, with the shuffle-join fallback at scale
     val nNodes = nodes.count()
-    val bState: DataFrame => DataFrame = broadcastIfSmall(_, nNodes, StateBroadcastRows)
+    val bState: DataFrame => DataFrame = broadcastIfSmall(_, nNodes, BroadcastGate.MaxRows)
     var outer = 0
     while (outer < maxOuter) {
       if (nodes.isEmpty) return done

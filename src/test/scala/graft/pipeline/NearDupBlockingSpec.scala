@@ -7,9 +7,9 @@ import org.scalatest.BeforeAndAfterAll
 /** Completeness of the chunk-pigeonhole Hamming join
   * ([[Dedup.hammingPairs]]) against a brute-force all-pairs scan on
   * seeded random hashes: with no bucket over `maxBucket`, every pair
-  * within hamming k < chunks must come back, with its exact distance,
-  * and nothing else; a planted hot bucket must drop exactly the pairs
-  * whose only shared chunks lie in it.
+  * within hamming k must come back, with its exact distance, and
+  * nothing else, also for k ≥ chunks; a planted hot bucket must drop
+  * exactly the pairs whose only shared chunks lie in it.
   */
 class NearDupBlockingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -85,6 +85,20 @@ class NearDupBlockingSpec extends AnyFunSuite with BeforeAndAfterAll {
       val want = allPairs(rows, k)
       assert(want.exists(_._3 == k), s"no pair at distance $k")
       assertSame(joined(rows, 8, k, maxBucket = rows.size), want, s"k=$k")
+    }
+  }
+
+  test("k >= chunks: 4 chunks at k = 6 still find pairs that differ in every byte") {
+    // 0x01010101 differs from both others in all four bytes, so 4 byte
+    // chunks alone would only recover (1, 3)
+    val rows = Seq((1L, 0x00000000L), (2L, 0x01010101L), (3L, 0x00000003L))
+    assertSame(joined(rows, 4, 6, maxBucket = rows.size),
+      Set((1L, 2L, 4), (1L, 3L, 2), (2L, 3L, 4)), "fixed")
+    val random = clustered(seed = 31L, bits = 32, bases = 40, perBase = 6, maxFlips = 8)
+    (4 to 7).foreach { k =>
+      val want = allPairs(random, k)
+      assert(want.exists(_._3 == k), s"no pair at distance $k")
+      assertSame(joined(random, 4, k, maxBucket = random.size), want, s"k=$k")
     }
   }
 
