@@ -31,7 +31,11 @@ import java.util.concurrent.{Callable, ExecutionException, ExecutorService, Exec
   *   - extraction is one job: the triples are written straight from a
   *     single pass over (url, html), with no persisted copy and no
   *     second scan. The per-partition lineage rows travel back in an
-  *     accumulator and are committed as a small local relation.
+  *     accumulator and are committed as a small local relation, beside
+  *     the `alias_dict` stage rather than before it.
+  *   - local commits do not fork: every table and export is written
+  *     through [[NioLocalFileSystem.writer]], which sets file
+  *     permissions by NIO instead of a `chmod` process per file.
   *   - a computed stage is read back with the schema it was written
   *     with, so reading it costs no schema-inference job.
   *   - the alias dictionary is small by construction → broadcast join
@@ -69,7 +73,8 @@ object KgPipeline {
   private final class ParquetStore(spark: SparkSession, outRoot: String) extends Store {
     def done(name: String): Boolean = Files.exists(Paths.get(outRoot, name, "_SUCCESS"))
     def commit(name: String, df: DataFrame, append: Boolean): Unit =
-      df.write.mode(if (append) SaveMode.Append else SaveMode.Overwrite).parquet(s"$outRoot/$name")
+      NioLocalFileSystem.writer(df).mode(if (append) SaveMode.Append else SaveMode.Overwrite)
+        .parquet(s"$outRoot/$name")
     def read(name: String, schema: Option[StructType]): DataFrame =
       schema.fold(spark.read)(spark.read.schema).parquet(s"$outRoot/$name")
   }
@@ -119,25 +124,28 @@ object KgPipeline {
     def stage(name: String)(compute: => DataFrame): DataFrame = stageIn(store, name)(compute).df
 
     // ---- stage: extract (triples in ONE job, lineage by accumulator) ---
-    if (!store.done("triples")) {
-      val lineage = spark.sparkContext.collectionAccumulator[LineageRow]
-      store.commit("triples",
-        Extract.run(pages).flatMap { o => o.lineage.foreach(lineage.add); o.triple }.toDF(),
-        append = false)
-      // a retried task adds its partition's row again: keep one each
-      val rows = lineage.value.asScala.groupBy(_.partitionId).valuesIterator.map(_.head).toSeq
-      store.commit("metrics", rows.sortBy(_.partitionId).toDF(), append = true)
-    }
+    val lineage =
+      if (store.done("triples")) None
+      else {
+        val acc = spark.sparkContext.collectionAccumulator[LineageRow]
+        store.commit("triples",
+          Extract.run(pages).flatMap { o => o.lineage.foreach(acc.add); o.triple }.toDF(),
+          append = false)
+        // a retried task adds its partition's row again: keep one each
+        Some(acc.value.asScala.groupBy(_.partitionId).valuesIterator.map(_.head).toSeq.sortBy(_.partitionId))
+      }
     val triples = store.read("triples", Some(Encoders.product[TripleRow].schema))
-
-    // ---- stage: alias dictionary (small, broadcastable) -----------------
-    val aliasDict = stage("alias_dict")(entityAliases(triples))
 
     // two branches from here on, on a pool owned by this run: threads
     // started from the calling thread inherit its Spark local
     // properties and active session
     val pool = Executors.newFixedThreadPool(2)
     try {
+      // ---- stage: alias dictionary (small, broadcastable), beside the
+      // lineage commit ---------------------------------------------------
+      val (_, aliasDict) = both(pool)(
+        lineage.foreach(rows => store.commit("metrics", rows.toDF(), append = true)))(
+        stage("alias_dict")(entityAliases(triples)))
       val (links, (canonicalMap, edges, nodes, adjacency)) = both(pool)(
         // ---- stage: entity linking (broadcast join, no big-side shuffle)
         stage("links")(linkMentions(pages.toDF(), aliasDict))) {
@@ -236,10 +244,14 @@ object KgPipeline {
   /** MinHash-LSH blocking over entity local names + exact-Jaccard
     * verification + iterative min-id connected components → canonical
     * entity map. All candidate generation is built-in expressions.
+    *
+    * `aliasDict` must hold one row per entity, as [[entityAliases]]
+    * returns it (the alias is a function of the entity); the result
+    * then holds one row per entity too.
     */
   def canonicalize(aliasDict: DataFrame): DataFrame = {
     val spark = aliasDict.sparkSession
-    val entities = aliasDict.select("entity", "alias").distinct()
+    val entities = aliasDict.select("entity", "alias")
 
     // char-3-gram shingles of the alias (array_distinct keeps it a set)
     val shingled = entities.withColumn(
@@ -765,7 +777,7 @@ object KgPipeline {
   def writeRdfXml(edges: DataFrame, outDir: String, maxChunk: Int = 1000): Unit = {
     val spark = edges.sparkSession
     import spark.implicits._
-    exportRdfXml(edges, maxChunk, selfContained = true)
+    val docs = exportRdfXml(edges, maxChunk, selfContained = true)
       .mapPartitions { lines =>
         val nonEmpty = lines.filter(_.nonEmpty)
         if (!nonEmpty.hasNext) Iterator.empty
@@ -774,7 +786,7 @@ object KgPipeline {
             s"""<?xml version="1.0" encoding="utf-8"?>\n<rdf:RDF xmlns:rdf="${graft.rdf.Vocab.rdfNs}">""") ++
             nonEmpty ++ Iterator.single("</rdf:RDF>")
       }
-      .write.mode(SaveMode.Overwrite).text(outDir)
+    NioLocalFileSystem.writer(docs).mode(SaveMode.Overwrite).text(outDir)
   }
 
   /** Bucket-materialize a graph table for co-located joins: hash-

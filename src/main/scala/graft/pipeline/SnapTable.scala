@@ -89,7 +89,7 @@ object SnapTable {
     val parent = currentVersion(root, table)
     val version = parent + 1
     val dataDir = Paths.get(root, table, "data", s"v$version").toString
-    df.write.mode(SaveMode.Overwrite).parquet(dataDir)
+    NioLocalFileSystem.writer(df).mode(SaveMode.Overwrite).parquet(dataDir)
     // footer-stats count of just-written files — no recompute of df
     val count = spark.read.parquet(dataDir).count()
     val parentDirs =

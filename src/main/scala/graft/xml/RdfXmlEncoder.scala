@@ -194,13 +194,12 @@ object RdfXmlEncoder {
     val candidates = prefixes.toSeq
       .filter { case (_, ns) => iri.startsWith(ns) && iri.length > ns.length }
       .map { case (p, ns) => (p, iri.substring(ns.length)) }
-      // the local part must be a STRICT NCName or the emitted element
-      // name is invalid XML (e.g. urn:isbn:123 → local "123"); such
-      // predicates are unprefixable → EncodeError upstream, surfaced by
-      // KgPipeline.exportRdfXml as an explicit skip comment
-      .filter { case (_, local) =>
-        !local.exists(c => c == '/' || c == '#' || c == ':') && graft.rdf.Iris.isStrictNCName(local)
-      }
+      // the local part must be an NCName (non-ASCII letters included)
+      // or the emitted element name is invalid XML (e.g. urn:isbn:123 →
+      // local "123"); such predicates are unprefixable → EncodeError
+      // upstream, surfaced by KgPipeline.exportRdfXml as an explicit
+      // skip comment
+      .filter { case (_, local) => graft.rdf.Iris.isNCName(local) }
     if (candidates.isEmpty) None
     else {
       val (p, local) = candidates.maxBy { case (pfx, _) => prefixes(pfx).length }

@@ -153,7 +153,7 @@ class ConnectedComponentsSpec extends AnyFunSuite {
   }
 
   // measured with the driver-side labelling (stable over repeated runs)
-  private val CanonicalizeJobBudget = 8
+  private val CanonicalizeJobBudget = 6
 
   test("canonicalize stays within its Spark-job budget on a small alias dictionary") {
     val s = spark

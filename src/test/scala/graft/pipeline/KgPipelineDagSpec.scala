@@ -12,8 +12,10 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** How [[KgPipeline.run]] executes its DAG: the Spark-job budget of one
-  * run, its overlapping branches failing without leaving jobs behind,
-  * and extract lineage as it lands in the `metrics` table.
+  * run, the processes it starts (none), the entity-keyed dictionary
+  * canonicalization relies on, its overlapping branches failing
+  * without leaving jobs behind, and extract lineage as it lands in the
+  * `metrics` table.
   */
 class KgPipelineDagSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -112,7 +114,7 @@ class KgPipelineDagSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   // measured on these pages (stable over repeated runs)
-  private val RunJobBudget = 23
+  private val RunJobBudget = 21
 
   test("one run over a fresh root stays within its Spark-job budget") {
     val ds = pageTable(2)
@@ -121,6 +123,43 @@ class KgPipelineDagSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(jobs <= RunJobBudget, s"KgPipeline.run ran $jobs Spark jobs, budget $RunJobBudget")
     assert(out("edges").count() > 0 && out("links").count() > 0)
     assert(activeJobs().isEmpty)
+  }
+
+  test("a run starts no operating-system process on its output") {
+    val ds = pageTable(2)
+    val root = freshRoot()
+    StageCache.clear()
+    val recording = new jdk.jfr.Recording()
+    recording.enable("jdk.ProcessStart")
+    recording.start()
+    try KgPipeline.run(spark, ds, root) finally recording.stop()
+    val dump = Files.createTempFile(Paths.get(freshRoot()), "process_start", ".jfr")
+    recording.dump(dump)
+    recording.close()
+    // Spark removes the artifact directory of a garbage-collected
+    // session with a forked `rm -rf`, whichever thread happens to be
+    // running: only commands on this run's root are the run's own
+    val started = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala.map(_.getString("command"))
+    val ours = started.filter(_.contains(root))
+    assert(ours.isEmpty, s"${ours.size} processes started: ${ours.take(5).mkString("; ")}")
+  }
+
+  test("entityAliases keys its dictionary by entity, and canonicalize returns one row per entity") {
+    val s = spark
+    import s.implicits._
+    val triples = Extract.run(pageTable(3)).flatMap(_.triple).toDF()
+    // the premise: subjects recur, within a page and across pages
+    val subjects = triples.select("url", "subj").as[(String, String)].collect().toSeq
+      .filterNot(_._2.startsWith("_:"))
+    val bySubject = subjects.groupBy(_._2).values
+    assert(bySubject.exists(_.size > 1) && bySubject.exists(_.map(_._1).distinct.size > 1), subjects)
+    val dict = KgPipeline.entityAliases(triples).select("entity", "alias").as[(String, String)].collect().toSeq
+    assert(dict.nonEmpty && dict.map(_._1).distinct.size == dict.size, dict)
+    StageCache.clear()
+    val canon = KgPipeline.canonicalize(KgPipeline.entityAliases(triples))
+      .select("entity", "canon").as[(String, String)].collect().toSeq
+    assert(canon.map(_._1).sorted == dict.map(_._1).sorted, canon)
+    assert(canon.toMap.apply("http://ex/c/springfield") == "http://ex/a/Springfield", canon)
   }
 
   test("a failing branch is rethrown only after the other branch finished; a second run resumes the rest") {

@@ -291,6 +291,26 @@ class PipelineSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       graft.rdf.Lit.plain("val1"))))
   }
 
+  test("writeRdfXml keeps non-ASCII property names: rdf-charmod-uris/test002 re-parses to its .nt") {
+    val s = spark
+    import s.implicits._
+    val rel = "rdf-charmod-uris/test002"
+    def fixture(ext: String): Array[Byte] =
+      java.nio.file.Files.readAllBytes(SyntheticPages.fixtureRoot.resolve(rel + ext))
+    val golden = graft.rdf.NTriples.parse(new String(fixture(".nt"), "UTF-8"))
+    val triples = Extract.run(s.createDataset(Seq(SyntheticPages.page(rel + ".rdf", fixture(".rdf"), 0, 0))))
+      .flatMap(_.triple).toDF()
+    val tmp = java.nio.file.Files.createTempDirectory("graft_charmod")
+    val reparsed = try {
+      KgPipeline.writeRdfXml(triples, tmp.resolve("out").toString)
+      tmp.resolve("out").toFile.listFiles().filter(_.getName.endsWith(".txt")).toSeq.flatMap { f =>
+        val content = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        graft.xml.RdfXmlParser.parse(content).fold(e => fail(e.message + "\n" + content), _.triples)
+      }.toSet
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+    assert(golden.size == 2 && reparsed == golden, reparsed)
+  }
+
   test("streaming extraction equals batch extraction on the same pages") {
     val s = spark
     import s.implicits._

@@ -261,4 +261,45 @@ class RdfXmlEncoderSpec extends AnyFunSuite {
     val back = RdfXmlParser.parse(encoded).fold(e => fail(e.message + "\n" + encoded), identity)
     assert(Isomorphism.isomorphic(back.triples, g.triples), encoded)
   }
+
+  test("property names: qname takes non-ASCII NCNames and refuses names that are not NCNames") {
+    val eg = "http://example.org/vocab/"
+    val prefixes = Map("eg" -> eg)
+    assert(RdfXmlEncoder.qname(eg + "título", prefixes).contains("eg:título"))
+    assert(RdfXmlEncoder.qname(eg + "名前", prefixes).contains("eg:名前"))
+    // a digit, a modifier letter outside XML 1.0 Appendix B, a colon
+    Seq("123", "\u02C2x", "a:b", "").foreach(l => assert(RdfXmlEncoder.qname(eg + l, prefixes).isEmpty, l))
+  }
+
+  test("Iris.isNCName is the NCName check of a namespace-aware SAX parser, and its names decode") {
+    val nsAware = {
+      val f = javax.xml.parsers.SAXParserFactory.newInstance()
+      f.setNamespaceAware(true)
+      f.newSAXParser()
+    }
+    def wellFormed(local: String): Boolean =
+      try {
+        nsAware.reset()
+        nsAware.parse(new org.xml.sax.InputSource(new java.io.StringReader(s"""<r xmlns:eg="http://e/"><eg:$local/></r>""")),
+          new org.xml.sax.helpers.DefaultHandler)
+        true
+      } catch { case _: org.xml.sax.SAXException => false }
+    // the decoder's parser is not namespace-aware, so it also takes
+    // names that are not NCNames ("eg:1a"); it must take every NCName
+    def decodes(local: String): Boolean = RdfXmlParser.parse(
+      s"""<rdf:RDF xmlns:rdf="${Vocab.rdfNs}" xmlns:eg="http://e/"><rdf:Description rdf:about="http://s">""" +
+        s"""<eg:$local>v</eg:$local></rdf:Description></rdf:RDF>""").isRight
+    // characters that end a tag name as markup rather than as a name
+    val markup = Set('\t', '\n', '\r', ' ', '<', '>', '/', '&')
+    val names = (0 until 0x10000).map(_.toChar)
+      .filterNot(c => Character.isSurrogate(c) || markup(c))
+      .flatMap(c => Seq(s"${c}a", s"a$c"))
+    def show(ns: Seq[String]) = ns.take(10).map(_.map(c => f"U+${c.toInt}%04X").mkString(" "))
+    val disagree = names.filter(n => Iris.isNCName(n) != wellFormed(n))
+    assert(disagree.isEmpty, show(disagree))
+    val ncNames = names.filter(Iris.isNCName)
+    assert(ncNames.size > 10000 && ncNames.contains("aí") && ncNames.contains("名a"))
+    val undecodable = ncNames.filterNot(decodes)
+    assert(undecodable.isEmpty, show(undecodable))
+  }
 }
