@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.pipeline._
+import graft.pipeline.TextOps.{fingerprintSql, tokenCountSql, wordsSql}
 
 /** Driver contract — the operator registry of the engine.
   *
@@ -299,8 +300,7 @@ object SparkEntry {
     // both engines build the identical augmented set)
     "q215_edit1_pairs" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val w = docs.select(explode(split(lower(col("text")), "[^a-z0-9]+")).as("word"))
-        .where(col("word") =!= "").distinct()
+      val w = docs.select(explode(TextOps.words(col("text"))).as("word")).distinct()
       val aug = w.unionByName(w.where(length(col("word")) >= 5)
         .select(expr("substring(word, 1, length(word) - 1)").as("word")))
       Dedup.editDistance1Pairs(aug).select("a", "b", "dist")
@@ -1226,8 +1226,7 @@ object SparkEntry {
     // aggregates in the recursion, so both engines replay exactly
     "q189_wordpiece" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val words = docs.select(explode(split(lower(col("text")), "[^a-z0-9]+")).as("word"))
-        .where(col("word") =!= "")
+      val words = docs.select(explode(TextOps.words(col("text"))).as("word"))
       Bpe.wordpieceSegment(words).select("word", "tokens", "ntok")
     }),
     // unigram-LM Viterbi segmentation census: the OPTIMAL min-cost
@@ -1238,8 +1237,7 @@ object SparkEntry {
     // unigram Viterbi); occurrence weights join back per type
     "q211_viterbi_segment" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val tok = docs.select(explode(split(lower(col("text")), "[^a-z0-9]+")).as("word"))
-        .where(col("word") =!= "")
+      val tok = docs.select(explode(TextOps.words(col("text"))).as("word"))
       val occ = tok.groupBy(col("word"))
         .agg(count(lit(1)).cast("bigint").as("n_occ"))
       Bpe.viterbiSegmentCensus(occ.select(col("word")))
@@ -1255,8 +1253,7 @@ object SparkEntry {
     // tokenizer owner where longest-match loses and by how much
     "q213_greedy_gap" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val words = docs.select(explode(split(lower(col("text")), "[^a-z0-9]+")).as("word"))
-        .where(col("word") =!= "")
+      val words = docs.select(explode(TextOps.words(col("text"))).as("word"))
       val greedy = Bpe.wordpieceSegment(words)
         .select(col("word"),
           // cost literals spliced from the shared Bpe model (ADVICE-r5
@@ -2668,10 +2665,9 @@ object SparkEntry {
     // symmetric Jaccard misses; prefix-filtered candidates, lossless
     "q81_containment_join" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val words = filter(split(lower(col("text")), "[^a-z0-9]+"), w => w =!= "")
       val aug = docs.select(col("doc_id"), col("text"))
         .unionByName(docs
-          .select(col("doc_id"), words.as("words"))
+          .select(col("doc_id"), TextOps.words(col("text")).as("words"))
           .where(pmod(col("doc_id"), lit(7)) === 0 && size(col("words")) >= 4)
           .select((col("doc_id") + 2000000L).as("doc_id"),
             concat_ws(" ", slice(col("words"), lit(1), expr("size(words) div 2"))).as("text")))
@@ -3112,7 +3108,7 @@ object SparkEntry {
     val sim = (0 until 32).map(b =>
       s"(CASE WHEN s$b > 0 THEN CAST(${1L << b} AS BIGINT) ELSE 0 END)").mkString(" + ")
     s"""WITH toks AS (
-       |  SELECT doc_id, unnest(list_distinct(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> ''))) AS w
+       |  SELECT doc_id, unnest(list_distinct($wordsSql)) AS w
        |  FROM documents
        |), h AS (SELECT doc_id, md5(w) AS h FROM toks),
        |bits AS (SELECT doc_id, $sums FROM h GROUP BY doc_id)
@@ -3128,18 +3124,17 @@ object SparkEntry {
     * [[minhashLshSql]]'s thresholded pair output and q204's unthresholded
     * integer score output. */
   private def minhashCandCtes(width: Int, src: String): String = {
-    val w1 = width - 1
     val sigs = (0 until 12).map(j =>
       s"list_min(list_transform(sh, s -> md5('$j|' || s))) AS m$j").mkString(", ")
     val buckets = (0 until 4).map(b =>
       s"md5(m${3 * b} || m${3 * b + 1} || m${3 * b + 2}) AS k$b").mkString(", ")
     s"""w0 AS (
-       |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '') AS words
+       |  SELECT doc_id, $wordsSql AS words
        |  FROM $src
        |), sh0 AS (
        |  SELECT doc_id,
        |    list_distinct(list_filter(
-       |      list_transform(range(1, greatest(len(words)-$w1, 1)+1), i -> array_to_string(words[i:i+$w1], ' ')),
+       |      ${Dedup.shinglesSql(width)},
        |      s -> s <> '')) AS sh
        |  FROM w0 WHERE len(words) > 0
        |), sig AS (SELECT doc_id, sh, $sigs FROM sh0 WHERE len(sh) > 0),
@@ -3192,7 +3187,7 @@ object SparkEntry {
          |      + (CASE WHEN top_bigram_bp > $QfTopBigramBpMax THEN $QfTopBigramBit ELSE 0 END)
          |      + (CASE WHEN sym_bp > $QfSymbolBpMax THEN $QfSymbolsBit ELSE 0 END)""".stripMargin
     s"""WITH base AS (
-       |  SELECT doc_id, text, list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '') AS words
+       |  SELECT doc_id, text, $wordsSql AS words
        |  FROM $src
        |), counts AS (
        |  SELECT doc_id, len(words) AS nw, len(list_distinct(words)) AS dw FROM base
@@ -3261,7 +3256,7 @@ object SparkEntry {
     val sim = (0 until 32).map(b =>
       s"(CASE WHEN s$b > 0 THEN CAST(${1L << b} AS BIGINT) ELSE 0 END)").mkString(" + ")
     s"""WITH toks AS (
-       |  SELECT doc_id, unnest(list_distinct(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> ''))) AS w
+       |  SELECT doc_id, unnest(list_distinct($wordsSql)) AS w
        |  FROM documents
        |), h AS (SELECT doc_id, md5(w) AS h FROM toks),
        |bits AS (SELECT doc_id, $sums FROM h GROUP BY doc_id),
@@ -3454,8 +3449,8 @@ object SparkEntry {
     * `//` division throughout.
     */
   private def q29Sql: String =
-    """WITH base AS (
-      |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '') AS words
+    s"""WITH base AS (
+      |  SELECT doc_id, $wordsSql AS words
       |  FROM documents
       |), counts AS (
       |  SELECT doc_id, len(words) AS nw, len(list_distinct(words)) AS dw FROM base
@@ -3496,7 +3491,7 @@ object SparkEntry {
     */
   private def q31Sql(src: String = "documents"): String =
     s"""WITH base AS (
-      |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '') AS words
+      |  SELECT doc_id, $wordsSql AS words
       |  FROM $src
       |), grams AS (
       |  SELECT doc_id, CASE WHEN len(words) >= 3
@@ -3586,7 +3581,7 @@ object SparkEntry {
   private def q34Sql(width: Int = 8): String = {
     val w1 = width - 1
     s"""WITH base AS (
-       |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '') AS words
+       |  SELECT doc_id, $wordsSql AS words
        |  FROM documents
        |), occ AS (
        |  SELECT doc_id, CAST(i AS BIGINT) AS pos, md5(array_to_string(words[i:i+$w1], ' ')) AS h
@@ -3668,9 +3663,7 @@ object SparkEntry {
        |  FROM aug
        |), h AS (
        |  SELECT doc_id, url, scheme, hostport, query,
-       |    CASE WHEN scheme = 'https' THEN regexp_replace(hostport, ':443$$', '')
-       |         WHEN scheme = 'http' THEN regexp_replace(hostport, ':80$$', '')
-       |         ELSE hostport END AS host,
+       |    ${Curation.hostSql} AS host,
        |    CASE WHEN path0 = '' THEN '/' ELSE path0 END AS path
        |  FROM c
        |)
@@ -3723,7 +3716,7 @@ object SparkEntry {
   private def q38Sql(width: Int = 8): String = {
     val w1 = width - 1
     s"""WITH base AS (
-       |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '') AS words
+       |  SELECT doc_id, $wordsSql AS words
        |  FROM documents
        |), occ AS (
        |  SELECT doc_id, CAST(i AS BIGINT) AS pos, md5(array_to_string(words[i:i+$w1], ' ')) AS h
@@ -3765,7 +3758,7 @@ object SparkEntry {
   private def q39Sql(seqLen: Int = 512): String =
     s"""WITH tk AS (
        |  SELECT doc_id, source,
-       |    CAST(len(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')) + 1 AS BIGINT) AS n_tokens
+       |    CAST($tokenCountSql + 1 AS BIGINT) AS n_tokens
        |  FROM documents
        |), st AS (
        |  SELECT doc_id, source, n_tokens,
@@ -3784,8 +3777,8 @@ object SparkEntry {
     * COUNT window, same integer mean/hapax arithmetic.
     */
   private def q40Sql: String =
-    """WITH base AS (
-      |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '') AS words
+    s"""WITH base AS (
+      |  SELECT doc_id, $wordsSql AS words
       |  FROM documents
       |), occ AS (
       |  SELECT doc_id, unnest(list_transform(range(1, len(words)), i -> md5(words[i] || ' ' || words[i+1]))) AS h
@@ -3811,8 +3804,8 @@ object SparkEntry {
     * cast back to BIGINT before bin().
     */
   private def q70Sql: String =
-    """WITH base AS (
-      |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '') AS words
+    s"""WITH base AS (
+      |  SELECT doc_id, $wordsSql AS words
       |  FROM documents
       |), occ AS (
       |  SELECT doc_id, unnest(words) AS w FROM base
@@ -3843,8 +3836,8 @@ object SparkEntry {
     * rule).
     */
   private def q101Sql: String =
-    """WITH base AS (
-      |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '') AS words
+    s"""WITH base AS (
+      |  SELECT doc_id, $wordsSql AS words
       |  FROM documents
       |), bg AS (
       |  SELECT doc_id,
@@ -3912,7 +3905,7 @@ object SparkEntry {
     * inputs), `//` == `div` on the non-negative operands.
     */
   private def q76Sql: String =
-    """WITH oldsnap AS (
+    s"""WITH oldsnap AS (
       |  SELECT doc_id, text FROM documents
       |), newsnap AS (
       |  SELECT doc_id,
@@ -3922,12 +3915,12 @@ object SparkEntry {
       |  SELECT doc_id + 1000000 AS doc_id, 'fresh page ' || text AS text
       |  FROM documents WHERE doc_id % 13 = 0
       |), po AS (
-      |  SELECT doc_id, md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS fp_old,
-      |    list_distinct(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '')) AS ws_old
+      |  SELECT doc_id, $fingerprintSql AS fp_old,
+      |    list_distinct($wordsSql) AS ws_old
       |  FROM oldsnap
       |), pn AS (
-      |  SELECT doc_id, md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS fp_new,
-      |    list_distinct(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '')) AS ws_new
+      |  SELECT doc_id, $fingerprintSql AS fp_new,
+      |    list_distinct($wordsSql) AS ws_new
       |  FROM newsnap
       |), j AS (SELECT * FROM po FULL OUTER JOIN pn USING (doc_id))
       |SELECT doc_id,
@@ -3954,7 +3947,7 @@ object SparkEntry {
   private def q77Sql(width: Int = 4): String = {
     val w1 = width - 1
     s"""WITH base AS (
-       |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '') AS words
+       |  SELECT doc_id, $wordsSql AS words
        |  FROM documents
        |), ln AS (
        |  SELECT doc_id, CAST(i AS BIGINT) AS line_idx,
@@ -3993,26 +3986,17 @@ object SparkEntry {
     * sorted distinct words as outlinks), same href regex, same q36
     * domain ladder on both endpoints, same collapse-then-rollup.
     */
-  private def q83Sql: String = {
-    val sch = Curation.UrlSchemeRe
-    val hst = Curation.UrlHostRe
-    def domSql(u: String) =
-      s"""CASE WHEN lower(regexp_extract($u, '$hst', 1)) <> ''
-         |  THEN regexp_replace(
-         |    CASE WHEN lower(regexp_extract($u, '$sch', 1)) = 'https' THEN regexp_replace(lower(regexp_extract($u, '$hst', 1)), ':443$$', '')
-         |         WHEN lower(regexp_extract($u, '$sch', 1)) = 'http' THEN regexp_replace(lower(regexp_extract($u, '$hst', 1)), ':80$$', '')
-         |         ELSE lower(regexp_extract($u, '$hst', 1)) END, '^www\\.', '')
-         |  ELSE NULL END""".stripMargin
+  private def q83Sql: String =
     s"""WITH aug AS (
        |  SELECT $syntheticUrlSql AS url,
        |    '<p>' || text || '</p>' || array_to_string(list_transform(
-       |      list_sort(list_distinct(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '')))[1:5],
+       |      list_sort(list_distinct($wordsSql))[1:5],
        |      w -> '<a href="https://' || w || '.example.net/p">' || w || '</a>'), '') AS html
        |  FROM documents
        |), occ AS (
        |  SELECT url, unnest(regexp_extract_all(html, 'href="([^"]+)"', 1)) AS href FROM aug
        |), dom AS (
-       |  SELECT ${domSql("url")} AS src_domain, ${domSql("href")} AS dst_domain, url
+       |  SELECT ${Curation.domainSql("url")} AS src_domain, ${Curation.domainSql("href")} AS dst_domain, url
        |  FROM occ
        |), pp AS (
        |  SELECT src_domain, dst_domain, url, count(*) AS n FROM dom
@@ -4024,7 +4008,23 @@ object SparkEntry {
        |  CAST(count(*) AS BIGINT) AS n_pages,
        |  CAST(CASE WHEN src_domain = dst_domain THEN 1 ELSE 0 END AS BIGINT) AS is_internal
        |FROM pp GROUP BY 1, 2""".stripMargin
-  }
+
+  /** The q83 link graph as a weighted edge list for the q84/q87 walks:
+    * `g` materializes q83, `e0` is its symmetrized edge set without
+    * self-loops, `ed` carries each edge's source out-degree. (q106's
+    * `e0` is MATERIALIZED and leaves its second branch's columns
+    * unnamed, so it keeps its own text.)
+    */
+  private def q83WeightedEdgeCtes: String =
+    s"""g AS MATERIALIZED (${q83Sql}),
+       |e0 AS (
+       |  SELECT DISTINCT src, dst FROM (
+       |    SELECT src_domain AS src, dst_domain AS dst FROM g WHERE src_domain <> dst_domain
+       |    UNION ALL
+       |    SELECT dst_domain AS src, src_domain AS dst FROM g WHERE src_domain <> dst_domain
+       |  )
+       |), deg AS (SELECT src, count(*) AS deg FROM e0 GROUP BY src),
+       |ed AS MATERIALIZED (SELECT e.src, e.dst, d.deg FROM e0 e JOIN deg d USING (src))""".stripMargin
 
   /** DuckDB twin of q210 (modularity census): the symmetrized q83
     * domain graph canonicalized to distinct least/greatest string
@@ -4162,10 +4162,10 @@ object SparkEntry {
     * same (score, doc_id) ordering, same greatest(n−1, 1) divisor.
     */
   private def q86Sql: String =
-    """WITH base AS (
+    s"""WITH base AS (
       |  SELECT doc_id, source,
       |    CAST(CASE WHEN len(words) > 0 THEN len(list_distinct(words)) * 10000 // len(words) ELSE 0 END AS BIGINT) AS score
-      |  FROM (SELECT doc_id, source, list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '') AS words
+      |  FROM (SELECT doc_id, source, $wordsSql AS words
       |        FROM documents)
       |), r AS (
       |  SELECT doc_id, source, score,
@@ -4183,25 +4183,16 @@ object SparkEntry {
     * same (domain, term) rollup and top-k window.
     */
   private def q85Sql(k: Int = 3): String = {
-    val sch = Curation.UrlSchemeRe
-    val hst = Curation.UrlHostRe
-    val domHref =
-      s"""CASE WHEN lower(regexp_extract(href, '$hst', 1)) <> ''
-         |  THEN regexp_replace(
-         |    CASE WHEN lower(regexp_extract(href, '$sch', 1)) = 'https' THEN regexp_replace(lower(regexp_extract(href, '$hst', 1)), ':443$$', '')
-         |         WHEN lower(regexp_extract(href, '$sch', 1)) = 'http' THEN regexp_replace(lower(regexp_extract(href, '$hst', 1)), ':80$$', '')
-         |         ELSE lower(regexp_extract(href, '$hst', 1)) END, '^www\\.', '')
-         |  ELSE NULL END""".stripMargin
     s"""WITH aug AS (
        |  SELECT '<p>' || text || '</p>' || array_to_string(list_transform(
-       |      list_sort(list_distinct(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '')))[1:5],
+       |      list_sort(list_distinct($wordsSql))[1:5],
        |      w -> '<a href="https://' || w || '.example.net/p">' || w || ' link</a>'), '') AS html
        |  FROM documents
        |), tags AS (
        |  SELECT unnest(regexp_extract_all(html, '<a href="[^"]+"[^>]*>[^<]*</a>', 0)) AS tag FROM aug
        |), occ AS (
-       |  SELECT $domHref AS dst_domain,
-       |    unnest(list_filter(regexp_split_to_array(lower(anchor), '[^a-z0-9]+'), x -> x <> '')) AS term
+       |  SELECT ${Curation.domainSql("href")} AS dst_domain,
+       |    unnest(${wordsSql("anchor")}) AS term
        |  FROM (SELECT regexp_extract(tag, 'href="([^"]+)"', 1) AS href,
        |               regexp_extract(tag, '>([^<]*)</a>', 1) AS anchor FROM tags)
        |), cnt AS (
@@ -4227,15 +4218,7 @@ object SparkEntry {
          |  FROM ed e JOIN r${i - 1} ON r${i - 1}.node = e.src GROUP BY e.dst
          |)""".stripMargin
     }.mkString(", ")
-    s"""WITH g AS MATERIALIZED (${q83Sql}),
-       |e0 AS (
-       |  SELECT DISTINCT src, dst FROM (
-       |    SELECT src_domain AS src, dst_domain AS dst FROM g WHERE src_domain <> dst_domain
-       |    UNION ALL
-       |    SELECT dst_domain AS src, src_domain AS dst FROM g WHERE src_domain <> dst_domain
-       |  )
-       |), deg AS (SELECT src, count(*) AS deg FROM e0 GROUP BY src),
-       |ed AS MATERIALIZED (SELECT e.src, e.dst, d.deg FROM e0 e JOIN deg d USING (src)),
+    s"""WITH $q83WeightedEdgeCtes,
        |r0 AS (SELECT DISTINCT src AS node, CAST(1000000 AS BIGINT) AS r FROM e0),
        |$iterCtes
        |SELECT node AS domain, r, CAST(rank AS BIGINT) AS rank
@@ -6773,7 +6756,7 @@ object SparkEntry {
     * Spark side's literal explode.
     */
   private val q93Sql: String =
-    """WITH aug AS (
+    s"""WITH aug AS (
       |  SELECT doc_id,
       |    CASE WHEN doc_id % 4 = 0 THEN text || ' free crypto win bonus click offer'
       |         ELSE text END AS text,
@@ -6782,7 +6765,7 @@ object SparkEntry {
       |  FROM documents
       |), occ AS (
       |  SELECT doc_id, label, is_train,
-      |    unnest(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '')) AS w
+      |    unnest($wordsSql) AS w
       |  FROM aug
       |), tocc AS (
       |  SELECT * FROM occ WHERE is_train = 1
@@ -6916,7 +6899,7 @@ object SparkEntry {
        |    CASE WHEN doc_id % 3 = 0 THEN 'subscribe to our newsletter ' || text ELSE text END AS text
        |  FROM documents
        |), base AS (
-       |  SELECT doc_id, source, list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '') AS words
+       |  SELECT doc_id, source, $wordsSql AS words
        |  FROM aug
        |), ln AS MATERIALIZED (
        |  SELECT doc_id, source, CAST(i AS BIGINT) AS line_idx,
@@ -6964,15 +6947,7 @@ object SparkEntry {
          |  FULL JOIN seeds s ON s.node = f.node
          |)""".stripMargin
     }.mkString(", ")
-    s"""WITH g AS MATERIALIZED (${q83Sql}),
-       |e0 AS (
-       |  SELECT DISTINCT src, dst FROM (
-       |    SELECT src_domain AS src, dst_domain AS dst FROM g WHERE src_domain <> dst_domain
-       |    UNION ALL
-       |    SELECT dst_domain AS src, src_domain AS dst FROM g WHERE src_domain <> dst_domain
-       |  )
-       |), deg AS (SELECT src, count(*) AS deg FROM e0 GROUP BY src),
-       |ed AS MATERIALIZED (SELECT e.src, e.dst, d.deg FROM e0 e JOIN deg d USING (src)),
+    s"""WITH $q83WeightedEdgeCtes,
        |seeds AS MATERIALIZED (
        |  SELECT DISTINCT src AS node FROM e0 WHERE substr(md5(src), 1, 1) IN ('0','1','2','3')
        |),
@@ -7023,22 +6998,21 @@ object SparkEntry {
     * basis-point division on non-negative operands.
     */
   private def q81Sql(tNum: Int = 4, tDen: Int = 5, width: Int = 3): String = {
-    val w1 = width - 1
     s"""WITH aug AS (
        |  SELECT doc_id, text FROM documents
        |  UNION ALL
        |  SELECT doc_id + 2000000 AS doc_id,
        |    array_to_string(words[1:(len(words) // 2)], ' ') AS text
-       |  FROM (SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '') AS words
+       |  FROM (SELECT doc_id, $wordsSql AS words
        |        FROM documents)
        |  WHERE doc_id % 7 = 0 AND len(words) >= 4
        |), w0 AS (
-       |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '') AS words
+       |  SELECT doc_id, $wordsSql AS words
        |  FROM aug
        |), sh0 AS (
        |  SELECT doc_id,
        |    list_distinct(list_filter(
-       |      list_transform(range(1, greatest(len(words)-$w1, 1)+1), i -> array_to_string(words[i:i+$w1], ' ')),
+       |      ${Dedup.shinglesSql(width)},
        |      s -> s <> '')) AS sh
        |  FROM w0 WHERE len(words) > 0
        |), g AS (SELECT doc_id, unnest(sh) AS s FROM sh0 WHERE len(sh) > 0),
@@ -7084,7 +7058,7 @@ object SparkEntry {
     s"""WITH tf AS (
        |  SELECT w AS term, doc_id, count(*) AS tf
        |  FROM (
-       |    SELECT doc_id, unnest(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '')) AS w
+       |    SELECT doc_id, unnest($wordsSql) AS w
        |    FROM documents
        |  ) GROUP BY w, doc_id
        |), seg AS (
@@ -7115,7 +7089,7 @@ object SparkEntry {
     val u = (1 to 6).map(i => s"CAST(${nib(i)} AS BIGINT) * ${1L << (4 * (6 - i))}").mkString(" + ")
     s"""WITH b AS (
        |  SELECT doc_id,
-       |    CAST(len(list_distinct(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> ''))) + 1 AS BIGINT) AS weight,
+       |    CAST(len(list_distinct($wordsSql)) + 1 AS BIGINT) AS weight,
        |    CAST($u AS BIGINT) AS u
        |  FROM documents
        |)
@@ -7141,9 +7115,7 @@ object SparkEntry {
        |  FROM aug WHERE lower(regexp_extract(url, '$hst', 1)) <> ''
        |), parsed AS MATERIALIZED (
        |  SELECT url,
-       |    regexp_replace(CASE WHEN scheme = 'https' THEN regexp_replace(hostport, ':443$$', '')
-       |         WHEN scheme = 'http' THEN regexp_replace(hostport, ':80$$', '')
-       |         ELSE hostport END, '^www\\.', '') AS domain,
+       |    regexp_replace(${Curation.hostSql}, '^www\\.', '') AS domain,
        |    CASE WHEN path0 = '' THEN '/' ELSE path0 END AS path
        |  FROM c
        |), rb AS (
@@ -7213,7 +7185,7 @@ object SparkEntry {
        |  FROM aug a JOIN qf USING (doc_id) LEFT JOIN dc USING (doc_id)
        |),
        |s3 AS MATERIALIZED (
-       |  SELECT doc_id, text, md5(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS fp
+       |  SELECT doc_id, text, $fingerprintSql AS fp
        |  FROM s0 WHERE early IS NULL
        |),
        |keepers AS (SELECT fp, min(doc_id) AS keep_id FROM s3 GROUP BY fp),
@@ -7250,9 +7222,7 @@ object SparkEntry {
        |  FROM aug WHERE lower(regexp_extract(url, '$hst', 1)) <> ''
        |), d AS (
        |  SELECT url,
-       |    regexp_replace(CASE WHEN scheme = 'https' THEN regexp_replace(hostport, ':443$$', '')
-       |         WHEN scheme = 'http' THEN regexp_replace(hostport, ':80$$', '')
-       |         ELSE hostport END, '^www\\.', '') AS domain
+       |    regexp_replace(${Curation.hostSql}, '^www\\.', '') AS domain
        |  FROM c
        |)
        |SELECT url, domain,
@@ -7271,7 +7241,7 @@ object SparkEntry {
     }.mkString(",\n")
     val joins = (1 until phrase.size).map(o => s"JOIN m$o USING (doc_id, i)").mkString(" ")
     s"""WITH t AS (
-       |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '') AS w
+       |  SELECT doc_id, $wordsSql AS w
        |  FROM documents
        |),
        |p AS (SELECT doc_id, generate_subscripts(w, 1) AS i, unnest(w) AS tok FROM t),
@@ -7288,7 +7258,7 @@ object SparkEntry {
     */
   private def q45Sql(targetModulus: Int = 37, hexLen: Int = 3): String =
     s"""WITH base AS (
-       |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '') AS words,
+       |  SELECT doc_id, $wordsSql AS words,
        |    doc_id % $targetModulus = 0 AS is_t
        |  FROM documents
        |), occ AS (
@@ -7316,8 +7286,8 @@ object SparkEntry {
        |WHERE d.doc_id % $targetModulus <> 0""".stripMargin
 
   private def q41Sql: String =
-    """WITH we AS (
-      |  SELECT doc_id, unnest(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '')) AS term
+    s"""WITH we AS (
+      |  SELECT doc_id, unnest($wordsSql) AS term
       |  FROM documents
       |), tf AS (
       |  SELECT doc_id, term, count(*) AS tf FROM we GROUP BY doc_id, term
@@ -7337,7 +7307,7 @@ object SparkEntry {
     */
   private def q47Sql(qModulus: Int = 41, k: Int = 5): String =
     s"""WITH corpus AS (
-       |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '') AS words
+       |  SELECT doc_id, $wordsSql AS words
        |  FROM documents WHERE doc_id % $qModulus <> 0
        |), occ AS (
        |  SELECT doc_id, unnest(words) AS term FROM corpus
@@ -7350,7 +7320,7 @@ object SparkEntry {
        |), scal AS (
        |  SELECT count(DISTINCT doc_id) AS n_docs, sum(tf) AS total_tokens FROM tf
        |), qt AS (
-       |  SELECT DISTINCT doc_id AS qid, unnest(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '')) AS term
+       |  SELECT DISTINCT doc_id AS qid, unnest($wordsSql) AS term
        |  FROM documents WHERE doc_id % $qModulus = 0
        |), scored AS (
        |  SELECT qid, st.doc_id, count(*) AS n_terms,
@@ -7377,14 +7347,13 @@ object SparkEntry {
     * all BIGINT); quadratic is fine at the sf0.01 gate scale.
     */
   private def q59Sql(width: Int = 3, tNum: Int = 1, tDen: Int = 2): String = {
-    val w1 = width - 1
     s"""WITH w0 AS (
-       |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '') AS words
+       |  SELECT doc_id, $wordsSql AS words
        |  FROM documents
        |), sh0 AS (
        |  SELECT doc_id,
        |    list_distinct(list_filter(
-       |      list_transform(range(1, greatest(len(words)-$w1, 1)+1), i -> array_to_string(words[i:i+$w1], ' ')),
+       |      ${Dedup.shinglesSql(width)},
        |      s -> s <> '')) AS sh
        |  FROM w0 WHERE len(words) > 0
        |), g AS (SELECT doc_id, unnest(sh) AS s FROM sh0 WHERE len(sh) > 0),
@@ -7403,8 +7372,8 @@ object SparkEntry {
     * group-bys — same register derivation per group.
     */
   private def q58Sql: String =
-    """WITH base AS (
-      |  SELECT source, list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '') AS words
+    s"""WITH base AS (
+      |  SELECT source, $wordsSql AS words
       |  FROM documents
       |), tri AS (
       |  SELECT source, unnest(CASE WHEN len(words) >= 3
@@ -7439,8 +7408,8 @@ object SparkEntry {
       |FROM fin""".stripMargin
 
   private def q48Sql: String =
-    """WITH base AS (
-      |  SELECT list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '') AS words
+    s"""WITH base AS (
+      |  SELECT $wordsSql AS words
       |  FROM documents
       |), tri AS (
       |  SELECT unnest(CASE WHEN len(words) >= 3
@@ -7524,7 +7493,7 @@ object SparkEntry {
     */
   private def q51Sql(depth: Int = 4, hexLen: Int = 3, k: Int = 10): String =
     s"""WITH occ AS (
-       |  SELECT unnest(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '')) AS term
+       |  SELECT unnest($wordsSql) AS term
        |  FROM documents
        |), tf AS (
        |  SELECT term, count(*) AS cnt FROM occ GROUP BY term
@@ -7607,7 +7576,7 @@ object SparkEntry {
   private def q55Sql: String =
     s"""WITH s AS (
        |  SELECT source, count(*) AS n_docs,
-       |    sum(len(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> ''))) AS n_tokens
+       |    sum($tokenCountSql) AS n_tokens
        |  FROM documents GROUP BY source
        |), w AS (
        |  SELECT *, CAST(floor(sqrt(CAST(n_tokens AS DOUBLE))) AS BIGINT) AS w FROM s
@@ -7652,7 +7621,7 @@ object SparkEntry {
     */
   private def q57Sql(window: Int = 128, stride: Int = 96): String =
     s"""WITH base AS (
-       |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '') AS words
+       |  SELECT doc_id, $wordsSql AS words
        |  FROM documents
        |), sized AS (
        |  SELECT doc_id, words, len(words) AS n FROM base WHERE len(words) > 0
@@ -7744,7 +7713,7 @@ object SparkEntry {
     s"""WITH mix AS (${q55Sql}),
        |toks AS (
        |  SELECT source, doc_id,
-       |    CAST(len(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')) AS BIGINT) AS n_tok,
+       |    CAST($tokenCountSql AS BIGINT) AS n_tok,
        |    md5('bs|' || CAST(doc_id AS VARCHAR)) AS ord
        |  FROM documents
        |),
@@ -7847,7 +7816,7 @@ object SparkEntry {
     */
   private def q62Sql(vocabTop: Int = 64, minPair: Int = 5): String =
     s"""WITH toks AS (
-       |  SELECT doc_id, unnest(list_distinct(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> ''))) AS w
+       |  SELECT doc_id, unnest(list_distinct($wordsSql)) AS w
        |  FROM documents
        |),
        |cw AS (SELECT w, count(*) AS cnt FROM toks GROUP BY w),
@@ -8175,8 +8144,8 @@ object SparkEntry {
         |  CAST(csize * n_clusters AS BIGINT) AS n_docs FROM uni""".stripMargin,
     // q202: the q19 tokenizer, counts, frequency-of-frequencies
     "q202_freq_spectrum" ->
-      """WITH toks AS (
-        |  SELECT unnest(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '')) AS w
+      s"""WITH toks AS (
+        |  SELECT unnest($wordsSql) AS w
         |  FROM documents
         |), freq AS (SELECT w, count(*) AS f FROM toks GROUP BY w)
         |SELECT CAST(f AS BIGINT) AS f, CAST(count(*) AS BIGINT) AS n_types,
@@ -8416,7 +8385,7 @@ object SparkEntry {
     // resource the Spark side loads — DuckDB segments independently
     "q25_bpe_vocab_subwords" ->
       s"""SELECT doc_id,
-        |  CAST(coalesce(list_sum(list_transform(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> ''),
+        |  CAST(coalesce(list_sum(list_transform($wordsSql,
         |           w -> len(regexp_extract_all(w, '${pipeline.Bpe.trainedVocabPattern}')))), 0) AS BIGINT) AS bpe_subwords
         |FROM documents""".stripMargin,
     "q18_ann_brute_int" ->
@@ -8437,8 +8406,8 @@ object SparkEntry {
         |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY dot DESC, corpus_id) AS rank FROM s
         |) WHERE rank <= 5""".stripMargin,
     "q19_entity_link_docs" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '')) AS token
+      s"""WITH toks AS (
+        |  SELECT doc_id, unnest($wordsSql) AS token
         |  FROM documents
         |), aliases AS (SELECT DISTINCT token FROM toks WHERE length(token) >= 8),
         |links AS (
@@ -8485,13 +8454,13 @@ object SparkEntry {
       """SELECT event_type, count(*) AS n, round(min(value), 4) AS min_value, round(max(value), 4) AS max_value
         |FROM events GROUP BY event_type""".stripMargin,
     "q8_dedup_exact" ->
-      """SELECT md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS fp,
+      s"""SELECT $fingerprintSql AS fp,
         |       min(doc_id) AS keep_id, count(*) AS n_copies
         |FROM documents GROUP BY 1""".stripMargin,
     "q9_token_stats" ->
       s"""SELECT doc_id,
-        |  len(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')) AS tokens,
-        |  CAST(coalesce(list_sum(list_transform(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> ''),
+        |  $tokenCountSql AS tokens,
+        |  CAST(coalesce(list_sum(list_transform($wordsSql,
         |           w -> len(regexp_extract_all(w, '${pipeline.TextOps.subwordPattern}')))), 0) AS BIGINT) AS subwords
         |FROM documents""".stripMargin,
     "q10_quality" -> s"SELECT doc_id, $q10QualityExpr AS quality\nFROM documents",
@@ -8516,11 +8485,11 @@ object SparkEntry {
         |       ELSE 'und' END AS lang_id
         |FROM documents""".stripMargin,
     "q12_fingerprint" ->
-      """SELECT doc_id, md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS fp FROM documents""",
+      s"""SELECT doc_id, $fingerprintSql AS fp FROM documents""",
     "q13_ngram_jaccard" ->
-      """WITH toks AS (
+      s"""WITH toks AS (
         |  SELECT DISTINCT doc_id, source,
-        |         unnest(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '')) AS token
+        |         unnest($wordsSql) AS token
         |  FROM documents
         |), sizes AS (
         |  SELECT doc_id AS sid, count(*) AS sz FROM toks GROUP BY doc_id

@@ -191,9 +191,8 @@ object Bpe {
     * greedy segmentation over the same vocab is).
     */
   def trainedSubwordCount(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val words = filter(split(lower(text), "[^a-z0-9]+"), t => t =!= "")
     // NULL text counts 0, matching the oracle's coalesce(..., 0)
-    coalesce(aggregate(words, lit(0L),
+    coalesce(aggregate(TextOps.words(text), lit(0L),
       (acc, w) => acc + size(regexp_extract_all(w, lit(trainedVocabPattern))).cast("bigint")), lit(0L))
   }
 

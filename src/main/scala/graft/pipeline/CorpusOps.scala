@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -13,9 +13,6 @@ import org.apache.spark.sql.functions._
   */
 object CorpusOps {
 
-  private[pipeline] def wordsExpr: Column =
-    filter(split(lower(col("text")), "[^a-z0-9]+"), w => w =!= "")
-
   /** Vocabulary frequency-of-frequencies spectrum — the corpus-health
     * census behind Zipf-law diagnostics and Good-Turing smoothing
     * inputs: for each token frequency f, how many distinct types occur
@@ -24,7 +21,7 @@ object CorpusOps {
     * vocabulary-sized count table); all integers.
     */
   def freqSpectrum(documents: DataFrame): DataFrame = {
-    val freq = documents.select(explode(wordsExpr).as("w"))
+    val freq = documents.select(explode(TextOps.words(col("text"))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("f"))
     freq.groupBy(col("f")).agg(count(lit(1)).as("n_types"))
       .select(col("f").cast("bigint").as("f"),
@@ -181,7 +178,7 @@ object CorpusOps {
     * boundary materializes 32-hex digests, not raw word pairs.
     */
   def bigramLm(documents: DataFrame): DataFrame = {
-    val base = documents.select(col("doc_id"), wordsExpr.as("words"))
+    val base = documents.select(col("doc_id"), TextOps.words(col("text")).as("words"))
     val w = col("words")
     val bgExpr = when(size(w) >= 2,
       transform(sequence(lit(1), size(w) - 1),
@@ -237,7 +234,7 @@ object CorpusOps {
     * exploded corpus.
     */
   def surprisalBits(documents: DataFrame): DataFrame = {
-    val occ = documents.select(col("doc_id"), explode(wordsExpr).as("w"))
+    val occ = documents.select(col("doc_id"), explode(TextOps.words(col("text"))).as("w"))
     val freq = occ.groupBy(col("w")).agg(count(lit(1)).as("cnt"))
     val scalars = freq.agg(sum(col("cnt")).as("n_total"))
     val kw = freq.crossJoin(broadcast(scalars))
@@ -293,7 +290,7 @@ object CorpusOps {
       transform(sequence(lit(1), size(w) - 1),
         i => concat(element_at(w, i), lit(" "), element_at(w, i + 1))))
       .otherwise(array().cast("array<string>"))
-    val exploded = documents.select(col("doc_id"), wordsExpr.as("words"))
+    val exploded = documents.select(col("doc_id"), TextOps.words(col("text")).as("words"))
       .select(col("doc_id"), explode(bigramsExpr).as("b"))
       .localCheckpoint(true)
     val c2 = exploded.where(pmod(col("doc_id"), lit(2)) === 0)
@@ -301,7 +298,7 @@ object CorpusOps {
     val c1 = c2.groupBy(substring_index(col("b"), " ", 1).as("w1"))
       .agg(sum(col("c2")).as("c1"))
     val vocab = documents.where(pmod(col("doc_id"), lit(2)) === 0)
-      .select(explode(wordsExpr).as("t"))
+      .select(explode(TextOps.words(col("text"))).as("t"))
       .agg(countDistinct(col("t")).as("v"))
     val scored = exploded
       .join(c2, Seq("b"), "left")
@@ -353,7 +350,7 @@ object CorpusOps {
   def dsirScore(documents: DataFrame, targetModulus: Int = 37,
                 bucketHexLen: Int = 3): DataFrame = {
     require(bucketHexLen >= 1 && bucketHexLen <= 8, "bucket hex length in [1,8]")
-    val base = documents.select(col("doc_id"), wordsExpr.as("words"),
+    val base = documents.select(col("doc_id"), TextOps.words(col("text")).as("words"),
       (col("doc_id") % targetModulus === 0).as("is_t"))
     val w = col("words")
     val uni = transform(w, x => substring(md5(x), 1, bucketHexLen))
@@ -412,7 +409,7 @@ object CorpusOps {
     // fat-bucket regime; a real vocabulary's posting lists are sparse.
     // A/B'd: eager-checkpointing tf (it is consumed twice) does NOT
     // help (7.4s vs 7.1s) — the double scan is not the bottleneck.
-    val tf = corpus.select(col("doc_id"), explode(wordsExpr).as("term"))
+    val tf = corpus.select(col("doc_id"), explode(TextOps.words(col("text"))).as("term"))
       .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
     val withStats = tf
       .withColumn("dl", sum(col("tf")).over(Window.partitionBy(col("doc_id"))))
@@ -420,7 +417,7 @@ object CorpusOps {
     val scalars = tf.agg(
       countDistinct(col("doc_id")).as("n_docs"),
       sum(col("tf")).as("total_tokens"))
-    val qterms = queries.select(col("doc_id").as("qid"), explode(wordsExpr).as("term")).distinct()
+    val qterms = queries.select(col("doc_id").as("qid"), explode(TextOps.words(col("text"))).as("term")).distinct()
     val contrib = expr(
       """(2 * (n_docs - df) + 1) * 10000 div (2 * df + 1)
         | * tf * 22 * total_tokens
@@ -473,7 +470,7 @@ object CorpusOps {
     require(phrase.size >= 2 && phrase.size <= 8, "phrase length in [2,8]")
     require(phrase.forall(_.matches("[a-z0-9]+")), "terms must be lowercase word tokens")
     val toks = documents
-      .select(col("doc_id"), posexplode(wordsExpr).as(Seq("p0", "tok")))
+      .select(col("doc_id"), posexplode(TextOps.words(col("text"))).as(Seq("p0", "tok")))
       .select(col("doc_id"), (col("p0") + 1).cast("bigint").as("i"), col("tok"))
     var m = toks.where(col("tok") === phrase.head).select(col("doc_id"), col("i"))
     for (off <- 1 until phrase.size) {
@@ -547,7 +544,7 @@ object CorpusOps {
         i => md5(concat_ws(" ", element_at(w, i), element_at(w, i + 1), element_at(w, i + 2)))))
       .otherwise(array().cast("array<string>"))
     val gc = groupCols.map(col)
-    val h = documents.select(gc :+ wordsExpr.as("words"): _*)
+    val h = documents.select(gc :+ TextOps.words(col("text")).as("words"): _*)
       .select(gc :+ explode(triExpr).as("h"): _*)
     val stripped = regexp_replace(substring(col("h"), 3, 30), "^0+", "")
     val nib = substring(stripped, 1, 1)
@@ -592,7 +589,7 @@ object CorpusOps {
   def chunkSliding(documents: DataFrame, window: Int = 128, stride: Int = 96): DataFrame = {
     require(window >= 1 && stride >= 1 && stride <= window,
       "need 1 <= stride <= window")
-    val base = documents.select(col("doc_id"), wordsExpr.as("words"))
+    val base = documents.select(col("doc_id"), TextOps.words(col("text")).as("words"))
       .withColumn("n", size(col("words")))
       .where(col("n") > 0)
     // integer ceil: ceil((n-window)/stride) = (n-window+stride-1) div stride
@@ -693,7 +690,7 @@ object CorpusOps {
                    k: Int = 10): DataFrame = {
     require(depth >= 1 && depth <= 8, "depth in [1,8]")
     require(hexLen >= 1 && hexLen <= 8, "bucket hex length in [1,8]")
-    val tf = documents.select(explode(wordsExpr).as("term"))
+    val tf = documents.select(explode(TextOps.words(col("text"))).as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("cnt"))
     val expanded = tf.select(col("term"), col("cnt"),
         explode(sequence(lit(0), lit(depth - 1))).as("r"))
@@ -736,7 +733,7 @@ object CorpusOps {
   def tfIdfTopK(documents: DataFrame, k: Int = 3): DataFrame = {
     require(k >= 1, "k must be >= 1")
     val we = documents
-      .select(col("doc_id"), explode(wordsExpr).as("term"))
+      .select(col("doc_id"), explode(TextOps.words(col("text"))).as("term"))
     val tf = we.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
     val withDf = tf.withColumn("df", count(lit(1)).over(Window.partitionBy(col("term"))))
       .withColumn("score", expr("tf * 1000000 div df"))
@@ -773,7 +770,7 @@ object CorpusOps {
   def postingBlocks(documents: DataFrame, blockSize: Int = 128): DataFrame = {
     require(blockSize >= 2, "block size must be >= 2")
     val tf = documents
-      .select(col("doc_id"), explode(wordsExpr).as("term"))
+      .select(col("doc_id"), explode(TextOps.words(col("text"))).as("term"))
       .groupBy(col("term"), col("doc_id")).agg(count(lit(1)).as("tf"))
     val seg = tf
       .withColumn("block", expr(s"doc_id div $blockSize"))
@@ -860,7 +857,7 @@ object CorpusOps {
     */
   def nbClassifyBits(labeled: DataFrame): DataFrame = {
     val occ = labeled.select(col("doc_id"), col("label").cast("bigint").as("label"),
-      col("is_train"), explode(wordsExpr).as("w"))
+      col("is_train"), explode(TextOps.words(col("text"))).as("w"))
     val trainOcc = occ.where(col("is_train") === 1)
     val vocab = trainOcc.select(col("w")).distinct()
     val vSize = vocab.agg(count(lit(1)).as("v"))

@@ -29,8 +29,7 @@ object Curation {
     * emitted value engine-exact.
     */
   def repetitionStats(documents: DataFrame): DataFrame = {
-    val words = filter(split(lower(col("text")), "[^a-z0-9]+"), w => w =!= "")
-    val base = documents.select(col("doc_id"), words.as("words"))
+    val base = documents.select(col("doc_id"), TextOps.words(col("text")).as("words"))
     val counts = base.select(
       col("doc_id"),
       size(col("words")).cast("bigint").as("nw"),
@@ -84,8 +83,7 @@ object Curation {
     // filter (measured 40x slower at sf0.1). With a complex explode
     // child the inference rule skips (the SPARK-33544 guard), which is
     // exactly the q29 shape.
-    val wordsExpr = filter(split(lower(col("text")), "[^a-z0-9]+"), w => w =!= "")
-    val base = documents.select(col("doc_id"), wordsExpr.as("words"))
+    val base = documents.select(col("doc_id"), TextOps.words(col("text")).as("words"))
     val w = col("words")
     val gramsExpr = when(size(w) >= n,
       array_distinct(transform(sequence(lit(1), size(w) - (n - 1)),
@@ -172,29 +170,6 @@ object Curation {
         col("best_quality").cast("bigint").as("best_quality"))
   }
 
-  /** Duplicate-span detection — exact SUBSTRING-level dedup, the family
-    * member document-level hashing (q8) and near-dup LSH (q17) cannot
-    * express: find every maximal run of words that occurs (anywhere in
-    * the corpus, including elsewhere in the same document) at least
-    * twice, as in "Deduplicating Training Data Makes Language Models
-    * Better" (Lee et al., 2022) — there via a corpus suffix array, here
-    * as the relational equivalent: fixed-width rolling word windows,
-    * corpus-wide duplicated-window detection, and a per-document
-    * gaps-and-islands merge of overlapping duplicated windows into
-    * maximal spans.
-    *
-    * Scale shape: ONE corpus-sized shuffle keyed on the 128-bit window
-    * hash (map-side-combinable count), a semi-join back to the
-    * occurrence stream, and a per-document window sort over only the
-    * DUPLICATED positions (the skew-bounded minority in a real corpus).
-    * The window hashes are fed straight to posexplode as an expression
-    * (never a projected attribute — the q31 InferFiltersFromGenerate
-    * pathology). Everything emitted is integer / md5, so the DuckDB
-    * oracle (q34) replays it value-exact.
-    */
-  private def docWordsExpr: Column =
-    filter(split(lower(col("text")), "[^a-z0-9]+"), w => w =!= "")
-
   /** Internal shared stage of [[dupSpans]] / [[dedupRewrite]]: maximal
     * duplicated-span ranges per document as (doc_id, island, nwin, s,
     * e) in 1-based word positions, span = [s, e] inclusive.
@@ -205,7 +180,7 @@ object Curation {
     // element_at and re-tokenize the document per window element — the
     // q29/q31 lesson); the when/transform fed to posexplode stays a
     // complex expression so InferFiltersFromGenerate skips it
-    val base = documents.select(col("doc_id"), docWordsExpr.as("words"))
+    val base = documents.select(col("doc_id"), TextOps.words(col("text")).as("words"))
     val w = col("words")
     // md5 INSIDE the transform lambda — a measured exception to the
     // interpreted-HOF rule: hashing before posexplode means the
@@ -245,12 +220,32 @@ object Curation {
         (max(col("pos")) + (width - 1)).as("e"))
   }
 
+  /** Duplicate-span detection — exact SUBSTRING-level dedup, the family
+    * member document-level hashing (q8) and near-dup LSH (q17) cannot
+    * express: find every maximal run of words that occurs (anywhere in
+    * the corpus, including elsewhere in the same document) at least
+    * twice, as in "Deduplicating Training Data Makes Language Models
+    * Better" (Lee et al., 2022) — there via a corpus suffix array, here
+    * as the relational equivalent: fixed-width rolling word windows,
+    * corpus-wide duplicated-window detection, and a per-document
+    * gaps-and-islands merge of overlapping duplicated windows into
+    * maximal spans.
+    *
+    * Scale shape: ONE corpus-sized shuffle keyed on the 128-bit window
+    * hash (map-side-combinable count), a semi-join back to the
+    * occurrence stream, and a per-document window sort over only the
+    * DUPLICATED positions (the skew-bounded minority in a real corpus).
+    * The window hashes are fed straight to posexplode as an expression
+    * (never a projected attribute — the q31 InferFiltersFromGenerate
+    * pathology). Everything emitted is integer / md5, so the DuckDB
+    * oracle (q34) replays it value-exact.
+    */
   def dupSpans(documents: DataFrame, width: Int = 8): DataFrame = {
     val spans = dupSpanRanges(documents, width)
     val perDoc = spans.groupBy(col("doc_id"))
       .agg(count(lit(1)).as("spans"), sum(col("nwin")).as("dupwin"),
         sum(col("e") - col("s") + 1).as("covered"))
-    val w = docWordsExpr
+    val w = TextOps.words(col("text"))
     documents.select(col("doc_id"),
         size(w).cast("bigint").as("n_words"),
         greatest(size(w) - (width - 1), lit(0)).cast("bigint").as("n_windows"))
@@ -282,7 +277,7 @@ object Curation {
     val spans = dupSpanRanges(documents, width)
       .select(col("doc_id").as("sd"), col("s"), col("e"))
     val words = documents
-      .select(col("doc_id"), posexplode(docWordsExpr).as(Seq("p0", "w")))
+      .select(col("doc_id"), posexplode(TextOps.words(col("text"))).as(Seq("p0", "w")))
       .select(col("doc_id"), (col("p0") + 1).cast("bigint").as("p"), col("w"))
     val kept = words.join(spans,
       words("doc_id") === spans("sd") && col("p") >= col("s") && col("p") <= col("e"),
@@ -292,7 +287,7 @@ object Curation {
         array_join(
           transform(array_sort(collect_list(struct(col("p"), col("w")))), x => x.getField("w")),
           " ").as("ct"))
-    documents.select(col("doc_id"), size(docWordsExpr).cast("bigint").as("n_words"))
+    documents.select(col("doc_id"), size(TextOps.words(col("text"))).cast("bigint").as("n_words"))
       .join(rebuilt, Seq("doc_id"), "left")
       .select(
         col("doc_id"),
@@ -348,12 +343,7 @@ object Curation {
     * malformed URLs; these regexes never throw).
     */
   private def urlScheme: Column = lower(regexp_extract(col("url"), UrlSchemeRe, 1))
-  private def urlHost: Column = {
-    val hostport = lower(regexp_extract(col("url"), UrlHostRe, 1))
-    when(urlScheme === "https", regexp_replace(hostport, ":443$", ""))
-      .when(urlScheme === "http", regexp_replace(hostport, ":80$", ""))
-      .otherwise(hostport)
-  }
+  private def urlHost: Column = hostOf(col("url"))
   private def urlDomain: Column = regexp_replace(urlHost, "^www\\.", "")
   private def urlPath: Column = {
     val p = regexp_extract(col("url"), UrlPathRe, 1)
@@ -551,8 +541,7 @@ object Curation {
     def prep(df: DataFrame, side: String) = df.select(
       col("doc_id"),
       TextOps.fingerprint(col("text")).as(s"fp_$side"),
-      array_distinct(filter(split(lower(col("text")), "[^a-z0-9]+"), w => w =!= ""))
-        .as(s"ws_$side"))
+      Dedup.wordSet(col("text")).as(s"ws_$side"))
     val joined = prep(oldSnap, "old")
       .join(prep(newSnap, "new"), Seq("doc_id"), "full_outer")
     val uni = size(array_union(col("ws_old"), col("ws_new"))).cast("bigint")
@@ -802,8 +791,7 @@ object Curation {
     * doc-keyed join. Integer thresholds throughout → DuckDB-exact.
     */
   def qualityFilter(documents: DataFrame): DataFrame = {
-    val words = filter(split(lower(col("text")), "[^a-z0-9]+"), w => w =!= "")
-    val nw = size(words).cast("bigint")
+    val nw = size(TextOps.words(col("text"))).cast("bigint")
     // total in-word chars without touching the words array: every
     // [a-z0-9] char of the lowered text is in exactly one word
     val sumLen = length(regexp_replace(lower(col("text")), "[^a-z0-9]", "")).cast("bigint")
@@ -893,14 +881,37 @@ object Curation {
     * patterns: scheme-lowered host, default port stripped, leading
     * `www.` dropped; NULL for unparseable URLs (no scheme://host).
     */
-  private[pipeline] def domainOf(u: Column): Column = {
+  private[pipeline] def domainOf(u: Column): Column =
+    when(lower(regexp_extract(u, UrlHostRe, 1)) =!= "", regexp_replace(hostOf(u), "^www\\.", ""))
+
+  /** The host ladder shared by [[canonicalizeUrls]] and [[domainOf]]:
+    * the lower-cased host of `u` with its scheme's default port (:443
+    * for https, :80 for http) stripped; "" when `u` has no scheme://host.
+    */
+  private def hostOf(u: Column): Column = {
     val scheme = lower(regexp_extract(u, UrlSchemeRe, 1))
     val hostport = lower(regexp_extract(u, UrlHostRe, 1))
-    val host = when(scheme === "https", regexp_replace(hostport, ":443$", ""))
+    when(scheme === "https", regexp_replace(hostport, ":443$", ""))
       .when(scheme === "http", regexp_replace(hostport, ":80$", ""))
       .otherwise(hostport)
-    when(hostport =!= "", regexp_replace(host, "^www\\.", ""))
   }
+
+  /** DuckDB twin of [[hostOf]] over already-extracted `scheme` and
+    * `hostport` columns.
+    */
+  private[graft] def hostSql: String =
+    """CASE WHEN scheme = 'https' THEN regexp_replace(hostport, ':443$', '')
+      |         WHEN scheme = 'http' THEN regexp_replace(hostport, ':80$', '')
+      |         ELSE hostport END""".stripMargin
+
+  /** DuckDB twin of [[domainOf]] over the SQL expression `u`. */
+  private[graft] def domainSql(u: String): String =
+    s"""CASE WHEN lower(regexp_extract($u, '$UrlHostRe', 1)) <> ''
+       |  THEN regexp_replace(
+       |    CASE WHEN lower(regexp_extract($u, '$UrlSchemeRe', 1)) = 'https' THEN regexp_replace(lower(regexp_extract($u, '$UrlHostRe', 1)), ':443$$', '')
+       |         WHEN lower(regexp_extract($u, '$UrlSchemeRe', 1)) = 'http' THEN regexp_replace(lower(regexp_extract($u, '$UrlHostRe', 1)), ':80$$', '')
+       |         ELSE lower(regexp_extract($u, '$UrlHostRe', 1)) END, '^www\\.', '')
+       |  ELSE NULL END""".stripMargin
 
   /** Link-graph construction — the web-graph step between extraction
     * and graph analytics (q56/q60/q69 style ops consume exactly this
@@ -958,7 +969,7 @@ object Curation {
   def sourcePercentile(documents: DataFrame, bucketWidth: Int = 500): DataFrame = {
     require(bucketWidth >= 1, "bucket width must be >= 1")
     val base = documents
-      .select(col("doc_id"), col("source"), docWordsExpr.as("words"))
+      .select(col("doc_id"), col("source"), TextOps.words(col("text")).as("words"))
       .select(col("doc_id"), col("source"),
         size(col("words")).as("nw"), size(array_distinct(col("words"))).as("dw"))
       .select(col("doc_id"), col("source"),
@@ -1006,8 +1017,7 @@ object Curation {
       .select(explode(expr(s"regexp_extract_all(html, '$tagRe', 0)")).as("tag"))
       .select(
         domainOf(regexp_extract(col("tag"), "href=\"([^\"]+)\"", 1)).as("dst_domain"),
-        explode(filter(split(lower(regexp_extract(col("tag"), ">([^<]*)</a>", 1)),
-          "[^a-z0-9]+"), w => w =!= "")).as("term"))
+        explode(TextOps.words(regexp_extract(col("tag"), ">([^<]*)</a>", 1))).as("term"))
       .where(col("dst_domain").isNotNull)
     val counts = occ.groupBy(col("dst_domain"), col("term")).agg(count(lit(1)).as("n"))
     val byDom = Window.partitionBy(col("dst_domain"))
@@ -1148,7 +1158,7 @@ object Curation {
   def templateLines(documents: DataFrame, width: Int = 4,
       thrBp: Int = 2500, minDocs: Int = 2): DataFrame = {
     require(width >= 1 && thrBp >= 1 && minDocs >= 1, "positive parameters")
-    val base = documents.select(col("doc_id"), col("source"), docWordsExpr.as("words"))
+    val base = documents.select(col("doc_id"), col("source"), TextOps.words(col("text")).as("words"))
     val w = col("words")
     val nLines = expr(s"(size(words) + ${width - 1}) div $width").cast("int")
     val hashesExpr = when(size(w) > 0,
@@ -1186,7 +1196,7 @@ object Curation {
 
   def lineDedup(documents: DataFrame, width: Int = 4): DataFrame = {
     require(width >= 1, "line width must be >= 1")
-    val base = documents.select(col("doc_id"), docWordsExpr.as("words"))
+    val base = documents.select(col("doc_id"), TextOps.words(col("text")).as("words"))
     val w = col("words")
     val nLines = expr(s"(size(words) + ${width - 1}) div $width").cast("int")
     // md5 inside the lambda: the Generate boundary materializes 32-hex

@@ -27,28 +27,7 @@ object Dedup {
       .groupBy(col("fp"))
       .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
 
-  def wordSet(text: Column): Column =
-    array_distinct(filter(split(lower(text), "[^a-z0-9]+"), t => t =!= ""))
-
-  /** Word w-shingles (default 3) as a distinct array.
-    *
-    * NOTE: inlines the tokenizer into the transform lambda — fine for a
-    * literal column or ad-hoc use, but on the corpus scan path use
-    * [[shingleRows]], which tokenizes once per document (the q29/q31
-    * lesson: the inlined `words` AST is cloned into `size` and every
-    * `slice`, re-splitting the document per shingle element — measured
-    * 5.8s → sub-second at sf0.1 for the explode+distinct stage).
-    */
-  def shingles(text: Column, w: Int = 3): Column = {
-    val words = filter(split(lower(text), "[^a-z0-9]+"), t => t =!= "")
-    array_distinct(
-      filter(
-        transform(sequence(lit(1), greatest(size(words) - (w - 1), lit(1))),
-          i => concat_ws(" ", slice(words, i, lit(w)))),
-        s => s =!= ""
-      )
-    )
-  }
+  def wordSet(text: Column): Column = array_distinct(TextOps.words(text))
 
   /** (doc_id, shingle) occurrence rows with the words array PROJECTED
     * once per document: the transform lambda then references a bounded
@@ -60,8 +39,7 @@ object Dedup {
     * not cheap.
     */
   private[graft] def shingleRows(documents: DataFrame, w: Int): DataFrame = {
-    val wordsExpr = filter(split(lower(col("text")), "[^a-z0-9]+"), t => t =!= "")
-    val base = documents.select(col("doc_id"), wordsExpr.as("words"))
+    val base = documents.select(col("doc_id"), TextOps.words(col("text")).as("words"))
     val words = col("words")
     val sh = array_distinct(
       filter(
@@ -70,6 +48,12 @@ object Dedup {
         s => s =!= ""))
     base.select(col("doc_id"), explode(sh).as("s"))
   }
+
+  /** DuckDB twin of [[shingleRows]]' shingle list: the word `w`-shingles
+    * of a `words` list column (before the distinct and empty filter).
+    */
+  private[graft] def shinglesSql(w: Int): String =
+    s"list_transform(range(1, greatest(len(words)-${w - 1}, 1)+1), i -> array_to_string(words[i:i+${w - 1}], ' '))"
 
   // The near-dup family's blocking skeleton (Dedup, Similarity,
   // Multimodal): key rows into buckets → suppressHot → bucketPairs (or

@@ -229,7 +229,7 @@ object KgPipeline {
   def linkDocumentTokens(documents: DataFrame, minLen: Int = 8, k: Int = 3): DataFrame = {
     val toks = documents.select(
       col("doc_id"),
-      explode(filter(split(lower(col("text")), "[^a-z0-9]+"), t => t =!= "")).as("token"))
+      explode(TextOps.words(col("text"))).as("token"))
     val aliases = toks.select(col("token")).where(length(col("token")) >= minLen).distinct()
     val links = toks.join(broadcast(aliases), Seq("token"))
       .groupBy(col("doc_id"), col("token"))

@@ -406,7 +406,7 @@ object StreamingExtract {
   def streamingCountMin(docs: DataFrame, depth: Int = 4, hexLen: Int = 3): DataFrame = {
     require(depth >= 1 && depth <= 8, "depth in [1,8]")
     require(hexLen >= 1 && hexLen <= 8, "bucket hex length in [1,8]")
-    docs.select(explode(CorpusOps.wordsExpr).as("term"))
+    docs.select(explode(TextOps.words(col("text"))).as("term"))
       .select(col("term"), explode(sequence(lit(0), lit(depth - 1))).as("r"))
       .withColumn("bucket",
         substring(md5(concat(col("r").cast("string"), lit(":"), col("term"))), 1, hexLen))

@@ -10,9 +10,28 @@ import org.apache.spark.sql.functions._
   */
 object TextOps {
 
+  /** The corpus word tokenizer: lower-case, split on `[^a-z0-9]+`, drop
+    * the empty tokens. `""` gives an empty array, NULL stays NULL, and a
+    * non-ASCII letter is a separator (`"Café"` → `caf`). Every
+    * word-based operator uses this rule and every word-based oracle its
+    * DuckDB twin [[wordsSql]], so the two engines tokenize alike.
+    */
+  def words(text: Column): Column =
+    filter(split(lower(text), "[^a-z0-9]+"), t => t =!= "")
+
+  /** DuckDB twin of [[words]] over the SQL expression `text`. */
+  def wordsSql(text: String): String =
+    s"list_filter(regexp_split_to_array(lower($text), '[^a-z0-9]+'), x -> x <> '')"
+
+  /** [[wordsSql]] over the `text` column. */
+  def wordsSql: String = wordsSql("text")
+
   /** Whitespace token count, robust to empty strings. */
   def tokenCount(text: Column): Column =
     size(filter(split(text, "\\s+"), t => t =!= ""))
+
+  /** DuckDB twin of [[tokenCount]] over the `text` column. */
+  def tokenCountSql: String = s"len(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> ''))"
 
   /** Subword vocabulary (common English affixes/merges). The segmenter
     * is greedy longest-match: the regex alternation is ordered longest-
@@ -41,9 +60,8 @@ object TextOps {
     * array fold) — no UDF on the 100 TB path.
     */
   def subwordCount(text: Column): Column = {
-    val words = filter(split(lower(text), "[^a-z0-9]+"), t => t =!= "")
     // NULL text counts 0, matching the oracle's coalesce(..., 0)
-    coalesce(aggregate(words, lit(0L),
+    coalesce(aggregate(words(text), lit(0L),
       (acc, w) => acc + size(regexp_extract_all(w, lit(subwordPattern))).cast("bigint")), lit(0L))
   }
 
@@ -111,4 +129,7 @@ object TextOps {
     */
   def fingerprint(text: Column): Column =
     md5(regexp_replace(lower(text), "\\s+", " "))
+
+  /** DuckDB twin of [[fingerprint]] over the `text` column. */
+  def fingerprintSql: String = "md5(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
 }

@@ -4,11 +4,9 @@ import org.apache.spark.TestListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.{col, udf}
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.atomic.AtomicInteger
-import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** How [[KgPipeline.run]] executes its DAG: the Spark-job budget of one
@@ -17,7 +15,7 @@ import scala.jdk.CollectionConverters._
   * without leaving jobs behind, and extract lineage as it lands in the
   * `metrics` table.
   */
-class KgPipelineDagSpec extends AnyFunSuite with BeforeAndAfterAll {
+class KgPipelineDagSpec extends AnyFunSuite with graft.TempRoots {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[2]")
@@ -66,20 +64,6 @@ class KgPipelineDagSpec extends AnyFunSuite with BeforeAndAfterAll {
     s.sparkContext.parallelize(pages, partitions).toDS()
   }
 
-  private val roots = mutable.ArrayBuffer.empty[Path]
-
-  private def freshRoot(): String = {
-    val root = Files.createTempDirectory("graft_dag")
-    roots += root
-    root.toString
-  }
-
-  override def afterAll(): Unit =
-    roots.foreach { r =>
-      val s = Files.walk(r)
-      try s.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists) finally s.close()
-    }
-
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
 
   private def committed(root: String, table: String): Boolean = Files.exists(Paths.get(root, table, "_SUCCESS"))
@@ -119,7 +103,7 @@ class KgPipelineDagSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("one run over a fresh root stays within its Spark-job budget") {
     val ds = pageTable(2)
     StageCache.clear()
-    val (out, jobs) = jobsOf(KgPipeline.run(spark, ds, freshRoot()))
+    val (out, jobs) = jobsOf(KgPipeline.run(spark, ds, freshRoot("graft_dag").toString))
     assert(jobs <= RunJobBudget, s"KgPipeline.run ran $jobs Spark jobs, budget $RunJobBudget")
     assert(out("edges").count() > 0 && out("links").count() > 0)
     assert(activeJobs().isEmpty)
@@ -127,13 +111,13 @@ class KgPipelineDagSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("a run starts no operating-system process on its output") {
     val ds = pageTable(2)
-    val root = freshRoot()
+    val root = freshRoot("graft_dag").toString
     StageCache.clear()
     val recording = new jdk.jfr.Recording()
     recording.enable("jdk.ProcessStart")
     recording.start()
     try KgPipeline.run(spark, ds, root) finally recording.stop()
-    val dump = Files.createTempFile(Paths.get(freshRoot()), "process_start", ".jfr")
+    val dump = Files.createTempFile(freshRoot("graft_dag"), "process_start", ".jfr")
     recording.dump(dump)
     recording.close()
     // Spark removes the artifact directory of a garbage-collected
@@ -168,7 +152,7 @@ class KgPipelineDagSpec extends AnyFunSuite with BeforeAndAfterAll {
     // only linking reads the page text, so only the links branch fails
     val boom = udf((url: String) => { if (url != null) sys.error(s"no text for $url"); "" })
     val noText = pageTable(2).withColumn("text", boom(col("url"))).as[Page]
-    val root = freshRoot()
+    val root = freshRoot("graft_dag").toString
     StageCache.clear()
     val e = intercept[Exception](KgPipeline.run(s, noText, root))
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).exists(
@@ -186,7 +170,7 @@ class KgPipelineDagSpec extends AnyFunSuite with BeforeAndAfterAll {
     done.foreach(t => assert(files(root, t) == before(t), s"$t was recomputed, not resumed"))
     assert(committed(root, "links"))
     StageCache.clear()
-    val fresh = KgPipeline.run(s, pageTable(2), freshRoot())
+    val fresh = KgPipeline.run(s, pageTable(2), freshRoot("graft_dag").toString)
     tables.foreach(t => assert(rows(again(t)) == rows(fresh(t)), t))
   }
 
@@ -195,7 +179,7 @@ class KgPipelineDagSpec extends AnyFunSuite with BeforeAndAfterAll {
       val s = spark
       import s.implicits._
       StageCache.clear()
-      val out = KgPipeline.run(s, pageTable(partitions), freshRoot())
+      val out = KgPipeline.run(s, pageTable(partitions), freshRoot("graft_dag").toString)
       val written = out("metrics").as[LineageRow].collect().toSeq
       val direct = Extract.run(pageTable(partitions)).collect().flatMap(_.lineage).toSeq
       (written, direct)

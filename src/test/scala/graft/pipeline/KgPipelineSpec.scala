@@ -9,7 +9,7 @@ import scala.jdk.CollectionConverters._
   * (`run`) and snapshot tables (`runVersioned`) give the same rows for
   * every table, and a second call of either resumes every stage.
   */
-class KgPipelineSpec extends AnyFunSuite {
+class KgPipelineSpec extends AnyFunSuite with graft.TempRoots {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[2]")
@@ -59,8 +59,8 @@ class KgPipelineSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     val ds = pages.toDS()
-    val outRoot = Files.createTempDirectory("graft_dag_run").toString
-    val warehouse = Files.createTempDirectory("graft_dag_snap").toString
+    val outRoot = freshRoot("graft_dag_run").toString
+    val warehouse = freshRoot("graft_dag_snap").toString
 
     val plain = KgPipeline.run(s, ds, outRoot)
     val snap = KgPipeline.runVersioned(s, ds, warehouse)

@@ -3,14 +3,13 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Operator-level Spark tests: planted-duplicate recovery for every
   * dedup variant, ANN neighbor recovery, entity linking, streaming
   * extraction equivalence with batch, and plan-shape assertions
   * (broadcast where intended, parquet column pruning).
   */
-class PipelineSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PipelineSparkSpec extends AnyFunSuite with graft.TempRoots {
 
   private var spark: SparkSession = _
 
@@ -24,7 +23,7 @@ class PipelineSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sparkContext.setLogLevel("ERROR")
   }
 
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit = try { if (spark != null) spark.stop() } finally super.afterAll()
 
   private def docs(rows: (Long, String, String)*): DataFrame = {
     val s = spark
@@ -276,7 +275,7 @@ class PipelineSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("u", s"http://ex.org/s${i % 7}", s"http://ex.org/vocab/p${i % 5}", s"val$i", "literal",
         null: String, null: String))
       .toDF("url", "subj", "pred", "obj", "objKind", "lang", "datatype")
-    val dir = java.nio.file.Files.createTempDirectory("graft_writerdf").toString + "/out"
+    val dir = freshRoot("graft_writerdf").toString + "/out"
     KgPipeline.writeRdfXml(edges, dir, maxChunk = 4)
     val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".txt"))
     assert(files.nonEmpty)
@@ -300,14 +299,12 @@ class PipelineSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val golden = graft.rdf.NTriples.parse(new String(fixture(".nt"), "UTF-8"))
     val triples = Extract.run(s.createDataset(Seq(SyntheticPages.page(rel + ".rdf", fixture(".rdf"), 0, 0))))
       .flatMap(_.triple).toDF()
-    val tmp = java.nio.file.Files.createTempDirectory("graft_charmod")
-    val reparsed = try {
-      KgPipeline.writeRdfXml(triples, tmp.resolve("out").toString)
-      tmp.resolve("out").toFile.listFiles().filter(_.getName.endsWith(".txt")).toSeq.flatMap { f =>
-        val content = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-        graft.xml.RdfXmlParser.parse(content).fold(e => fail(e.message + "\n" + content), _.triples)
-      }.toSet
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+    val out = freshRoot("graft_charmod").resolve("out")
+    KgPipeline.writeRdfXml(triples, out.toString)
+    val reparsed = out.toFile.listFiles().filter(_.getName.endsWith(".txt")).toSeq.flatMap { f =>
+      val content = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      graft.xml.RdfXmlParser.parse(content).fold(e => fail(e.message + "\n" + content), _.triples)
+    }.toSet
     assert(golden.size == 2 && reparsed == golden, reparsed)
   }
 
@@ -1851,7 +1848,7 @@ class PipelineSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("extraction plan prunes the parquet scan to url+html") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_prune").toString
+    val dir = freshRoot("graft_prune").toString
     SyntheticPages.pages(s, 1, 2).write.parquet(s"$dir/pages")
     val plan = Extract.run(s.read.parquet(s"$dir/pages").as[Page])
       .queryExecution.executedPlan.toString
@@ -1863,7 +1860,7 @@ class PipelineSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     // eagerly checkpoints it into an RDD leaf) — this pin covers it
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_prune_lsh").toString
+    val dir = freshRoot("graft_prune_lsh").toString
     Seq((1L, "alpha beta gamma", "en", "s", 15L), (2L, "beta gamma delta", "en", "s", 15L))
       .toDF("doc_id", "text", "lang", "source", "n_chars").write.parquet(s"$dir/documents")
     val plan = Dedup.md5ShingleSetPlan(s.read.parquet(s"$dir/documents"), 3)

@@ -8,7 +8,7 @@ import java.nio.file.Files
   * time travel, rollback, expiry, and the versioned pipeline's
   * cold / resumed / refreshed runs.
   */
-class SnapTableSpec extends AnyFunSuite {
+class SnapTableSpec extends AnyFunSuite with graft.TempRoots {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -16,7 +16,7 @@ class SnapTableSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private def tmpRoot(): String = Files.createTempDirectory("graft_snap").toString
+  private def tmpRoot(): String = freshRoot("graft_snap").toString
 
   test("commit/read round trip; overwrite bumps the version; time travel reads the old snapshot") {
     val s = spark

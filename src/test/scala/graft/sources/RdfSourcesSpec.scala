@@ -3,9 +3,8 @@ package graft.sources
 import graft.rdf.NTriples
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
-class RdfSourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
+class RdfSourcesSpec extends AnyFunSuite with graft.TempRoots {
 
   private var spark: SparkSession = _
 
@@ -16,7 +15,7 @@ class RdfSourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
   }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit = try { if (spark != null) spark.stop() } finally super.afterAll()
 
   // xmlbase/ of the shipped fixture corpus and, wherever it is present,
   // of the W3C suite
@@ -61,7 +60,7 @@ class RdfSourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("nTriplesFile scopes bnodes per FILE and drops malformed lines") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ntsrc")
+    val dir = freshRoot("graft_ntsrc")
     java.nio.file.Files.writeString(dir.resolve("a.nt"),
       "_:b0 <http://ex/p> \"from-a\" .\nnot a triple at all\n_:b0 <http://ex/q> \"unterminated .\n")
     java.nio.file.Files.writeString(dir.resolve("b.nt"),
@@ -81,7 +80,7 @@ class RdfSourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("nQuads round trip: named + bnode + default graphs survive write → read") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_nqsrc")
+    val dir = freshRoot("graft_nqsrc")
     // IRI graph, bnode graph, default graph (triple form), one malformed
     java.nio.file.Files.writeString(dir.resolve("a.nq"),
       "<http://s/1> <http://p> \"v1\" <http://g/1> .\n" +
@@ -123,7 +122,7 @@ class RdfSourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("rdfXmlFiles scopes bnodes per file under the chosen prefix; a malformed file contributes nothing") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_rdfsrc")
+    val dir = freshRoot("graft_rdfsrc")
     def doc(body: String) =
       s"""<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#" xmlns:ex="http://ex/">$body</rdf:RDF>"""
     java.nio.file.Files.writeString(dir.resolve("a.rdf"),
