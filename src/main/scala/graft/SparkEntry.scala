@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.pipeline._
-import graft.pipeline.TextOps.{fingerprintSql, tokenCountSql, wordsSql}
+import graft.pipeline.TextOps.{fingerprintSql, subwordCountSql, tokenCountSql, wordsSql}
+import scala.util.chaining._
 
 /** Driver contract — the operator registry of the engine.
   *
@@ -16,6 +17,15 @@ object SparkEntry {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
+
+  /** The temporary directories of queries that write files. A query's
+    * frame reads them lazily, so its caller deletes them with
+    * [[deleteTempRoots]] once the query's output is written. */
+  private val tempRoots = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
+  private def tempRoot(prefix: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(prefix).tap(tempRoots.add)
+  def deleteTempRoots(): Unit =
+    Iterator.continually(tempRoots.poll()).takeWhile(_ != null).foreach(NioLocalFileSystem.deleteTree)
 
   /** The d<id> IRI of a document: the subject of its triples in the
     * synthetic knowledge graph. */
@@ -209,7 +219,7 @@ object SparkEntry {
       val docs = t(s, d, "documents")
       docs.select(col("doc_id"),
         TextOps.tokenCount(col("text")).as("tokens"),
-        TextOps.subwordCount(col("text")).as("subwords"))
+        TextOps.subwordCount(col("text"), TextOps.subwordPattern).as("subwords"))
     }),
     "q10_quality" -> ((s, d) => {
       t(s, d, "documents").select(col("doc_id"), TextOps.qualityScore(col("text")).as("quality"))
@@ -260,7 +270,7 @@ object SparkEntry {
     // resource drives a greedy longest-match segmenter (the oracle-
     // expressible twin of true merge-order BPE encoding, x_bpe_encode)
     "q25_bpe_vocab_subwords" -> ((s, d) =>
-      t(s, d, "documents").select(col("doc_id"), Bpe.trainedSubwordCount(col("text")).as("bpe_subwords"))),
+      t(s, d, "documents").select(col("doc_id"), TextOps.subwordCount(col("text"), Bpe.trainedVocabPattern).as("bpe_subwords"))),
     // connected components over the near-dup pair graph, oracle-checked
     // via a DuckDB WITH RECURSIVE transitive-closure min — the iterative
     // Spark min-label propagation must converge to the same labels
@@ -2959,7 +2969,7 @@ object SparkEntry {
       Extract.run(SyntheticPages.pages(s, copies = 2)).flatMap(_.lineage).toDF()
     }),
     "x_kg_pipeline" -> ((s, _) => {
-      val out = java.nio.file.Files.createTempDirectory("graft_kg").toString
+      val out = tempRoot("graft_kg").toString
       // 8-way on purpose (A/B'd r6): the pipeline is dominated by its
       // many small parquet stage WRITES, and 32 partitions means 4x
       // the files and tasks per tiny stage — measured ~7.4s (8-way)
@@ -3062,7 +3072,7 @@ object SparkEntry {
     // is generator-side only, never part of the read path)
     "x_warc_source" -> ((s, _) => {
       import s.implicits._
-      val dir = java.nio.file.Files.createTempDirectory("graft_warc_q")
+      val dir = tempRoot("graft_warc_q")
       val shard = dir.resolve("shard.warc.gz").toString
       val pages = SyntheticPages.pages(s, copies = 1, numPartitions = 2).collect()
       graft.sources.WarcSource.writeShardFile(
@@ -3072,7 +3082,7 @@ object SparkEntry {
     "x_rdfxml_file_source" -> ((s, _) => {
       // the fixture corpus may sit inside the application jar, where the
       // binaryFile source cannot read it: copy xmlbase/ out first
-      val dir = java.nio.file.Files.createTempDirectory("graft_rdfxml_q")
+      val dir = tempRoot("graft_rdfxml_q")
       SyntheticPages.fixtureFiles().collect { case (rel, bytes) if rel.startsWith("xmlbase/") =>
         java.nio.file.Files.write(dir.resolve(rel.stripPrefix("xmlbase/")), bytes)
       }
@@ -3663,7 +3673,7 @@ object SparkEntry {
        |  FROM aug
        |), h AS (
        |  SELECT doc_id, url, scheme, hostport, query,
-       |    ${Curation.hostSql} AS host,
+       |    ${Curation.hostSql("scheme", "hostport")} AS host,
        |    CASE WHEN path0 = '' THEN '/' ELSE path0 END AS path
        |  FROM c
        |)
@@ -7115,7 +7125,7 @@ object SparkEntry {
        |  FROM aug WHERE lower(regexp_extract(url, '$hst', 1)) <> ''
        |), parsed AS MATERIALIZED (
        |  SELECT url,
-       |    regexp_replace(${Curation.hostSql}, '^www\\.', '') AS domain,
+       |    regexp_replace(${Curation.hostSql("scheme", "hostport")}, '^www\\.', '') AS domain,
        |    CASE WHEN path0 = '' THEN '/' ELSE path0 END AS path
        |  FROM c
        |), rb AS (
@@ -7222,7 +7232,7 @@ object SparkEntry {
        |  FROM aug WHERE lower(regexp_extract(url, '$hst', 1)) <> ''
        |), d AS (
        |  SELECT url,
-       |    regexp_replace(${Curation.hostSql}, '^www\\.', '') AS domain
+       |    regexp_replace(${Curation.hostSql("scheme", "hostport")}, '^www\\.', '') AS domain
        |  FROM c
        |)
        |SELECT url, domain,
@@ -8385,8 +8395,7 @@ object SparkEntry {
     // resource the Spark side loads — DuckDB segments independently
     "q25_bpe_vocab_subwords" ->
       s"""SELECT doc_id,
-        |  CAST(coalesce(list_sum(list_transform($wordsSql,
-        |           w -> len(regexp_extract_all(w, '${pipeline.Bpe.trainedVocabPattern}')))), 0) AS BIGINT) AS bpe_subwords
+        |  ${subwordCountSql(Bpe.trainedVocabPattern)} AS bpe_subwords
         |FROM documents""".stripMargin,
     "q18_ann_brute_int" ->
       """WITH qv AS (
@@ -8460,8 +8469,7 @@ object SparkEntry {
     "q9_token_stats" ->
       s"""SELECT doc_id,
         |  $tokenCountSql AS tokens,
-        |  CAST(coalesce(list_sum(list_transform($wordsSql,
-        |           w -> len(regexp_extract_all(w, '${pipeline.TextOps.subwordPattern}')))), 0) AS BIGINT) AS subwords
+        |  ${subwordCountSql(TextOps.subwordPattern)} AS subwords
         |FROM documents""".stripMargin,
     "q10_quality" -> s"SELECT doc_id, $q10QualityExpr AS quality\nFROM documents",
     "q11_langid" ->

@@ -180,21 +180,11 @@ object Bpe {
 
   /** Greedy longest-match alternation over the trained vocabulary with
     * a single-char fallback. Vocab tokens are `[a-z]+` only — no regex
-    * metacharacters to escape.
+    * metacharacters to escape. [[TextOps.subwordCount]] over it is the
+    * oracle-checkable twin of [[tokenCounts]] (merge-order BPE is not SQL).
     */
   lazy val trainedVocabPattern: String =
     "(" + (trainedVocab :+ "[a-z0-9]").mkString("|") + ")"
-
-  /** Subword count against the TRAINED vocabulary: greedy longest-match
-    * segmentation, codegen'd built-ins only — the oracle-checkable twin
-    * of [[tokenCounts]] (true merge-order BPE is not SQL-expressible;
-    * greedy segmentation over the same vocab is).
-    */
-  def trainedSubwordCount(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    // NULL text counts 0, matching the oracle's coalesce(..., 0)
-    coalesce(aggregate(TextOps.words(text), lit(0L),
-      (acc, w) => acc + size(regexp_extract_all(w, lit(trainedVocabPattern))).cast("bigint")), lit(0L))
-  }
 
   /** Fixed multi-character unit inventory for [[wordpieceSegment]] —
     * shared verbatim with the q189 oracle's VALUES list (the q36
@@ -223,7 +213,7 @@ object Bpe {
     * INFERENCE tokenizer (BERT's rule: at each position take the
     * longest vocabulary unit that matches; every single character is
     * implicitly in the vocabulary, so the walk always advances).
-    * Differs from [[trainedSubwordCount]]'s regex alternation, which
+    * Differs from the regex alternation of [[TextOps.subwordCount]], which
     * is leftmost-FIRST priority, not longest.
     *
     * Shape: ONE row-local `aggregate` walk per DISTINCT word type —

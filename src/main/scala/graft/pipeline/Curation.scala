@@ -896,21 +896,19 @@ object Curation {
       .otherwise(hostport)
   }
 
-  /** DuckDB twin of [[hostOf]] over already-extracted `scheme` and
-    * `hostport` columns.
+  /** DuckDB twin of [[hostOf]] over the SQL expressions `scheme` (the
+    * lower-cased scheme) and `hostport` (the lower-cased host).
     */
-  private[graft] def hostSql: String =
-    """CASE WHEN scheme = 'https' THEN regexp_replace(hostport, ':443$', '')
-      |         WHEN scheme = 'http' THEN regexp_replace(hostport, ':80$', '')
-      |         ELSE hostport END""".stripMargin
+  private[graft] def hostSql(scheme: String, hostport: String): String =
+    s"""CASE WHEN $scheme = 'https' THEN regexp_replace($hostport, ':443$$', '')
+       |         WHEN $scheme = 'http' THEN regexp_replace($hostport, ':80$$', '')
+       |         ELSE $hostport END""".stripMargin
 
   /** DuckDB twin of [[domainOf]] over the SQL expression `u`. */
   private[graft] def domainSql(u: String): String =
     s"""CASE WHEN lower(regexp_extract($u, '$UrlHostRe', 1)) <> ''
        |  THEN regexp_replace(
-       |    CASE WHEN lower(regexp_extract($u, '$UrlSchemeRe', 1)) = 'https' THEN regexp_replace(lower(regexp_extract($u, '$UrlHostRe', 1)), ':443$$', '')
-       |         WHEN lower(regexp_extract($u, '$UrlSchemeRe', 1)) = 'http' THEN regexp_replace(lower(regexp_extract($u, '$UrlHostRe', 1)), ':80$$', '')
-       |         ELSE lower(regexp_extract($u, '$UrlHostRe', 1)) END, '^www\\.', '')
+       |    ${hostSql(s"lower(regexp_extract($u, '$UrlSchemeRe', 1))", s"lower(regexp_extract($u, '$UrlHostRe', 1))")}, '^www\\.', '')
        |  ELSE NULL END""".stripMargin
 
   /** Link-graph construction — the web-graph step between extraction

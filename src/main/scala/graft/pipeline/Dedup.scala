@@ -418,6 +418,11 @@ object Dedup {
       .where(col("jaccard") >= threshold)
   }
 
+  /** The prefix-filter length `sz - ceil(t·sz) + 1` at t = tNum/tDen; the
+    * pigeonhole argument in [[jaccardPrefixJoin]] makes it exact. */
+  private[pipeline] def prefixLength(sz: Column, tNum: Int, tDen: Int): Column =
+    sz - (lit(tNum) * sz + lit(tDen - 1)).divide(lit(tDen)).cast("long") + lit(1)
+
   /** EXACT set-similarity self-join via prefix filtering (the
     * AllPairs/PPJoin family — Bayardo et al. WWW'07, Xiao et al.
     * WWW'08): every pair with shingle-set Jaccard >= tNum/tDen, with no
@@ -461,15 +466,13 @@ object Dedup {
       .select(col("doc_id"), col("s"),
         row_number().over(byDoc.orderBy(col("c"), col("s"))).as("pos"),
         count(lit(1)).over(byDoc).as("sz"))
-    // minimum overlap ceil(t*sz) = (tNum*sz + tDen - 1) div tDen, all integer
-    val minOv = (lit(tNum) * col("sz") + lit(tDen - 1)).divide(lit(tDen)).cast("long")
     // NOT materialized: the self-join legs are canonically identical,
     // so ReuseExchange already computes the ranked window once — an
     // eager checkpoint here only serializes the pipeline (the
     // overlaps note: measured q59 +2.4s from the extra-actions variant
     // in a clean-window capture)
     val prefix = ranked
-      .where(col("pos") <= col("sz") - minOv + lit(1))
+      .where(col("pos") <= prefixLength(col("sz"), tNum, tDen))
       .select(col("doc_id"), col("s"), col("sz"))
     val candIds = prefix.select(col("s"), col("doc_id").as("a"), col("sz").as("sza"))
       .join(prefix.select(col("s"), col("doc_id").as("b"), col("sz").as("szb")), Seq("s"))
@@ -537,12 +540,11 @@ object Dedup {
         row_number().over(byDoc.orderBy(col("c"), col("s"))).as("pos"),
         count(lit(1)).over(byDoc).as("sz"))
       .localCheckpoint(true) // feeds the prefix AND the full index side
-    val minOv = (lit(tNum) * col("sz") + lit(tDen - 1)).divide(lit(tDen)).cast("long")
     // the contained-side prefix is the SMALL leg of the asymmetric
     // probe join — materialize it and broadcast when it fits (§3.1),
     // so the full-index side is never shuffled for candidates
     val prefix = ranked
-      .where(col("pos") <= col("sz") - minOv + lit(1))
+      .where(col("pos") <= prefixLength(col("sz"), tNum, tDen))
       .select(col("doc_id").as("x"), col("s"))
       .localCheckpoint(true)
     val full = ranked.select(col("doc_id").as("y"), col("s"))

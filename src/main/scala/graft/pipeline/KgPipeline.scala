@@ -40,9 +40,8 @@ import java.util.concurrent.{Callable, ExecutionException, ExecutorService, Exec
   *     with, so reading it costs no schema-inference job.
   *   - the alias dictionary is small by construction → broadcast join
   *     for entity linking; the mention side stays shuffle-free.
-  *   - canonicalization blocks candidate pairs with MinHash-LSH built
-  *     from codegen'd built-in expressions (xxhash64/transform/
-  *     aggregate) — no UDFs in the hot path; verification and
+  *   - canonicalization blocks candidate pairs with an exact prefix
+  *     filter of built-in expressions, no UDF; verification and
   *     connected components only touch the candidate set. A verified
   *     pair graph of at most [[LocalComponentsMaxEdges]] edges is
   *     labelled on the driver from one bounded collect; larger ones
@@ -241,52 +240,44 @@ object KgPipeline {
       .select(col("doc_id"), concat(lit("http://ex/"), col("token")).as("entity"), col("n"), col("rank"))
   }
 
-  /** MinHash-LSH blocking over entity local names + exact-Jaccard
-    * verification + iterative min-id connected components → canonical
-    * entity map. All candidate generation is built-in expressions.
+  /** Exact prefix-filter blocking over entity local names + exact-Jaccard
+    * verification + connected components → canonical entity map: two
+    * entities merge when their aliases' char-3-gram sets reach Jaccard
+    * 9/10, and blocking misses no such pair ([[Dedup.prefixLength]]).
+    * The 3-grams are ordered as strings: any total order keeps the bound
+    * exact, and rare-first order costs a frequency window (one more
+    * exchange and job); the price is that common small 3-grams can make
+    * large key buckets, quadratic in the self-join, at scale.
     *
     * `aliasDict` must hold one row per entity, as [[entityAliases]]
     * returns it (the alias is a function of the entity); the result
     * then holds one row per entity too.
     */
   def canonicalize(aliasDict: DataFrame): DataFrame = {
-    val spark = aliasDict.sparkSession
     val entities = aliasDict.select("entity", "alias")
 
-    // char-3-gram shingles of the alias (array_distinct keeps it a set)
-    val shingled = entities.withColumn(
-      "shingles",
-      array_distinct(
-        filter(
-          transform(
-            sequence(lit(1), greatest(length(col("alias")) - 2, lit(1))),
-            i => col("alias").substr(i, lit(3))
-          ),
-          s => length(s) === 3
-        )
+    // char-3-gram shingles of the alias, as a set in string order
+    val shingled = entities.select(col("entity"), array_sort(array_distinct(
+      filter(
+        transform(
+          sequence(lit(1), greatest(length(col("alias")) - 2, lit(1))),
+          i => col("alias").substr(i, lit(3))
+        ),
+        s => length(s) === 3
       )
-    ).where(size(col("shingles")) > 0)
+    )).as("shingles"))
+    val prefixed = shingled.select(col("entity"), col("shingles"), explode(slice(col("shingles"), lit(1),
+      Dedup.prefixLength(size(col("shingles")), 9, 10).cast("int"))).as("key"))
 
-    // MinHash signature: 12 permutations via seeded xxhash64; banded 4x3
-    val nHashes = 12
-    val sig = shingled.withColumn(
-      "sig",
-      array((0 until nHashes).map(i => array_min(transform(col("shingles"), s => xxhash64(s, lit(i))))): _*)
-    )
-    val banded = sig.select(
-      col("entity"), col("shingles"),
-      posexplode(array((0 until 4).map(b => hash(slice(col("sig"), b * 3 + 1, 3))): _*)).as(Seq("band", "bucket"))
-    )
-
-    // candidate pairs from shared (band, bucket); verified by exact Jaccard
-    val left = banded.select(col("band"), col("bucket"), col("entity").as("e1"), col("shingles").as("s1"))
-    val right = banded.select(col("band"), col("bucket"), col("entity").as("e2"), col("shingles").as("s2"))
-    val pairs = left.join(right, Seq("band", "bucket"))
-      .where(col("e1") < col("e2"))
-      .select(col("e1"), col("e2"),
-        (size(array_intersect(col("s1"), col("s2"))).cast("double") /
-          size(array_union(col("s1"), col("s2")))).as("jaccard"))
-      .where(col("jaccard") >= 0.9)
+    // candidate pairs share a prefix 3-gram and pass jaccardPrefixJoin's
+    // size filter; verified by exact Jaccard in integers: |s1∩s2| / |s1∪s2| >= 9/10
+    val left = prefixed.select(col("key"), col("entity").as("e1"), col("shingles").as("s1"))
+    val right = prefixed.select(col("key"), col("entity").as("e2"), col("shingles").as("s2"))
+    val pairs = left.join(right, Seq("key"))
+      .where(col("e1") < col("e2") &&
+        lit(10) * size(col("s2")) >= lit(9) * size(col("s1")) && lit(10) * size(col("s1")) >= lit(9) * size(col("s2")) &&
+        lit(10) * size(array_intersect(col("s1"), col("s2"))) >=
+          lit(9) * size(array_union(col("s1"), col("s2"))))
       .select("e1", "e2") // connectedComponents deduplicates its input
 
     // connected components over the verified pair graph; isolated

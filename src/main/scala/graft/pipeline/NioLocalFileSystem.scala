@@ -37,6 +37,12 @@ object NioLocalFileSystem {
     PosixFilePermission.values.zipWithIndex
       .collect { case (q, i) if (mode & (1 << (8 - i))) != 0 => q }.toSet.asJava
 
+  /** Deletes `root` with everything under it, children first. */
+  private[graft] def deleteTree(root: java.nio.file.Path): Unit = {
+    val s = Files.walk(root)
+    try s.sorted(java.util.Comparator.reverseOrder()).forEach(p => { Files.deleteIfExists(p); () }) finally s.close()
+  }
+
   /** `ds.write`, committing `file:` paths through [[NioLocalFileSystem]].
     * Hadoop caches one `file:` filesystem per JVM, so the cache is off
     * for these writes; other schemes (HDFS, S3) ignore both options.

@@ -134,9 +134,7 @@ object SnapTable {
       snapshot(root, table, v).foreach { s =>
         s.dataDirs.filterNot(keepDirs).foreach { d =>
           val p = Paths.get(d)
-          if (Files.exists(p))
-            Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-              .forEach(f => { Files.deleteIfExists(f); () })
+          if (Files.exists(p)) NioLocalFileSystem.deleteTree(p)
         }
       }
       Files.deleteIfExists(metaDir(root, table).resolve(s"v$v.json"))

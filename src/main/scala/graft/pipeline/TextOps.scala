@@ -54,16 +54,21 @@ object TextOps {
   /** Greedy longest-match alternation + single-char fallback. */
   val subwordPattern: String = "(" + (subwordVocab :+ "[a-z0-9]").mkString("|") + ")"
 
-  /** Real subword count: greedy longest-match (WordPiece-style)
-    * segmentation of each word against [[subwordVocab]], summed over the
-    * document. Codegen'd built-ins only (regexp_extract_all inside an
-    * array fold) — no UDF on the 100 TB path.
+  /** Subword count: greedy longest-match segmentation of each word by a
+    * vocabulary alternation `pattern` ([[subwordPattern]] or
+    * [[Bpe.trainedVocabPattern]]), summed over the document. Codegen'd
+    * built-ins only (regexp_extract_all in an array fold), no UDF.
     */
-  def subwordCount(text: Column): Column = {
+  def subwordCount(text: Column, pattern: String): Column = {
     // NULL text counts 0, matching the oracle's coalesce(..., 0)
     coalesce(aggregate(words(text), lit(0L),
-      (acc, w) => acc + size(regexp_extract_all(w, lit(subwordPattern))).cast("bigint")), lit(0L))
+      (acc, w) => acc + size(regexp_extract_all(w, lit(pattern))).cast("bigint")), lit(0L))
   }
+
+  /** DuckDB twin of [[subwordCount]] over the `text` column. */
+  private[graft] def subwordCountSql(pattern: String): String =
+    s"""CAST(coalesce(list_sum(list_transform($wordsSql,
+       |           w -> len(regexp_extract_all(w, '$pattern')))), 0) AS BIGINT)""".stripMargin
 
   /** GPT-2-style byte-pair-encoding PRE-TOKENIZER (the published
     * regex from the GPT-2 public release, simplified for cross-engine

@@ -80,6 +80,7 @@ object QueryProbe {
           println(f"PROBE $name rep=$rep sec=${(System.nanoTime() - t0) / 1e9}%.2f")
         } catch { case e: Throwable => println(s"PROBE $name rep=$rep FAILED ${e.getMessage}") }
       }
+      graft.SparkEntry.deleteTempRoots()
     }
     spark.stop()
     if (planFailures > 0) {

@@ -3,7 +3,6 @@ package graft
 import org.scalatest.{BeforeAndAfterAll, Suite}
 import java.nio.file.{Files, Path}
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
 /** Temporary output roots for a spec: every directory made with
   * [[freshRoot]] is deleted, with all it holds, after the spec's last
@@ -24,8 +23,5 @@ trait TempRoots extends BeforeAndAfterAll { this: Suite =>
 
   override def afterAll(): Unit =
     try super.afterAll()
-    finally roots.foreach { r =>
-      val s = Files.walk(r)
-      try s.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists) finally s.close()
-    }
+    finally roots.foreach(graft.pipeline.NioLocalFileSystem.deleteTree)
 }

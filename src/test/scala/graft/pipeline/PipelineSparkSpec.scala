@@ -52,13 +52,13 @@ class PipelineSparkSpec extends AnyFunSuite with graft.TempRoots {
     // trained-vocab greedy segmenter: total subwords per doc >= word count
     // (every word splits into >=1 piece); empty AND NULL text count zero
     // (the oracle convention: coalesce(..., 0) on both sides)
-    val g = d.select(col("doc_id"), Bpe.trainedSubwordCount(col("text")).as("n")).collect()
+    val g = d.select(col("doc_id"), TextOps.subwordCount(col("text"), Bpe.trainedVocabPattern).as("n")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(g(1L) >= 3 && g(2L) >= 2 && g(3L) == 0 && g(4L) == 0)
     val pt = d.select(col("doc_id"), TextOps.bpePretokenCount(col("text")).as("n")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(pt(4L) == 0 && pt(3L) == 0)
-    val sw = d.select(col("doc_id"), TextOps.subwordCount(col("text")).as("n")).collect()
+    val sw = d.select(col("doc_id"), TextOps.subwordCount(col("text"), TextOps.subwordPattern).as("n")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(sw(4L) == 0)
   }
