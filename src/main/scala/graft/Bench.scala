@@ -144,7 +144,7 @@ object Bench {
     // ABSOLUTE canary anchor: committed clean-host value, gating both
     // the scaling trials (per trial + per session) and the query
     // segments (with a looser margin — the driver JVM is unpinned)
-    val anchorMargin = sys.env.getOrElse("SPARK_GRAFT_CANARY_ANCHOR_MARGIN", "1.3").toDouble
+    val anchorMargin = 1.3
     val anchor: Option[Double] =
       try {
         val p = Paths.get("BENCH", "canary_anchor.txt")
@@ -189,7 +189,7 @@ object Bench {
     //      once in a second pass; still-dirty results publish with
     //      clean:false in the log and their names in `query_noisy` —
     //      flagged, never silently.
-    val qMaxSteal = sys.env.getOrElse("SPARK_GRAFT_MAX_STEAL_PCT", "2.0").toDouble
+    val maxStealPct = 2.0
     // margins are LOOSER than the scaling section's: the driver canary
     // is unpinned and rides a long-lived JVM whose JIT/GC state drifts
     // a measured ~20% across the session — the gate's job is catching
@@ -198,14 +198,14 @@ object Bench {
     // 1.4: the r5 clean capture measured marginal stamps at exactly
     // best x 1.36 on a HEALTHY host (29 false-ish NOISY flags at the
     // 1.35 line) — the gate hunts multiples, not percent
-    val qCanaryMargin = sys.env.getOrElse("SPARK_GRAFT_QUERY_CANARY_MARGIN", "1.4").toDouble
+    val qCanaryMargin = 1.4
     // absolute cap vs the pinned-child anchor: healthy driver stamps
     // measured 1.24-1.43x the anchor (the unpinned long-lived JVM is
     // structurally ~25-40% slower than a fresh pinned child), so 1.5x
     // would false-flag a clean session; 1.8x still catches the
     // all-polluted-session class
-    val qAnchorMargin = sys.env.getOrElse("SPARK_GRAFT_QUERY_ANCHOR_MARGIN", "1.8").toDouble
-    val segLen = sys.env.getOrElse("SPARK_GRAFT_QUERY_SEG_LEN", "15").toInt
+    val qAnchorMargin = 1.8
+    val segLen = 15
     // the same 4000-page fixture mix as ExtractRunner's pinned-child
     // canary, so the committed canary_anchor.txt is directly comparable
     lazy val canaryPages: Vector[(String, Array[Byte])] = {
@@ -261,7 +261,7 @@ object Bench {
           val (s1, c1) = stealTotal()
           lastSteal = if (c1 > c0) 100.0 * (s1 - s0) / (c1 - c0) else 0.0
           anySec = math.min(anySec, sec)
-          if (lastSteal <= qMaxSteal) cleanSec = sec
+          if (lastSteal <= maxStealPct) cleanSec = sec
           else {
             System.err.println(f"[bench] $name attempt $attempt REJECTED steal=$lastSteal%.2f%% sec=$sec%.2f")
             graft.pipeline.StageCache.evictSince(cacheMark)
@@ -338,7 +338,7 @@ object Bench {
     }
     def queryGateMd: String =
       if (qCanaries.isEmpty) "(query bench skipped: scaling-only run)"
-      else f"""Per-query noise gate: steal <= $qMaxSteal%.1f%% over each query's own
+      else f"""Per-query noise gate: steal <= $maxStealPct%.1f%% over each query's own
 window (up to 3 attempts, first clean published); a parse canary
 brackets every $segLen queries — stamp = worse bracket, judged vs the
 session best ($qCanaryBest%.3f s) x$qCanaryMargin%.2f and the committed pinned-child
@@ -496,10 +496,9 @@ once and flagged NOISY if still dirty. Noisy after requeue: ${noisyQueries.size}
     }
 
     // watchdog deadlines ≈ 3× the committed-baseline child wall time
-    // (startup + warm + canaries + timed); env-overridable for other
-    // table sizes
-    val watchdogN = sys.env.getOrElse("SPARK_GRAFT_WATCHDOG_SEC_N", "180").toLong
-    val watchdog4N = sys.env.getOrElse("SPARK_GRAFT_WATCHDOG_SEC_4N", "150").toLong
+    // (startup + warm + canaries + timed)
+    val watchdogN = 180L
+    val watchdog4N = 150L
 
     /** one executor: a single 4-core JVM over the whole table.
       * Core sets avoid cpu0-3 — kernel IRQ/softirq work concentrates on
@@ -533,12 +532,11 @@ once and flagged NOISY if still dirty. Noisy after requeue: ${noisyQueries.size}
     //  (b) CANARY: the child-side pinned single-thread parse canary must
     //      be within 15% of that CONFIG's session-best canary (co-tenant
     //      bandwidth load is invisible to steal accounting).
-    val trials = sys.env.getOrElse("SPARK_GRAFT_SCALING_TRIALS", "7").toInt
-    val maxStealPct = sys.env.getOrElse("SPARK_GRAFT_MAX_STEAL_PCT", "2.0").toDouble
-    val canaryMargin = sys.env.getOrElse("SPARK_GRAFT_CANARY_MARGIN", "1.15").toDouble
+    val trials = 7
+    val canaryMargin = 1.15
     // the 4-thread canary is structurally noisier (thread scheduling +
     // intended bus contention) → a looser margin than the 1-thread one
-    val quadMargin = sys.env.getOrElse("SPARK_GRAFT_QUAD_CANARY_MARGIN", "1.25").toDouble
+    val quadMargin = 1.25
     def measured(run: () => Either[String, (Long, Long, Double, Double, Double)], activeCores: Int)
         : (Either[String, (Long, Long, Double, Double, Double)], Double) = {
       val (s0, t0) = stealTotal()

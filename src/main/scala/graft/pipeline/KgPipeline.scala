@@ -148,7 +148,7 @@ object KgPipeline {
       val (links, (canonicalMap, edges, nodes, adjacency)) = both(pool)(
         // ---- stage: entity linking (broadcast join, no big-side shuffle)
         stage("links")(linkMentions(pages.toDF(), aliasDict))) {
-        // ---- stage: canonicalization (MinHash-LSH blocking + CC) --------
+        // ---- stage: canonicalization (exact prefix-filter blocking + CC) --
         val canonicalMap = stage("canonical_map")(canonicalize(aliasDict))
         // ---- stage: materialize graph tables ----------------------------
         val edges = stage("edges")(materializeEdges(triples, canonicalMap))

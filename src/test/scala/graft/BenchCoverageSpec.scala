@@ -6,7 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * ZERO timing coverage — a perf regression there was invisible. This
   * pin makes the gap structural: every SparkEntry query must be in the
   * bench list (and vice versa), with the deliberately fenced
-  * formulations enumerated here by name, each with its rationale.
+  * formulations enumerated here by name, each with its rationale. The
+  * registry maps are keyed by name, so a name declared twice would
+  * silently drop a query; SparkEntry refuses that at initialization and
+  * the last test pins it.
   */
 class BenchCoverageSpec extends AnyFunSuite {
 
@@ -32,8 +35,9 @@ class BenchCoverageSpec extends AnyFunSuite {
     }
   }
 
-  test("every oracled query is registered, and names line up") {
-    val dangling = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(dangling.isEmpty, s"oracle SQL without a query: ${dangling.toSeq.sorted}")
+  test("every declared query name is unique") {
+    val names = SparkEntry.declared.map(_.name)
+    assert(names.size == names.distinct.size,
+      s"declared twice: ${names.diff(names.distinct).distinct.sorted}")
   }
 }
